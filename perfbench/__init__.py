@@ -1,0 +1,1 @@
+"""Crawl-engine benchmark: end-to-end and per-layer metrics (see README.md)."""
