@@ -96,6 +96,16 @@ def normalized_title_key(title: Column) -> Column:
     ``"".join(title.lower().split())``: lowercase, remove ALL whitespace runs.
     Python ``str.split()`` whitespace = ASCII ``\\s`` + ``\\x1c-\\x1f`` +
     ``\\x85`` + Unicode Z* — the Java class below covers exactly that set.
+
+    Seam: the two sides lowercase from different Unicode versions.  Spark
+    4's ``lower`` uses ICU case mappings (``spark.sql.icu.caseMappings.
+    enabled``; ICU4J 77 = Unicode 16), CPython's ``str.lower`` its own
+    ``unicodedata`` (3.11 = Unicode 14).  Capitals assigned in between —
+    U+1C89, U+A7CB/CC/DA/DC and Garay U+10D50-10D65 — lowercase on the JVM
+    only, and U+03A3 (Σ) takes its context-dependent final form from each
+    side's own cased/case-ignorable tables.  Parity holds on every string
+    over code points whose lowercase both sides agree on, apart from Σ;
+    tests/test_cleanups.py pins that seam and re-derives it from the JVM.
     """
     return F.regexp_replace(
         F.lower(title), r"[\s\p{Z}\x{0085}\x{001C}-\x{001F}]+", ""

@@ -520,7 +520,16 @@ def substring_dedup(
     token run — tokens contain no whitespace, so the single-space join
     is injective — computed per position inside whole-stage codegen; the
     posexplode emits |corpus tokens| narrow (hash, doc_id, pos) rows,
-    never the window strings themselves.  Duplicate detection is ONE
+    never the window strings themselves.  The key is ONE 64-bit hash, so
+    two distinct windows can collide: over n distinct windows the
+    expected number of colliding pairs is the birthday bound ~n²/2⁶⁵:
+    ~0.03 at n = 10⁹, ~2.7 at n = 10¹⁰ and ~2.7·10⁶ at n = 10¹³ (the
+    window count of a 100 TB corpus).  A collision makes two unrelated
+    windows look like one duplicated window, and the non-canonical one's
+    ``width`` tokens are deleted — silently, no exact recheck follows.
+    At 10¹³ windows that is ~10⁸ tokens wrongly removed (~10⁻⁵ of the
+    corpus at width 32); a caller who needs zero must widen the key to
+    two seeded hashes.  Duplicate detection is ONE
     partial-aggregating groupBy on the hash: ``count`` and
     ``min(struct(doc_id, pos))`` both map-side combine, so a boilerplate
     window shared by millions of documents arrives at its reducer

@@ -90,7 +90,7 @@ def build_filter_blobs(
     partition-local numpy.  By default per-shard m sizes from the shard's
     own count; pass ``n_expected_per_shard`` to pin (m, k) so blobs built
     from different inputs (e.g. per-wave deltas) are OR-mergeable via
-    :func:`merge_filter_blobs`.  Exceeding the expected count only degrades
+    :func:`update_filter_blobs`.  Exceeding the expected count only degrades
     fpp — the exact anti-join backstop keeps dedup exact regardless.
     """
     keyed = seen.select(
@@ -120,42 +120,42 @@ def build_filter_blobs(
     return keyed.groupBy("shard").applyInPandas(_build, schema=BLOB_SCHEMA)
 
 
-def merge_filter_blobs(a: DataFrame, b: DataFrame) -> DataFrame:
-    """OR-merge two blob tables built with the same pinned (m, k).
+def update_filter_blobs(
+    blobs: DataFrame, delta: DataFrame, n_shards: int, n_expected_per_shard: int
+) -> DataFrame:
+    """OR a delta's url_hash keys into blobs built with pinned (m, k).
 
-    The incremental path for a long crawl: blobs(wave k) =
-    merge(blobs(wave k-1), build(delta_k, pinned size)) — O(filter bytes)
-    per wave instead of an O(|seen|) rebuild.  One shuffle of ``n_shards``
-    blob rows.  Shards present in only one input pass through unchanged;
-    mismatched (m, k) (e.g. a legacy auto-sized blob) raise, since ORing
+    The incremental path for a long crawl: O(filter bytes) per wave instead
+    of an O(|seen|) rebuild, as ONE cogroup per shard of standing blob and
+    delta keys.  A shard missing from the blobs starts empty; a blob with
+    another (m, k) (e.g. a legacy auto-sized one) raises, since ORing
     differently-sized bitsets would corrupt membership."""
-    u = a.unionByName(b)
+    m, k = bloom_params(n_expected_per_shard)
+    shard = F.pmod("url_hash", F.lit(n_shards)).cast("int").alias("shard")
 
-    def _or(pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf.iloc[0]
-        if len(pdf) == 1:
-            return pdf[[c for c in pdf.columns]]
-        if pdf["m"].nunique() != 1 or pdf["k"].nunique() != 1:
+    def _or(key, blob_pdf: pd.DataFrame, keys_pdf: pd.DataFrame):
+        if (blob_pdf["m"] != m).any() or (blob_pdf["k"] != k).any():
             raise ValueError(
-                f"shard {int(first['shard'])}: cannot OR-merge blobs with "
-                f"different (m, k) — rebuild with a pinned "
-                f"n_expected_per_shard"
+                f"shard {key[0]}: cannot OR-merge blobs with different (m, k)"
+                f" — rebuild with a pinned n_expected_per_shard"
             )
-        bits = np.frombuffer(first["bits"], dtype=np.uint8).copy()
-        for blob in pdf["bits"].iloc[1:]:
+        h = keys_pdf["url_hash"].to_numpy(dtype=np.int64).astype(np.uint64)
+        bits = np.frombuffer(build_bloom(h, m, k), dtype=np.uint8).copy()
+        for blob in blob_pdf["bits"]:
             bits |= np.frombuffer(blob, dtype=np.uint8)
         return pd.DataFrame(
             [{
-                "shard": int(first["shard"]),
-                "kind": "bloom",
-                "bits": bits.tobytes(),
-                "n_items": int(pdf["n_items"].sum()),
-                "m": int(first["m"]),
-                "k": int(first["k"]),
+                "shard": int(key[0]), "kind": "bloom", "bits": bits.tobytes(),
+                "n_items": int(blob_pdf["n_items"].sum()) + len(h),
+                "m": m, "k": k,
             }]
         )
 
-    return u.groupBy("shard").applyInPandas(_or, schema=BLOB_SCHEMA)
+    return (
+        blobs.groupBy("shard")
+        .cogroup(delta.select("url_hash").groupBy(shard))
+        .applyInPandas(_or, schema=BLOB_SCHEMA)
+    )
 
 
 # "auto" strategy cutover: collect + Spark-broadcast the whole filter up to

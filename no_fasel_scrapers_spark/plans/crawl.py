@@ -30,7 +30,8 @@ Scale notes (100 TB / 10^10 URLs) — the big tables are never shuffled:
   discoveries vs a semi-reduced hit set — see the loop-bottom comment),
   so no stage anywhere shuffles the seen set;
 - bloom blobs are incremental: pinned (m, k) sizing from expected_urls,
-  per-wave delta build + per-shard OR merge (O(filter bytes) per wave),
+  each wave's keys ORed into the standing blob of their shard in one
+  cogroup stage (O(filter bytes) per wave),
   checkpointed and restored on resume; only bloom-positive rows reach the
   exact backstop;
 - a global audit rank is OFF by default (single-partition window); the
@@ -54,9 +55,14 @@ deterministic and testable.
 
 from __future__ import annotations
 
+import functools
+import logging
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import ParamSpec, TypeVar
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -77,9 +83,12 @@ from ..operators.seen_filter import (
     BROADCAST_MAX_BYTES,
     build_filter_blobs,
     dedup_against_seen,
-    merge_filter_blobs,
+    update_filter_blobs,
 )
 from ..sources.catalog import Catalog
+
+P = ParamSpec("P")
+R = TypeVar("R")
 
 PASSTHROUGH = ["site", "category", "depth", "priority", "url_template"]
 CRAWL_EXTRACT_SCHEMA = (
@@ -165,6 +174,41 @@ def _empty_seen(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], "url_hash long, url string, wave int, rank int")
 
 
+# The frames a wave caches (`wave`, `scheduled`, the pipelined frontier)
+# come out of window shuffles cut into spark.sql.shuffle.partitions pieces.
+# With this conf at Spark's default (false) a cached plan keeps that layout
+# and AQE never coalesces it, so every later stage over a few-hundred-row
+# wave ran 32 tasks — each Python task costs ~0.25 CPU-s of worker
+# overhead before its UDF body runs (measured on a 4-core host).  The conf
+# is read when a frame is persisted.
+_CACHED_PLAN_REPARTITION = (
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+)
+
+
+def _coalescing_cached_plans(crawl: Callable[P, R]) -> Callable[P, R]:
+    """Runs ``crawl(spark, ...)`` with the conf above set to true, so AQE
+    coalesces every frame the crawl caches — for the crawl's own duration
+    only: the caller's value comes back afterwards, also when the crawl
+    raises, so other queries on the session keep their cached-plan
+    layout."""
+
+    @functools.wraps(crawl)
+    def wrapper(spark: SparkSession, *args, **kw):
+        prev = spark.conf.get(_CACHED_PLAN_REPARTITION, None)
+        spark.conf.set(_CACHED_PLAN_REPARTITION, "true")
+        try:
+            return crawl(spark, *args, **kw)
+        finally:
+            if prev is None:
+                spark.conf.unset(_CACHED_PLAN_REPARTITION)
+            else:
+                spark.conf.set(_CACHED_PLAN_REPARTITION, prev)
+
+    return wrapper
+
+
+@_coalescing_cached_plans
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -292,11 +336,11 @@ def run_crawl(
         exp_m, exp_k = _bloom_params(n_per_shard)
         got = blobs.select("m", "k").distinct().collect()
         if any((r["m"], r["k"]) != (exp_m, exp_k) for r in got):
-            print(
-                f"crawl: restored filter blobs have (m, k) = "
-                f"{[(r['m'], r['k']) for r in got]} but expected_urls="
-                f"{expected_urls} pins {(exp_m, exp_k)}; discarding and "
-                "rebuilding from the seen set"
+            logging.getLogger(__name__).warning(
+                "restored filter blobs have (m, k) = %s but expected_urls="
+                "%d pins %s; discarding and rebuilding from the seen set",
+                [(r["m"], r["k"]) for r in got], expected_urls,
+                (exp_m, exp_k),
             )
             blobs = None
 
@@ -576,8 +620,6 @@ def run_crawl(
         # below — the two read independent inputs (persisted scheduled vs
         # the same), and overlapping independent jobs hides per-job
         # scheduling latency on a cluster the same way it does here.
-        import threading
-
         host_metrics: list = []
         _host_err: list = []
 
@@ -593,7 +635,9 @@ def run_crawl(
             except BaseException as ex:  # re-raised on join
                 _host_err.append(ex)
 
-        host_thread = threading.Thread(target=_collect_hosts, daemon=True)
+        # InheritableThread (here and below): the caller's job group and
+        # description also cover the crawl's background jobs
+        host_thread = InheritableThread(target=_collect_hosts, daemon=True)
         host_thread.start()
         _mark("wave_counts")
         links_df = wave_ex.select(*_links_cols).filter(
@@ -622,9 +666,9 @@ def run_crawl(
         # next wave's dedup gate) sits after the join() at wave end.
         # right-size the delta's file count from the observed wave size
         # (4M rows ≈ a few hundred MB of url+hash per file): the delta
-        # inherits `scheduled`'s 32-partition shuffle layout, which at
-        # small waves writes 32 near-empty files per wave and makes the
-        # log's read fan-out O(32·waves)
+        # inherits `scheduled`'s shuffle layout (up to shuffle.partitions
+        # pieces), which at small waves would write many near-empty files
+        # per wave and make the log's read fan-out O(partitions·waves)
         _seen_parts = max(1, min(n_shards, n_fresh // 4_000_000 + 1))
         seen_out = seen_delta.coalesce(_seen_parts)
         _seen_err: list = []
@@ -636,22 +680,19 @@ def run_crawl(
                     meta={"wave": wave_no, "kind": "delta"},
                 )
                 if blobs is not None:
-                    # OR the wave's delta into the standing blobs (pinned
-                    # size) and checkpoint; read-back keeps the blob
-                    # lineage flat across waves
-                    delta_blobs = build_filter_blobs(
-                        seen_delta.select("url_hash"),
-                        n_shards,
-                        n_expected_per_shard=n_per_shard,
-                    )
+                    # OR the wave's delta keys into the standing blobs
+                    # (pinned size, one cogroup stage) and checkpoint;
+                    # read-back keeps the blob lineage flat across waves
                     catalog.write(
-                        merge_filter_blobs(blobs, delta_blobs), "blobs",
-                        meta={"wave": wave_no},
+                        update_filter_blobs(
+                            blobs, seen_delta, n_shards, n_per_shard
+                        ),
+                        "blobs", meta={"wave": wave_no},
                     )
             except BaseException as ex:
                 _seen_err.append(ex)
 
-        seen_thread = threading.Thread(target=_write_seen, daemon=True)
+        seen_thread = InheritableThread(target=_write_seen, daemon=True)
         seen_thread.start()
         _mark("seen_checkpoint")
 
@@ -816,7 +857,7 @@ def run_crawl(
             except BaseException as ex:
                 _lin_err.append(ex)
 
-        lin_thread = threading.Thread(target=_write_lineage, daemon=True)
+        lin_thread = InheritableThread(target=_write_lineage, daemon=True)
         lin_thread.start()
         if overlap_frontier:
             # ---- pipelined frontier write --------------------------------
@@ -846,7 +887,7 @@ def run_crawl(
                 except BaseException as ex:
                     _f_err.append(ex)
 
-            f_thread = threading.Thread(target=_write_frontier, daemon=True)
+            f_thread = InheritableThread(target=_write_frontier, daemon=True)
             f_thread.start()
 
             # frontier-size UPPER bound for the next wave's broadcast-

@@ -43,6 +43,12 @@ def _run(spark, fn, values):
 ASCII_TITLE = st.text(
     alphabet=st.characters(min_codepoint=0x20, max_codepoint=0x7E), max_size=24
 )
+# Every property over MIXED compares code-point-level rules that no
+# Unicode-version table decides (ASCII filtering, ASCII/Z*-whitespace
+# stripping, splitting on ASCII separators, UTF-8 percent-encoding): a
+# per-code-point audit of all 1,112,063 scalar values, alone and in three
+# contexts, found no JVM/CPython disagreement for them.  Case mapping is
+# the exception; TestNormalizedTitleKey draws from its own alphabet.
 MIXED = st.text(max_size=24).filter(lambda s: "\x00" not in s)
 
 
@@ -120,12 +126,61 @@ class TestCleanIframeSource:
         assert got == [o_clean_iframe(v) for v in vals]
 
 
+def o_title_key(t):
+    return "".join(t.lower().split())
+
+
+# The case-mapping seam documented on normalized_title_key: the code points
+# whose lowercase the JVM (ICU, Unicode 16) and CPython (Unicode 14) map
+# differently — capitals assigned after Unicode 14.  Hard-coded, so the
+# property's alphabet does not depend on the function under test;
+# test_case_mapping_seam_is_the_audited_list re-derives it from F.lower.
+CASE_MAPPING_SEAM = frozenset(
+    chr(c)
+    for c in [0x1C89, 0xA7CB, 0xA7CC, 0xA7DA, 0xA7DC, *range(0x10D50, 0x10D66)]
+)
+TITLE_KEY_TEXT = st.text(
+    alphabet=st.characters(
+        codec="utf-8",  # no lone surrogates, like MIXED
+        # U+03A3 lowercases to final or medial sigma by context, which each
+        # side reads from its own Unicode tables
+        exclude_characters=CASE_MAPPING_SEAM | {"\x00", "\u03a3"},
+    ),
+    max_size=24,
+)
+
+
 class TestNormalizedTitleKey:
+    def test_case_mapping_seam_is_the_audited_list(self, spark):
+        # one Spark query lowercases every Unicode scalar value on the JVM;
+        # only the characters it changes come back, and together with the
+        # ones CPython changes they are every candidate for a disagreement
+        cps = spark.range(1, 0x110000).filter(
+            ~F.col("id").between(0xD800, 0xDFFF)
+        )
+        ch = F.decode(F.unhex(F.lpad(F.hex("id"), 8, "0")), "UTF-32")
+        jvm = {
+            r["s"]: r["l"]
+            for r in cps.select(ch.alias("s"))
+            .select("s", F.lower("s").alias("l"))
+            .filter(F.col("l") != F.col("s"))
+            .collect()
+        }
+        py = {
+            chr(c) for c in range(1, 0x110000)
+            if not 0xD800 <= c <= 0xDFFF and chr(c).lower() != chr(c)
+        }
+        seam = {c for c in jvm.keys() | py if jvm.get(c, c) != c.lower()}
+        assert seam == CASE_MAPPING_SEAM
+
     @settings(max_examples=30, deadline=None)
-    @given(st.lists(MIXED, min_size=1, max_size=20))
+    @given(st.lists(TITLE_KEY_TEXT, min_size=1, max_size=20))
     def test_property(self, spark, vals):
+        # contract: JVM and CPython agree on every string over code points
+        # whose lowercase they agree on (outside U+03A3, both lowercase per
+        # character, and whitespace is per character)
         got = _run(spark, cleanups.normalized_title_key, vals)
-        assert got == ["".join(v.lower().split()) for v in vals]
+        assert got == [o_title_key(v) for v in vals]
 
 
 class TestPyCapitalize:

@@ -9,9 +9,12 @@ this suite pins the WAVE STRUCTURE at generator scale: seed root listing
 
 from __future__ import annotations
 
+import re
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from no_fasel_scrapers_spark.plans.crawl import run_crawl
 from no_fasel_scrapers_spark.sources.catalog import Catalog
@@ -80,15 +83,83 @@ def test_site_crawl_extracted_text_matches_generator(spark):
         assert got[url] == text  # byte-identical extracted text per url
 
 
-def test_bucketed_corpus_fetch_join_has_no_html_exchange(spark, tmp_path):
+def _query_exchange_ids(fmt: str) -> list[str]:
+    """Ids of the shuffle Exchanges a query runs itself: the tree part of
+    a formatted explain, minus the subtrees under an InMemoryRelation (a
+    cached frame's own plan, materialized once by its first action)."""
+    ids, cached_below = [], None
+    for line in fmt.split("\n\n")[0].splitlines()[1:]:
+        prefix, body = re.match(r"^([\s:+\-|]*)(.*)$", line).groups()
+        if cached_below is not None and len(prefix) > cached_below:
+            continue
+        cached_below = None
+        if body.startswith("InMemoryRelation"):
+            cached_below = len(prefix)
+        m = re.match(r"Exchange \((\d+)\)", body)
+        if m:
+            ids.append(m.group(1))
+    return ids
+
+
+def _assert_fetch_join_streams_html(spark, cache: bool) -> None:
     """The 100 TB ingest pattern: a url_hash-bucketed corpus makes the
     fetch join co-located — the HTML side reads buckets with NO Exchange;
-    only the slim wave side shuffles (bench.py --crawl-scale-bucketed)."""
-    from pyspark.sql import functions as F
+    only the slim wave side shuffles (bench.py --crawl-scale-bucketed).
 
+    ``cache`` mirrors run_crawl itself: pages_k cached, and the slim side
+    a persisted window output, like ``scheduled``."""
     from no_fasel_scrapers_spark.plans.crawl import _prep_pages
-    from no_fasel_scrapers_spark.sources.pagegen import gen_site_pages
 
+    pages_k = _prep_pages(spark.table("t_fetch_bucketed"))
+    sched = spark.range(100).select(
+        F.col("id").alias("url_hash"), F.lit("u").alias("url"),
+        (F.col("id") % 7).alias("host"),
+    )
+    if cache:
+        pages_k.cache()
+        sched = sched.withColumn(
+            "fetch_seq",
+            F.row_number().over(Window.partitionBy("host").orderBy("url_hash")),
+        ).persist()
+    pages_wave = pages_k.join(
+        F.broadcast(sched.select("url_hash")), "url_hash", "left_semi"
+    )
+    # hint on the SLIM side (BuildLeft) — mirrors plans/crawl.py: the
+    # hash relation holds url rows, the bucketed HTML side streams
+    j = sched.hint("SHUFFLE_HASH").join(pages_wave, "url_hash", "left")
+
+    # formatted explain: each node block lists its full Input/Output
+    # schema.  ShuffleExchangeExec's one-line toString prints only the
+    # partitioning expression — never payload columns — so a per-line
+    # 'html not in exchange line' check is vacuous (round-5 review
+    # find); the formatted block is the real property.
+    qe = j._jdf.queryExecution()
+    jvm = spark.sparkContext._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    fmt = qe.explainString(mode)
+    assert "Bucketed: true" in fmt
+    blocks = fmt.split("\n\n")
+    ids = _query_exchange_ids(fmt)
+    assert len(ids) == 1, ids
+    exchange = next(b for b in blocks if b.startswith(f"({ids[0]}) Exchange"))
+    # the one hash exchange is the SLIM side: its input schema is the
+    # scheduled url_hash row; html never rides it (ADVICE r4, pinned
+    # on the node's actual Input list)
+    assert "html" not in exchange
+    assert "url_hash" in exchange
+    scan = next(b for b in blocks if re.match(r"\(\d+\) Scan parquet", b))
+    assert "html" in scan  # html flows ONLY through the bucketed scan
+    # and the SHJ builds the preserved (slim) side, streaming the HTML
+    assert "ShuffledHashJoin LeftOuter BuildLeft" in fmt
+    if cache:
+        sched.unpersist()
+        pages_k.unpersist()
+
+
+@pytest.fixture
+def bucketed_corpus(spark, tmp_path):
     # external table path → the (static) warehouse dir is never used
     (
         gen_site_pages(spark, 300, partitions=4)
@@ -98,45 +169,24 @@ def test_bucketed_corpus_fetch_join_has_no_html_exchange(spark, tmp_path):
         .option("path", str(tmp_path / "tbl"))
         .saveAsTable("t_fetch_bucketed")
     )
-    try:
-        pages_k = _prep_pages(spark.table("t_fetch_bucketed"))
-        sched = spark.range(100).select(
-            F.col("id").alias("url_hash"), F.lit("u").alias("url")
-        )
-        pages_wave = pages_k.join(
-            F.broadcast(sched.select("url_hash")), "url_hash", "left_semi"
-        )
-        # hint on the SLIM side (BuildLeft) — mirrors plans/crawl.py: the
-        # hash relation holds url rows, the bucketed HTML side streams
-        j = sched.hint("SHUFFLE_HASH").join(pages_wave, "url_hash", "left")
-        import re
+    yield
+    spark.sql("DROP TABLE IF EXISTS t_fetch_bucketed")
 
-        # formatted explain: each node block lists its full Input/Output
-        # schema.  ShuffleExchangeExec's one-line toString prints only the
-        # partitioning expression — never payload columns — so a per-line
-        # 'html not in exchange line' check is vacuous (round-5 review
-        # find); the formatted block is the real property.
-        qe = j._jdf.queryExecution()
-        jvm = spark.sparkContext._jvm
-        mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-        fmt = qe.explainString(mode)
-        assert "Bucketed: true" in fmt
-        blocks = fmt.split("\n\n")
-        exchanges = [b for b in blocks if re.match(r"\(\d+\) Exchange", b)]
-        assert len(exchanges) == 1
-        # the one hash exchange is the SLIM side: its input schema is the
-        # scheduled url_hash row; html never rides it (ADVICE r4, pinned
-        # on the node's actual Input list)
-        assert "html" not in exchanges[0]
-        assert "url_hash" in exchanges[0]
-        scan = next(b for b in blocks if re.match(r"\(\d+\) Scan parquet", b))
-        assert "html" in scan  # html flows ONLY through the bucketed scan
-        # and the SHJ builds the preserved (slim) side, streaming the HTML
-        assert "ShuffledHashJoin LeftOuter BuildLeft" in fmt
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_fetch_bucketed")
+
+def test_bucketed_corpus_fetch_join_has_no_html_exchange(
+    spark, bucketed_corpus
+):
+    _assert_fetch_join_streams_html(spark, cache=False)
+
+
+def test_bucketed_corpus_fetch_join_has_no_html_exchange_when_cached(
+    spark, bucketed_corpus
+):
+    from no_fasel_scrapers_spark.plans.crawl import _coalescing_cached_plans
+
+    # both frames persisted, and the join planned, under run_crawl's own
+    # conf wrapper: AQE may coalesce cached plans, as inside the crawl
+    _coalescing_cached_plans(_assert_fetch_join_streams_html)(spark, cache=True)
 
 
 def test_max_pagination_clamp_is_configurable(spark):

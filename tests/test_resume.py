@@ -1,8 +1,11 @@
 """Checkpoint/resume: kill after wave k, restart, identical final state
 (north_rule resumability)."""
 
+import logging
+
 from pyspark.sql import functions as F
 
+from no_fasel_scrapers_spark.plans import crawl as crawl_mod
 from no_fasel_scrapers_spark.plans.crawl import resume_crawl, run_crawl
 from no_fasel_scrapers_spark.sources.catalog import Catalog
 
@@ -37,10 +40,10 @@ def test_resume_equals_uninterrupted(spark, fixture, tmp_path):
 
 
 def test_resume_with_changed_expected_urls_rebuilds_blobs(
-    spark, fixture, tmp_path, capsys
+    spark, fixture, tmp_path, caplog
 ):
     """A resume launched with a different --expected-urls must not die
-    mid-wave inside merge_filter_blobs with an (m, k) mismatch (ADVICE r1):
+    mid-wave inside update_filter_blobs with an (m, k) mismatch (ADVICE r1):
     the driver detects the pinned-size conflict up front, discards the
     restored blobs, and rebuilds from the seen set — same final state."""
     pages = fixture.pages_df(spark)
@@ -54,12 +57,12 @@ def test_resume_with_changed_expected_urls_rebuilds_blobs(
         bloom_min_seen=0, expected_urls=64_000,
     )
     assert cat.exists("blobs")
-    resumed = resume_crawl(
-        spark, pages, seeds, robots, cat,
-        bloom_min_seen=0, expected_urls=640_000,  # different pinned size
-    )
-    out = capsys.readouterr().out
-    assert "rebuilding from the seen set" in out
+    with caplog.at_level(logging.WARNING, logger=crawl_mod.__name__):
+        resumed = resume_crawl(
+            spark, pages, seeds, robots, cat,
+            bloom_min_seen=0, expected_urls=640_000,  # different pinned size
+        )
+    assert "rebuilding from the seen set" in caplog.text
 
     ref_cat = Catalog(str(tmp_path / "ref"))
     ref = run_crawl(

@@ -13,6 +13,7 @@ from no_fasel_scrapers_spark.operators.seen_filter import (
     build_filter_blobs,
     dedup_against_seen,
     probe_bloom,
+    update_filter_blobs,
 )
 
 HASHES = st.lists(
@@ -103,24 +104,24 @@ class TestDistributedDedup:
 
 
 class TestIncrementalBlobs:
-    """merge_filter_blobs: OR of pinned-size delta blobs == one-shot build."""
+    """update_filter_blobs: ORing delta keys into pinned-size standing
+    blobs == one-shot build over the union."""
 
     def test_incremental_equals_rebuild(self, spark):
-        from no_fasel_scrapers_spark.operators.seen_filter import (
-            merge_filter_blobs,
-        )
-
         n_shards = 8
         nps = 1000
+        # the standing blobs miss shards 0 and 1 entirely: the update must
+        # start those from an empty blob, and pass shards the delta lacks
+        # through untouched
         a = spark.range(0, 4000).select(
             F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-        )
+        ).filter(F.pmod("url_hash", F.lit(n_shards)) >= 2)
         b = spark.range(4000, 7000).select(
             F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-        )
-        merged = merge_filter_blobs(
+        ).filter(F.pmod("url_hash", F.lit(n_shards)) != 5)
+        merged = update_filter_blobs(
             build_filter_blobs(a, n_shards, n_expected_per_shard=nps),
-            build_filter_blobs(b, n_shards, n_expected_per_shard=nps),
+            b, n_shards, nps,
         )
         full = build_filter_blobs(
             a.unionByName(b), n_shards, n_expected_per_shard=nps
@@ -134,17 +135,12 @@ class TestIncrementalBlobs:
             assert (m[s]["m"], m[s]["k"]) == (f[s]["m"], f[s]["k"])
 
     def test_merge_rejects_mismatched_sizing(self, spark):
-        from no_fasel_scrapers_spark.operators.seen_filter import (
-            merge_filter_blobs,
-        )
-
         a = spark.range(0, 500).select(
             F.xxhash64(F.col("id").cast("string")).alias("url_hash")
         )
         x = build_filter_blobs(a, 4, n_expected_per_shard=100)
-        y = build_filter_blobs(a, 4, n_expected_per_shard=9999)
-        with pytest.raises(Exception, match="cannot OR-merge|PythonException"):
-            merge_filter_blobs(x, y).collect()
+        with pytest.raises(Exception, match="cannot OR-merge"):
+            update_filter_blobs(x, a, 4, 9999).collect()
 
     def test_dedup_streaming_anti_matches_naive(self, spark):
         cand = spark.range(0, 2000).select(

@@ -596,8 +596,10 @@ class TestSubstringDedup:
         import pyarrow.parquet as pq
 
         sf = str(tmp_path)
+        # doc 4's NULL text: both sides must pass it through (NULL clean
+        # text, nothing removed)
         rows = [(1, _SD_A, "en"), (2, _SD_B, "en"), (3, _SD_C, "en"),
-                (5, _SD_E, "en")]
+                (4, None, "en"), (5, _SD_E, "en")]
         pq.write_table(
             pa.Table.from_pandas(
                 pd.DataFrame(rows, columns=["doc_id", "text", "lang"])
@@ -608,7 +610,8 @@ class TestSubstringDedup:
         got = sorted(
             (
                 r["doc_id"],
-                hashlib.md5(r["clean_text"].encode()).hexdigest(),
+                None if r["clean_text"] is None
+                else hashlib.md5(r["clean_text"].encode()).hexdigest(),
                 r["n_removed"],
             )
             for r in substring_dedup(
