@@ -903,8 +903,8 @@ _REP_PROBE_SQL = "SELECT * FROM (VALUES " + ", ".join(
 
 def q_repetition_stats(spark, sf_dir):
     """Gopher-family repetition quality signals (training-data op): dup
-    word/2-gram fractions and most-frequent word/2-gram coverage — all
-    narrow array built-ins + a sorted-run-length fold, zero shuffle."""
+    word/2-gram fractions and most-frequent word/2-gram coverage — one
+    Arrow mapInPandas pass, zero shuffle."""
     from no_fasel_scrapers_spark.operators.quality import (
         with_repetition_stats,
     )
@@ -2976,7 +2976,7 @@ def oracle_sql() -> dict[str, str]:
                 -- a token is a maximal non-whitespace run: split on the
                 -- EXPLICIT Java-\\s class (RE2's \\s excludes \\x0b) and
                 -- drop empties (they can only appear at the edges) —
-                -- matches BOTH engine impls incl. leading/trailing tabs,
+                -- matches the engine's tokenizer incl. leading/trailing tabs,
                 -- \\x0b, whitespace-only, and NULL text
                 SELECT doc_id, generate_subscripts(ws, 1) AS ord,
                        unnest(ws) AS w

@@ -814,9 +814,6 @@ def main() -> None:
             "decontaminate": lambda: decontaminate(docs, test),
             "text_stats": lambda: with_text_stats(docs),
             "repetition_stats": lambda: with_repetition_stats(docs),
-            "repetition_stats_columnar": lambda: with_repetition_stats(
-                docs, impl="column"
-            ),
             "line_dedup": lambda: line_dedup(mldocs),
             "vocab_top_terms": lambda: vocab_top_terms(docs, k=100),
         }

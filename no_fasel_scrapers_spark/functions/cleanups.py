@@ -122,20 +122,6 @@ def url_category(link: Column) -> Column:
     )
 
 
-def path_segment(link: Column, idx: int) -> Column:
-    """``link.split("/")[idx]`` with Python indexing semantics.
-
-    The reference derives ids from URL path positions — ``[4]`` in
-    ``AkwamMoviesScaper.py:17`` but ``[-2]`` in ``AkwamSeriesScraper.py:61`` /
-    ``TrendingScraper.py:30`` (same site, different convention; both kept).
-    Out-of-range yields NULL (the reference would raise — callers guard).
-    """
-    parts = F.split(link, "/", -1)
-    # element_at is 1-based from the front, negative from the back
-    pos = idx + 1 if idx >= 0 else idx
-    return F.element_at(parts, pos)
-
-
 def scrub_genres(genres: Column) -> Column:
     """Junk-genre filter — reference ``Postprocessing.py:36-49``.
 

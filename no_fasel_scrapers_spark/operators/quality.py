@@ -9,13 +9,11 @@ High Quality Monolingual Datasets from Web Crawl Data", Wenzek et al.
 ``with_repetition_stats``
     Per-document word-level repetition signals (duplicate-word fraction,
     most-frequent word / 2-gram and their coverage fractions).  Entirely
-    narrow — zero shuffle; at 100 TB this is a pure map over the corpus.
-    Two byte-identical implementations (``impl=``): the default Arrow
-    ``mapInPandas`` path and a pure-JVM columnar fold, at measured
-    parity since the codegen tokenizer fix (function docstring).  Gopher defines the
-    n-gram signals over *characters*; here they are word-count fractions
-    (documented divergence — equally monotone in repetitiveness,
-    cheaper, and exactly oracle-able).
+    narrow — zero shuffle, one Arrow ``mapInPandas`` pass; at 100 TB this
+    is a pure map over the corpus.  Gopher defines the n-gram signals
+    over *characters*; here they are word-count fractions (documented
+    divergence — equally monotone in repetitiveness, cheaper, and
+    exactly oracle-able).
 
 ``line_dedup``
     Corpus-level boilerplate-line removal: a line (split on ``\\n``)
@@ -33,140 +31,8 @@ High Quality Monolingual Datasets from Web Crawl Data", Wenzek et al.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from no_fasel_scrapers_spark.operators.textstats import ws_tokens
-
-
-def _top_run(sorted_arr: Column) -> Column:
-    """struct(best, best_val): longest run in a sorted array = count and
-    value of the most frequent element; ties break to the first run in
-    sort order, i.e. the lexicographically smallest value.  O(n log n)
-    for the sort, one linear fold, all JVM-side."""
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(0).alias("run"),
-        F.lit(0).alias("best"),
-        F.lit(None).cast("string").alias("best_val"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(acc["prev"].eqNullSafe(x), acc["run"] + 1).otherwise(
-            F.lit(1)
-        )
-        better = run > acc["best"]
-        return F.struct(
-            x.alias("prev"),
-            run.alias("run"),
-            F.when(better, run).otherwise(acc["best"]).alias("best"),
-            F.when(better, x).otherwise(acc["best_val"]).alias("best_val"),
-        )
-
-    return F.aggregate(sorted_arr, init, step)
-
-
-def word_2grams(words: Column) -> Column:
-    """Adjacent word 2-grams joined by one space ([] when < 2 words).
-    The size guard matters: ``sequence(1, 0)`` would count DOWN."""
-    return F.when(
-        F.size(words) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(words, i), F.element_at(words, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def with_repetition_stats(
-    df: DataFrame, text_col: str = "text", impl: str = "arrow"
-) -> DataFrame:
-    """Append word-repetition quality signals (Gopher §A1.1 family):
-
-    - ``n_words``          whitespace word count
-    - ``dup_word_frac``    1 − distinct words / words   (0 when empty)
-    - ``top_word``         most frequent word (ties → lexicographically
-                           smallest; NULL when empty)
-    - ``top_word_frac``    its count / n_words
-    - ``dup_2gram_frac``   1 − distinct 2-grams / 2-grams (0 when < 2)
-    - ``top_2gram``        most frequent adjacent 2-gram (NULL when < 2)
-    - ``top_2gram_frac``   its count / n_2grams
-
-    Two implementations with identical output (equality pinned by
-    tests/test_quality.py on probes + a corpus sample; the driver's
-    DuckDB oracle checks the default):
-
-    - ``impl="arrow"`` (default): ``mapInPandas`` with a
-      ``collections.Counter`` per document — a zero-shuffle narrow map
-      with Arrow-batched transfer, and the natural home for richer
-      per-doc logic later.
-    - ``impl="column"``: pure Spark built-ins (arrays + sorted-run
-      fold), zero Python — keeps the whole plan JVM-side where a
-      Python worker pool is unavailable or undesirable.
-
-    Measured at 1M docs the two are at PARITY within box noise (8.07 s
-    column vs 8.02 s arrow in the same lane run) — but only after the
-    tokenizer moved to codegen-able ``array_remove``; with a
-    higher-order ``F.filter`` tokenizer the column path ran 33-36 s
-    (interpreted eval), which is the trap to remember (BENCH.md
-    optimization log #17/#19/#20).
-
-    Parity notes (why the two ARE byte-identical): a token is a maximal
-    run of non-``[ \\t\\n\\x0b\\f\\r]`` characters — on the column side
-    ``split('\\s+')`` + drop-empties (split's empty strings can only
-    appear at the edges, so filtering them equals the maximal-run
-    definition, including for leading/trailing tabs and whitespace-only
-    text, where ``trim``-based tokenization would diverge), on the
-    Python side ``re.findall`` of the same class — NOT Python
-    ``str.split()``, whose Unicode whitespace set is wider; NULL text
-    counts as empty in both; tie-breaks take the minimum string, and
-    UTF-8 byte order (Spark's binary sort) equals Unicode code-point
-    order (Python ``min``), so both sides agree on every valid string.
-    """
-    if impl == "arrow":
-        return _repetition_stats_arrow(df, text_col)
-    if impl != "column":
-        raise ValueError(f"impl must be 'arrow' or 'column': {impl!r}")
-    # Stage the expensive trees (token split, 2-gram build, run-length
-    # folds) as their own projection columns so each evaluates ONCE per
-    # row: higher-order functions run interpreted (outside codegen), and
-    # a single flat projection would re-evaluate the whole tree for
-    # every output column that references it (measured 8× slower at
-    # sf0.1).  CollapseProject keeps these stages separate exactly
-    # because the producing expressions are non-cheap and multiply
-    # referenced.
-    stage = (
-        df.withColumn("_rep_w", ws_tokens(F.col(text_col)))
-        .withColumn("_rep_g", word_2grams(F.col("_rep_w")))
-        .withColumn("_rep_tw", _top_run(F.array_sort(F.col("_rep_w"))))
-        .withColumn("_rep_tg", _top_run(F.array_sort(F.col("_rep_g"))))
-    )
-    n_w = F.size("_rep_w")
-    n_g = F.size("_rep_g")
-
-    def frac(num: Column, den: Column) -> Column:
-        return F.when(den == 0, F.lit(0.0)).otherwise(
-            num.cast("double") / den.cast("double")
-        )
-
-    return (
-        stage.withColumn("n_words", n_w)
-        .withColumn(
-            "dup_word_frac",
-            frac(n_w - F.size(F.array_distinct("_rep_w")), n_w),
-        )
-        .withColumn("top_word", F.col("_rep_tw")["best_val"])
-        .withColumn("top_word_frac", frac(F.col("_rep_tw")["best"], n_w))
-        .withColumn(
-            "dup_2gram_frac",
-            frac(n_g - F.size(F.array_distinct("_rep_g")), n_g),
-        )
-        .withColumn("top_2gram", F.col("_rep_tg")["best_val"])
-        .withColumn("top_2gram_frac", frac(F.col("_rep_tg")["best"], n_g))
-        .drop("_rep_w", "_rep_g", "_rep_tw", "_rep_tg")
-    )
 
 
 _REP_FIELDS = (
@@ -175,8 +41,8 @@ _REP_FIELDS = (
     "top_2gram_frac double"
 )
 
-# Java-regex-\s token runs (ASCII whitespace only — see parity notes on
-# with_repetition_stats); compiled once per Python worker
+# Java-regex-\s token runs (ASCII whitespace only — see the tokenization
+# contract on with_repetition_stats); compiled once per Python worker
 _TOKEN_RE_ASCII_WS = "[^ \t\n\x0b\f\r]+"
 
 
@@ -222,9 +88,33 @@ def _rep_signals_pdf(texts) -> dict:
     return cols
 
 
-def _repetition_stats_arrow(df: DataFrame, text_col: str) -> DataFrame:
-    """mapInPandas twin of the columnar fold: all input columns pass
-    through, the 7 signal columns are appended per Arrow batch."""
+def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Append word-repetition quality signals (Gopher §A1.1 family):
+
+    - ``n_words``          whitespace word count
+    - ``dup_word_frac``    1 − distinct words / words   (0 when empty)
+    - ``top_word``         most frequent word (ties → lexicographically
+                           smallest; NULL when empty)
+    - ``top_word_frac``    its count / n_words
+    - ``dup_2gram_frac``   1 − distinct 2-grams / 2-grams (0 when < 2)
+    - ``top_2gram``        most frequent adjacent 2-gram (NULL when < 2)
+    - ``top_2gram_frac``   its count / n_2grams
+
+    One ``mapInPandas`` with a ``collections.Counter`` per document: a
+    zero-shuffle narrow map with Arrow-batched transfer; all input
+    columns pass through and the 7 signal columns are appended per
+    batch.  The DuckDB oracle of the ``repetition_stats`` registry query
+    checks it value for value.
+
+    Tokenization contract (shared with the SQL oracle and
+    ``textstats.ws_tokens``): a token is a maximal run of
+    non-``[ \\t\\n\\x0b\\f\\r]`` characters — ``re.findall`` of that
+    class, NOT Python ``str.split()``, whose Unicode whitespace set is
+    wider (nbsp does not split); edge whitespace yields no empty token;
+    NULL text counts as empty.  Tie-breaks take the minimum string, and
+    Python's code-point order equals UTF-8 byte order (Spark's binary
+    sort) on every valid string.
+    """
     schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", " + _REP_FIELDS

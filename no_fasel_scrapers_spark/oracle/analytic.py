@@ -1167,7 +1167,8 @@ def charset_decode_sql(sf: str | None = None) -> str:
 # or seed bug in the engine's keying diverges here instead of being
 # mirrored.  Tokenization mirrors ws_tokens (Java \s class, drop-empties);
 # canonical occurrence and span-union semantics are pinned in the
-# operator's docstring.
+# operator's docstring.  The mirror holds every window string in a dict
+# (corpus tokens × width bytes), so it only suits small SFs.
 # ---------------------------------------------------------------------------
 
 def substring_dedup_rows(sf: str, width: int = 32):

@@ -148,6 +148,14 @@ def _obs_n(obs: Observation, fallback_df: DataFrame, col: str = "n") -> int:
         return fallback_df.count()
 
 
+def _check_wave_budget(wave_budget: int | None) -> None:
+    """A budget below 1 takes an empty wave and leaves the whole frontier
+    over, so no wave would ever make progress; refuse it before anything
+    touches the catalog."""
+    if wave_budget is not None and wave_budget < 1:
+        raise ValueError(f"wave_budget must be >= 1 or None: {wave_budget}")
+
+
 def _prep_pages(pages: DataFrame) -> DataFrame:
     """Slim fetch-side projection keyed by url_hash.
 
@@ -231,8 +239,8 @@ def run_crawl(
     lineage: list[dict] | None = None,
     cache_pages: bool = True,
     max_pagination: int = 100_000,
-    overlap_frontier: bool = True,
 ) -> CrawlResult:
+    _check_wave_budget(wave_budget)
     pages_k = _prep_pages(pages)
     # The pages side is scanned once per wave.  Caching pays when the
     # source is expensive to recompute (the test fixtures materialize from
@@ -301,9 +309,6 @@ def run_crawl(
 
     robots_b = robots
     wave_no = start_wave
-    # frontier size as known from the last frontier snapshot's manifest
-    # (footer counts, job-free); None = unknown (initial/resumed frontier)
-    frontier_rows: int | None = None
 
     # Bloom blobs are maintained INCREMENTALLY: built once from the full
     # seen set when it first crosses bloom_min_seen (or restored from the
@@ -403,13 +408,12 @@ def run_crawl(
         F.size(F.col("links"))
     )
 
-    # ---- pipelined-frontier state (overlap_frontier=True) ---------------
+    # ---- pipelined-frontier state ---------------------------------------
     # The wave-k frontier writer runs on a thread UNDER wave k+1's fetch
-    # stage; `_f_prev` tracks (thread, error holder, wall holder, pins to
-    # unpersist once it lands).  `frontier_ub` carries a row-count UPPER
-    # BOUND for the frontier the writer is still materializing — what the
-    # broadcast-safety decision (bounded_wave) uses in place of the
-    # manifest count the serial tail would have.
+    # stage; `_f_prev` tracks (thread, error holder, wall holder).
+    # `frontier_ub` carries a row-count UPPER BOUND for the frontier the
+    # writer is still materializing — what the broadcast-safety decision
+    # (bounded_wave) uses, since its manifest count is still in flight.
     _f_prev: dict | None = None
     _prev_nxt: DataFrame | None = None
     frontier_ub: int | None = None
@@ -422,8 +426,6 @@ def run_crawl(
         if _f_prev["err"]:
             raise _f_prev["err"][0]
         t_ms["frontier_write_bg"] = _f_prev["ms"][0] if _f_prev["ms"] else 0
-        for h in _f_prev["pins"]:
-            h.unpersist()
         _f_prev = None
 
     while wave_no < max_waves:
@@ -436,27 +438,17 @@ def run_crawl(
             t_ms[stage] = round((now - _t0) * 1000)
             _t0 = now
 
-        # emptiness comes free from the frontier snapshot's manifest row
-        # count whenever this frontier was published by the previous wave;
-        # the isEmpty() job only runs for an initial/resumed frontier whose
-        # size the manifest doesn't know (wave fixed-cost pass, VERDICT r1
-        # next-steps #9 — dedup_within cannot turn nonempty into empty)
-        if frontier_rows == 0:
-            break
         if frontier_ub == 0:
-            # pipelined tail: the upper bound is exact at zero (leftover,
-            # link and pagination masses all zero), so the frontier the
-            # background writer is publishing is provably empty
+            # the upper bound is exact at zero (no leftover, link and
+            # pagination masses both zero), so the frontier the background
+            # writer is publishing is provably empty
             break
         frontier = dedup_within(frontier)
-        if (
-            frontier_rows is None
-            and frontier_ub is None
-            and frontier.isEmpty()
-        ):
-            # initial/resumed frontier of unknown size only: under the
-            # pipelined tail an isEmpty here would force the in-flight
-            # frontier's broadcasts to build a second time (broadcast
+        if frontier_ub is None and frontier.isEmpty():
+            # frontiers without a bound only — the initial/resumed one and
+            # a budgeted run's (dedup_within cannot turn nonempty into
+            # empty): an isEmpty on an unbudgeted in-flight frontier would
+            # force its broadcasts to build a second time (broadcast
             # exchanges are not shared across jobs); a nonzero-ub-but-
             # empty frontier instead drains through one degenerate empty
             # wave that the tail detects (n_wave == 0) and stops after
@@ -488,19 +480,14 @@ def run_crawl(
             catalog.write(blobs, "blobs", meta={"wave": wave_no})
             blobs = catalog.read(spark, "blobs")
         # a broadcast hint is only safe when the wave is KNOWN bounded:
-        # either by an explicit budget, or because the previous wave's
-        # frontier-snapshot manifest counted this frontier small (exact
-        # footer counts, job-free — ≤5M rows is ≤~40MB of hash keys).
-        # Unbudgeted unknown-size waves leave the strategy to AQE (which
-        # still broadcasts small runtime sizes, and falls back instead of
-        # OOMing).
+        # either by an explicit budget, or because the observation-derived
+        # UPPER bound on this frontier (leftover + raw link mentions +
+        # deduped pagination extents, >= the true size) is small — ≤5M
+        # rows is ≤~40MB of hash keys.  Unbudgeted unknown-size waves
+        # leave the strategy to AQE (which still broadcasts small runtime
+        # sizes, and falls back instead of OOMing).
         bounded_wave = (
             (wave_budget is not None and wave_budget <= 50_000_000)
-            or (frontier_rows is not None and frontier_rows <= 5_000_000)
-            # pipelined tail: the manifest count is still in flight, but
-            # the observation-derived UPPER bound (leftover + raw link
-            # mentions + deduped pagination extents) is >= the true size,
-            # so a small bound is just as safe to broadcast on
             or (frontier_ub is not None and frontier_ub <= 5_000_000)
         )
         if (
@@ -732,57 +719,52 @@ def run_crawl(
         # The prune does NOT wait for the seen/blob checkpoint thread: its
         # seen side is exactly prev-log ∪ this-wave-delta, and both are
         # already in hand as DataFrames (`seen` still binds the previous
-        # read_log; delta keys recompute from the persisted `scheduled`).
+        # read_log; delta keys recompute from the written wave parquet).
         # Re-reading the log here forced a join() that charged the whole
         # checkpoint wall (~1.2-1.5 s/wave at BOTH scaling levels, r5b
         # stage decomposition) to this stage; the thread now runs
         # underneath the entire frontier build + write below, and the log
         # re-read (flat base+deltas scan, bounded lineage) plus the blob
         # read-back happen after that write.
-        if overlap_frontier:
-            # Pipelined tail: wave k's frontier writer is about to be
-            # STARTED on a thread and joined only here, one wave later —
-            # it runs under the whole of wave k+1's fetch stage.  For that
-            # to stay safe and bounded, the frontier plan must be anchored
-            # on THIS wave's durable artifacts, never on a previous wave's
-            # in-memory plan:
-            #  - the last writer is joined now (it had the entire fetch
-            #    stage to finish, so this is a no-op in steady state);
-            #  - delta keys recompute from the written wave parquet
-            #    (extraction passes the canonical url through 1:1, so
-            #    xxhash64(url) == the frontier's url_hash; in the
-            #    astronomically-rare hash-collision case a key can be
-            #    missing here, and the next wave's exact dedup gate — not
-            #    this prune, which is an optimization — drops the row);
-            #  - the unbudgeted leftover is an empty LITERAL (take_wave's
-            #    frontier.limit(0) would chain the previous wave's plan
-            #    into this one, growing the logical tree every wave);
-            #  - the budgeted leftover rebinds onto the read-back of the
-            #    files the last writer just published (value-identical:
-            #    same rows, same dedup, same anti-join keys).
-            _join_prev_frontier()
-            delta_keys = wave_ex.select(
-                F.xxhash64("url").alias("url_hash")
-            )
-            if not leftover_vs_full:
-                if wave_budget is None:
-                    leftover = spark.createDataFrame([], frontier.schema)
-                elif catalog.exists("frontier"):
-                    # the taken-wave keys are RECOMPUTED from the read-back
-                    # (deterministic: after dedup the (priority, depth,
-                    # url_hash) order is strict, so the top-K set is the
-                    # one take_wave took) — referencing `wave` here would
-                    # chain the previous wave's plan into this one and the
-                    # logical tree would grow ~100 KB per wave (measured)
-                    _d = dedup_within(catalog.read(spark, "frontier"))
-                    _taken = (
-                        _d.orderBy(*[F.col(c).asc() for c in ORDER_COLS])
-                        .limit(wave_budget)
-                        .select("url_hash")
-                    )
-                    leftover = _d.join(_taken, "url_hash", "left_anti")
-        else:
-            delta_keys = seen_delta.select("url_hash")
+        #
+        # Pipelined tail: wave k's frontier writer is about to be STARTED
+        # on a thread and joined only here, one wave later — it runs under
+        # the whole of wave k+1's fetch stage.  For that to stay safe and
+        # bounded, the frontier plan must be anchored on THIS wave's
+        # durable artifacts, never on a previous wave's in-memory plan:
+        #  - the last writer is joined now (it had the entire fetch stage
+        #    to finish, so this is a no-op in steady state);
+        #  - delta keys recompute from the written wave parquet
+        #    (extraction passes the canonical url through 1:1, so
+        #    xxhash64(url) == the frontier's url_hash; in the
+        #    astronomically-rare hash-collision case a key can be missing
+        #    here, and the next wave's exact dedup gate — not this prune,
+        #    which is an optimization — drops the row);
+        #  - the unbudgeted leftover is an empty LITERAL (take_wave's
+        #    frontier.limit(0) would chain the previous wave's plan into
+        #    this one, growing the logical tree every wave);
+        #  - the budgeted leftover rebinds onto the read-back of the files
+        #    the last writer just published (value-identical: same rows,
+        #    same dedup, same anti-join keys).
+        _join_prev_frontier()
+        delta_keys = wave_ex.select(F.xxhash64("url").alias("url_hash"))
+        if not leftover_vs_full:
+            if wave_budget is None:
+                leftover = spark.createDataFrame([], frontier.schema)
+            elif catalog.exists("frontier"):
+                # the taken-wave keys are RECOMPUTED from the read-back
+                # (deterministic: after dedup the (priority, depth,
+                # url_hash) order is strict, so the top-K set is the one
+                # take_wave took) — referencing `wave` here would chain
+                # the previous wave's plan into this one and the logical
+                # tree would grow ~100 KB per wave (measured)
+                _d = dedup_within(catalog.read(spark, "frontier"))
+                _taken = (
+                    _d.orderBy(*[F.col(c).asc() for c in ORDER_COLS])
+                    .limit(wave_budget)
+                    .select("url_hash")
+                )
+                leftover = _d.join(_taken, "url_hash", "left_anti")
         if leftover_vs_full:
             # one-off: imported-history frontier may overlap prior seen.
             # `seen` (prev log) includes the imported base; this wave's
@@ -859,142 +841,95 @@ def run_crawl(
 
         lin_thread = InheritableThread(target=_write_lineage, daemon=True)
         lin_thread.start()
-        if overlap_frontier:
-            # ---- pipelined frontier write --------------------------------
-            # The write (and with it the whole frontier COMPUTE: link
-            # explode, pagination expansion, prune joins, parquet encode)
-            # runs on a thread that the loop only joins one wave later —
-            # i.e. underneath the next wave's fetch/extract/write, the
-            # dominant stage.  The next wave plans against the persisted
-            # `nxt` directly; its first action races the writer for the
-            # cached partitions, and whichever computes a block first
-            # feeds the other.  Torn interleavings of the concurrent
-            # catalog publishes are exactly what resume's orphan pruning
-            # (_resume_point) makes safe.
-            nxt = nxt.persist()
-            _f_err: list = []
-            _f_ms: list = []
-            _f_snap_holder: list = []
-            _w_no = wave_no
 
-            def _write_frontier():
-                try:
-                    _t = time.monotonic()
-                    _f_snap_holder.append(
-                        catalog.write(nxt, "frontier", meta={"wave": _w_no + 1})
-                    )
-                    _f_ms.append(round((time.monotonic() - _t) * 1000))
-                except BaseException as ex:
-                    _f_err.append(ex)
+        # ---- pipelined frontier write ------------------------------------
+        # The write (and with it the whole frontier COMPUTE: link explode,
+        # pagination expansion, prune joins, parquet encode) runs on a
+        # thread that the loop only joins one wave later — i.e. underneath
+        # the next wave's fetch/extract/write, the dominant stage.  The
+        # next wave plans against the persisted `nxt` directly; its first
+        # action races the writer for the cached partitions, and whichever
+        # computes a block first feeds the other.  Torn interleavings of
+        # the concurrent catalog publishes are exactly what resume's
+        # orphan pruning (_resume_point) makes safe.
+        nxt = nxt.persist()
+        _f_err: list = []
+        _f_ms: list = []
+        _w_no = wave_no
 
-            f_thread = InheritableThread(target=_write_frontier, daemon=True)
-            f_thread.start()
+        def _write_frontier():
+            try:
+                _t = time.monotonic()
+                catalog.write(nxt, "frontier", meta={"wave": _w_no + 1})
+                _f_ms.append(round((time.monotonic() - _t) * 1000))
+            except BaseException as ex:
+                _f_err.append(ex)
 
-            # frontier-size UPPER bound for the next wave's broadcast-
-            # safety decision (the manifest count is still in flight):
-            # leftover bound + raw link mentions + deduped pagination mass.
-            n_links = _obs_n(
-                obs_hit, wave_ex.select(F.explode("links")), "n_links"
-            )
-            n_extents = _obs_n(
-                obs_hit, wave_ex.filter(_extent_pred), "n_extents"
-            )
-            pag_ub = 0
-            if n_extents > 0:
-                # deduped extent mass, mirroring expand_pagination_df's
-                # per-(site, category, template, depth, priority) collapse
-                # (+1 covers the HDW over-scan quirk).  A tiny agg over the
-                # written wave parquet — listing-discovery waves only.
-                pag_ub = int(
-                    wave_ex.filter(_extent_pred)
-                    .groupBy(
-                        "site", "category", "url_template", "depth",
-                        "priority",
-                    )
-                    .agg(F.max("last_page").alias("lp"))
-                    .agg(
-                        F.sum(
-                            F.least(
-                                F.col("lp") + F.lit(1),
-                                F.lit(max_pagination),
-                            )
-                        ).alias("s")
-                    )
-                    .first()["s"]
-                    or 0
+        f_thread = InheritableThread(target=_write_frontier, daemon=True)
+        f_thread.start()
+
+        # frontier-size UPPER bound for the next wave's broadcast-safety
+        # decision (the manifest count is still in flight): raw link
+        # mentions + deduped pagination mass.
+        n_links = _obs_n(obs_hit, wave_ex.select(F.explode("links")), "n_links")
+        n_extents = _obs_n(obs_hit, wave_ex.filter(_extent_pred), "n_extents")
+        pag_ub = 0
+        if n_extents > 0:
+            # deduped extent mass, mirroring expand_pagination_df's
+            # per-(site, category, template, depth, priority) collapse (+1
+            # covers the HDW over-scan quirk).  A tiny agg over the written
+            # wave parquet — listing-discovery waves only.
+            pag_ub = int(
+                wave_ex.filter(_extent_pred)
+                .groupBy(
+                    "site", "category", "url_template", "depth", "priority",
                 )
-            if wave_budget is None:
-                leftover_term = 0
-            else:
-                base = frontier_ub if frontier_ub is not None else frontier_rows
-                leftover_term = (
-                    None if base is None else max(0, base - n_wave)
+                .agg(F.max("last_page").alias("lp"))
+                .agg(
+                    F.sum(
+                        F.least(
+                            F.col("lp") + F.lit(1), F.lit(max_pagination)
+                        )
+                    ).alias("s")
                 )
-            frontier_ub = (
-                None
-                if leftover_term is None
-                else leftover_term + n_links + pag_ub
+                .first()["s"]
+                or 0
             )
-            frontier = nxt
-            frontier_rows = None
-            lin_thread.join()
-            if _lin_err:
-                raise _lin_err[0]
-            seen_thread.join()
-            if _seen_err:
-                raise _seen_err[0]
-            seen = catalog.read_log(spark, "seen")
-            if blobs is not None:
-                blobs = catalog.read(spark, "blobs")
-            if n_wave == 0:
-                # degenerate trailing wave (nonzero upper bound over an
-                # exhausted frontier): its published deltas are empty; the
-                # writer's manifest proves the next frontier empty too, so
-                # the top of the loop stops without another wave
-                _f_prev = {
-                    "thread": f_thread, "err": _f_err, "ms": _f_ms,
-                    "pins": [],
-                }
-                _join_prev_frontier()
-                frontier_rows = (
-                    _f_snap_holder[0].rows if _f_snap_holder else 0
-                )
-            else:
-                _f_prev = {
-                    "thread": f_thread, "err": _f_err, "ms": _f_ms,
-                    "pins": [],
-                }
-            _mark("next_frontier")
-            if _prev_nxt is not None:
-                _prev_nxt.unpersist()
-            _prev_nxt = nxt
-            scheduled.unpersist()
-            wave.unpersist()
-        else:
-            f_snap = catalog.write(nxt, "frontier", meta={"wave": wave_no + 1})
-            frontier_rows = f_snap.rows
-            frontier = catalog.read(spark, "frontier")
-            lin_thread.join()
-            if _lin_err:
-                raise _lin_err[0]
-            # the seen log (and standing blobs) must be current before the
-            # NEXT wave's dedup gate / first-crossing blob build read them —
-            # awaited here, after the frontier write the thread overlapped
-            seen_thread.join()
-            if _seen_err:
-                raise _seen_err[0]
-            seen = catalog.read_log(spark, "seen")
-            if blobs is not None:
-                blobs = catalog.read(spark, "blobs")
-            _mark("next_frontier")
-
-            scheduled.unpersist()
-            wave.unpersist()
+        # an unbudgeted wave leaves no leftover; a budgeted run's leftover
+        # descends from the initial frontier, whose size is unknown, so
+        # budgeted runs carry no bound
+        frontier_ub = n_links + pag_ub if wave_budget is None else None
+        frontier = nxt
+        lin_thread.join()
+        if _lin_err:
+            raise _lin_err[0]
+        # the seen log (and standing blobs) must be current before the NEXT
+        # wave's dedup gate / first-crossing blob build read them
+        seen_thread.join()
+        if _seen_err:
+            raise _seen_err[0]
+        seen = catalog.read_log(spark, "seen")
+        if blobs is not None:
+            blobs = catalog.read(spark, "blobs")
+        _f_prev = {"thread": f_thread, "err": _f_err, "ms": _f_ms}
+        _mark("next_frontier")
+        if _prev_nxt is not None:
+            _prev_nxt.unpersist()
+        _prev_nxt = nxt
+        scheduled.unpersist()
+        wave.unpersist()
         wave_no += 1
+        if n_wave == 0:
+            # degenerate trailing wave (nonzero upper bound over an
+            # exhausted frontier): a wave takes at least one row of a
+            # nonempty frontier (wave_budget >= 1), so the frontier was
+            # empty, its published deltas are empty, and so is the
+            # frontier being written
+            break
 
-    # land the last wave's in-flight frontier writer (pipelined tail) —
-    # the catalog must be complete, and its errors must surface, before
-    # the result is handed back
+    # land the last wave's in-flight frontier writer — the catalog must be
+    # complete, and its errors must surface, before the result is handed
+    # back
     t_ms = {}
     _join_prev_frontier()
     if _prev_nxt is not None:
@@ -1032,6 +967,7 @@ def resume_crawl(
     double-count them.  ``_resume_point`` walks the manifests (driver-side,
     no Spark job) for the latest complete wave; everything at or after it
     is pruned before the replay starts."""
+    _check_wave_budget(kw.get("wave_budget"))
     start_wave = _resume_point(catalog)
     for t in ("extracted", "seen", "lineage", "blobs"):
         catalog.prune_waves(t, start_wave)

@@ -1,10 +1,12 @@
 """End-to-end crawl: determinism vs the single-threaded oracle, the text
 invariant, robots gating, budget carry-over, incremental seen_prior."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from no_fasel_scrapers_spark.plans.crawl import run_crawl
+from no_fasel_scrapers_spark.plans.crawl import resume_crawl, run_crawl
 from no_fasel_scrapers_spark.plans.oracle_crawler import crawl_oracle
 from no_fasel_scrapers_spark.sources.catalog import Catalog
 
@@ -115,6 +117,23 @@ class TestBudgetAndIncremental:
         assert got == sorted(oracle_b.orders)
         # budget changes the schedule, not the final coverage
         assert {r["url"] for r in res.seen.collect()} == oracle_result.seen
+
+    @pytest.mark.parametrize("crawl", [run_crawl, resume_crawl])
+    def test_budget_below_one_rejected(self, spark, fixture, tmp_path, crawl):
+        """A budget below 1 would take empty waves forever (the whole
+        frontier left over each time); it is refused before the catalog
+        sees any write."""
+        cat = Catalog(str(tmp_path / "c"))
+        with pytest.raises(ValueError, match="wave_budget"):
+            crawl(
+                spark,
+                fixture.pages_df(spark),
+                fixture.seeds_df(spark),
+                fixture.robots_df(spark),
+                cat,
+                wave_budget=0,
+            )
+        assert os.listdir(tmp_path / "c") == []
 
     def test_seen_prior_skips(self, spark, fixture, tmp_path_factory):
         cat = Catalog(str(tmp_path_factory.mktemp("crawlp") / "cp"))
@@ -327,39 +346,21 @@ class TestSitemapParse:
 
 
 class TestPipelinedFrontier:
-    """run_crawl(overlap_frontier=True) — the default — writes wave k's
-    frontier on a thread UNDER wave k+1's fetch stage.  The pipelined and
-    serial tails must be row-identical in every mode; these pin the
-    escape hatch (overlap_frontier=False) against the default."""
+    """run_crawl writes wave k's frontier on a thread UNDER wave k+1's
+    fetch stage.  These pin the overlapped tail against the sequential
+    oracle, and its plan size across waves."""
 
-    def test_serial_equals_pipelined(
-        self, spark, fixture, tmp_path_factory, crawl_result
-    ):
-        # crawl_result ran with the default (pipelined) tail
-        res = _crawl(
-            spark, fixture, tmp_path_factory.mktemp("crawls"), "cs",
-            overlap_frontier=False,
-        )
-        a = sorted(
-            (r["wave"], r["rank"], r["url"])
-            for r in crawl_result.seen.collect()
-        )
-        b = sorted(
-            (r["wave"], r["rank"], r["url"]) for r in res.seen.collect()
-        )
-        assert a == b
-        ea = sorted(
+    def test_extracted_matches_oracle(self, crawl_result, oracle_result):
+        got = sorted(
             (r["url"], r["wave"], r["text"])
             for r in crawl_result.extracted.select(
                 "url", "wave", "text"
             ).collect()
         )
-        eb = sorted(
-            (r["url"], r["wave"], r["text"])
-            for r in res.extracted.select("url", "wave", "text").collect()
+        want = sorted(
+            (r["url"], r["wave"], r["text"]) for r in oracle_result.extracted
         )
-        assert ea == eb
-        assert crawl_result.waves == res.waves
+        assert got == want
 
     def test_plan_size_bounded_across_waves(
         self, spark, fixture, tmp_path_factory

@@ -1,17 +1,15 @@
 """Repetition quality signals + corpus-level line dedup
 (operators/quality.py) — edge cases the driver corpus can't exercise.
 
-The oracle compare (tests/test_retired_queries.py-style, via the driver
-registry) pins the full-corpus values; these tests pin the operator
-semantics directly: tie-breaks, empty/single-word guards, trailing-line
-preservation, idempotence, and the docs-with-every-line-boilerplate case.
+The oracle compare (via the query registry, canonicalized as in
+tests/test_retired_queries.py) pins the corpus values; the other tests
+pin the operator semantics directly: the whitespace contract,
+tie-breaks, empty/single-word guards, trailing-line preservation,
+idempotence, and the docs-with-every-line-boilerplate case.
 """
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from no_fasel_scrapers_spark.operators.quality import (
@@ -19,20 +17,16 @@ from no_fasel_scrapers_spark.operators.quality import (
     with_repetition_stats,
 )
 
-IMPLS = ["arrow", "column"]
 
-
-def _rep(spark, texts, impl="arrow"):
+def _rep(spark, texts):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    out = with_repetition_stats(df, impl=impl).orderBy("doc_id").collect()
-    return out
+    return with_repetition_stats(df).orderBy("doc_id").collect()
 
 
-@pytest.mark.parametrize("impl", IMPLS)
-def test_repetition_empty_and_single_word(spark, impl):
-    rows = _rep(spark, ["", "   ", "solo"], impl)
+def test_repetition_empty_and_single_word(spark):
+    rows = _rep(spark, ["", "   ", "solo"])
     for r in rows[:2]:
         assert r.n_words == 0
         assert r.dup_word_frac == 0.0
@@ -46,9 +40,8 @@ def test_repetition_empty_and_single_word(spark, impl):
     assert solo.dup_2gram_frac == 0.0
 
 
-@pytest.mark.parametrize("impl", IMPLS)
-def test_repetition_tie_breaks_lexicographically(spark, impl):
-    (r,) = _rep(spark, ["b a b a"], impl)
+def test_repetition_tie_breaks_lexicographically(spark):
+    (r,) = _rep(spark, ["b a b a"])
     # a and b both occur twice; the smaller word wins
     assert r.top_word == "a" and r.top_word_frac == 0.5
     # grams: [b a, a b, b a] → top is "b a" at 2/3
@@ -57,56 +50,53 @@ def test_repetition_tie_breaks_lexicographically(spark, impl):
     assert abs(r.dup_2gram_frac - 1 / 3) < 1e-12
 
 
-@pytest.mark.parametrize("impl", IMPLS)
-def test_repetition_maximal(spark, impl):
-    (r,) = _rep(spark, ["x x x x"], impl)
+def test_repetition_maximal(spark):
+    (r,) = _rep(spark, ["x x x x"])
     assert r.dup_word_frac == 0.75
     assert r.top_word_frac == 1.0
     assert r.top_2gram == "x x" and r.top_2gram_frac == 1.0
     assert abs(r.dup_2gram_frac - 2 / 3) < 1e-12
 
 
-def test_repetition_impls_identical_on_corpus(spark):
-    """The Arrow scale path and the JVM columnar path must agree
-    byte-for-byte — probes (ties, unicode, edge whitespace, NULL) + a
-    corpus sample.  Unicode whitespace (nbsp) must NOT split tokens
-    (the Java-regex whitespace contract; Python str.split would
-    diverge), and leading/trailing tabs must NOT produce empty tokens
-    (a trim-based column tokenizer diverged here — caught by review,
-    pinned since)."""
-    sf_dir = os.environ.get(
-        "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"
+def test_repetition_whitespace_contract(spark):
+    """Unicode whitespace (nbsp) must NOT split tokens (the Java-regex
+    whitespace contract; Python str.split would diverge), leading/
+    trailing tabs must NOT produce empty tokens, and whitespace-only or
+    NULL text counts as empty."""
+    nbsp, tab, ws_only, null = _rep(
+        spark, ["x\u00a0y x\u00a0y z", "\ta b\n", "\t \n", None]
     )
-    docs = spark.read.parquet(
-        f"{sf_dir}/documents.parquet"
-    ).select("doc_id", "text").limit(200)
-    probes = spark.createDataFrame(
-        [
-            (10**9 + 1, ""),
-            (10**9 + 2, "b a b a"),
-            (10**9 + 3, "x\u00a0y x\u00a0y z"),  # nbsp not a splitter
-            (10**9 + 4, "مرحبا hello مرحبا مرحبا hello"),
-            (10**9 + 5, "  padded   spaces  "),
-            (10**9 + 6, "\ta b\n"),   # edge tabs/newlines: no '' token
-            (10**9 + 7, "\t \n"),     # whitespace-only → 0 words
-            (10**9 + 8, None),        # NULL text counts as empty
-        ],
-        "doc_id long, text string",
-    )
-    d = docs.unionByName(probes)
-    a = with_repetition_stats(d, impl="arrow").orderBy("doc_id").collect()
-    c = with_repetition_stats(d, impl="column").orderBy("doc_id").collect()
-    assert len(a) == len(c) == 208
-    for ra, rc in zip(a, c):
-        assert ra == rc, f"impl divergence at doc_id={ra.doc_id}"
-    nbsp = next(r for r in a if r.doc_id == 10**9 + 3)
     assert nbsp.n_words == 3 and nbsp.top_word == "x\u00a0y"
-    tab = next(r for r in a if r.doc_id == 10**9 + 6)
     assert tab.n_words == 2 and tab.top_word == "a"
-    for pid in (10**9 + 7, 10**9 + 8):
-        r = next(r for r in a if r.doc_id == pid)
+    for r in (ws_only, null):
         assert r.n_words == 0 and r.top_word is None
         assert r.dup_word_frac == 0.0
+
+
+def test_repetition_stats_matches_oracle(spark, monkeypatch):
+    """The registry's repetition_stats query (corpus + probe rows) equals
+    its DuckDB oracle value for value, canonicalized as the retired-query
+    compare does."""
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as E
+    from test_retired_queries import SF_DIR, _canon
+
+    # oracle_sql() also builds the analytic VALUES oracles; pin them to
+    # the small sf so they stay cheap (and scoped to this test)
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
+    )
+    sdf = E.queries()["repetition_stats"](spark, SF_DIR).toPandas()
+    odf = con.execute(E.oracle_sql()["repetition_stats"]).df()
+    assert sorted(sdf.columns) == sorted(odf.columns)
+    assert len(sdf) == len(odf) > 0
+    a, b = _canon(sdf), _canon(odf)
+    b = b.astype(a.dtypes.to_dict())
+    pd.testing.assert_frame_equal(a, b, check_dtype=False)
 
 
 def test_line_dedup_removes_boilerplate_keeps_structure(spark):
