@@ -2008,9 +2008,8 @@ def q_link_pagerank(spark, sf_dir):
 def q_recrawl_delta(spark, sf_dir):
     """Recrawl/invalidation cycle (the one crawl semantic VERDICT r4 noted
     had no registry row): crawl the fixture site, invalidate a
-    deterministic quarter of the fetched URLs from the seen set
-    (cuckoo-delete semantics, ``operators/seen_filter.invalidate_recrawl``
-    via ``run_crawl(recrawl=...)``), re-crawl them as a recrawl queue over
+    deterministic quarter of the fetched URLs (deleted from the exact seen
+    set by ``run_crawl(recrawl=...)``), re-crawl them as a recrawl queue over
     MUTATED page content (``Alpha``→``Gamma`` — changes every page's text,
     no URL), and merge old/new records with new-wins precedence (O14,
     ``operators/merge.union_with_precedence``).  Oracle: the independent

@@ -48,8 +48,8 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument(
         "--recrawl-urls",
-        help="text file of URLs whose seen entries are invalidated "
-             "(cuckoo-delete semantics) so they are fetched again",
+        help="text file of URLs deleted from the exact seen set "
+             "so they are fetched again",
     )
     ap.add_argument(
         "--seen-prior",

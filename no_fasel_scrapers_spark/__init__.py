@@ -7,7 +7,7 @@ URL-frontier + fetch-scheduler + extraction engine on Spark DataFrames:
 - ``functions/``  — pure-column scalar functions (URL canonicalization, the
   reference's string cleanups reproduced byte-identically) and vectorized
   Arrow UDF extractors for the per-site HTML shapes.
-- ``operators/``  — frontier scheduling, bloom/cuckoo URL-seen filtering,
+- ``operators/``  — frontier scheduling, bloom URL-seen filtering,
   per-host politeness, robots gating, dedup (exact/minhash/simhash),
   similarity search, text-quality analysis, merge-precedence unions,
   nested record assembly.

@@ -1065,8 +1065,8 @@ def link_pagerank_sql(sf: str | None = None) -> str:
 def recrawl_delta_rows():
     """Python-oracle twin of the recrawl/invalidation cycle (VERDICT r4
     task #5): crawl the fixture site once, invalidate a deterministic
-    quarter of the fetched URLs (cuckoo-delete semantics on the exact seen
-    set, ``operators/seen_filter.invalidate_recrawl``), re-crawl them as a
+    quarter of the fetched URLs (a delete from the exact seen set, as
+    ``run_crawl(recrawl=...)`` does), re-crawl them as a
     recrawl queue against MUTATED page content, and merge with new-wins
     precedence (O14, ``operators/merge.union_with_precedence``).
 

@@ -80,6 +80,7 @@ from ..operators.politeness import politeness_metrics, schedule_fetches
 from ..operators.robots import apply_robots
 from ..operators.seen_filter import (
     bloom_params as _bloom_params,
+    BITS_PER_KEY,
     BROADCAST_MAX_BYTES,
     build_filter_blobs,
     dedup_against_seen,
@@ -268,14 +269,13 @@ def run_crawl(
                 )
             )
     if recrawl is not None:
-        # recrawl invalidation (cuckoo-delete semantics on the exact set):
-        # dropped urls become fetchable again this run
-        from ..operators.seen_filter import invalidate_recrawl
-
+        # recrawl invalidation deletes from the exact seen set: dropped
+        # urls become fetchable again this run (their stale bloom bits
+        # only send them through the exact backstop, which passes them)
         keys = with_frontier_keys(recrawl.select("url"), n_salts).select(
             "url_hash"
         )
-        seen, _ = invalidate_recrawl(seen, keys, n_shards=n_shards)
+        seen = seen.join(keys.distinct(), "url_hash", "left_anti")
         if catalog.exists("seen"):
             # the invalidated set replaces the append-log atomically: one
             # snapshot marked 'compact' restarts the log (Iceberg REPLACE)
@@ -320,12 +320,12 @@ def run_crawl(
     # bloom false positives are always corrected by the backstop.
     n_per_shard = max(1, expected_urls // n_shards)
     # How the probe ships the filter to executors: decided ONCE from the
-    # pinned sizing (total filter bytes = expected_urls * bits_per_key/8),
+    # pinned sizing (total filter bytes = expected_urls * BITS_PER_KEY/8),
     # not per wave — the "auto" path would re-agg the blob table every
     # wave for an answer the driver already knows.
     blob_strategy = (
         "broadcast"
-        if expected_urls * 10 // 8 <= BROADCAST_MAX_BYTES
+        if expected_urls * BITS_PER_KEY // 8 <= BROADCAST_MAX_BYTES
         else "cogroup"
     )
     blobs = (
@@ -870,35 +870,42 @@ def run_crawl(
 
         # frontier-size UPPER bound for the next wave's broadcast-safety
         # decision (the manifest count is still in flight): raw link
-        # mentions + deduped pagination mass.
-        n_links = _obs_n(obs_hit, wave_ex.select(F.explode("links")), "n_links")
-        n_extents = _obs_n(obs_hit, wave_ex.filter(_extent_pred), "n_extents")
-        pag_ub = 0
-        if n_extents > 0:
-            # deduped extent mass, mirroring expand_pagination_df's
-            # per-(site, category, template, depth, priority) collapse (+1
-            # covers the HDW over-scan quirk).  A tiny agg over the written
-            # wave parquet — listing-discovery waves only.
-            pag_ub = int(
-                wave_ex.filter(_extent_pred)
-                .groupBy(
-                    "site", "category", "url_template", "depth", "priority",
-                )
-                .agg(F.max("last_page").alias("lp"))
-                .agg(
-                    F.sum(
-                        F.least(
-                            F.col("lp") + F.lit(1), F.lit(max_pagination)
-                        )
-                    ).alias("s")
-                )
-                .first()["s"]
-                or 0
+        # mentions + deduped pagination mass.  An unbudgeted wave leaves
+        # no leftover; a budgeted run's leftover descends from the initial
+        # frontier, whose size is unknown, so budgeted runs carry no bound
+        # and skip its jobs.
+        frontier_ub = None
+        if wave_budget is None:
+            n_links = _obs_n(
+                obs_hit, wave_ex.select(F.explode("links")), "n_links"
             )
-        # an unbudgeted wave leaves no leftover; a budgeted run's leftover
-        # descends from the initial frontier, whose size is unknown, so
-        # budgeted runs carry no bound
-        frontier_ub = n_links + pag_ub if wave_budget is None else None
+            n_extents = _obs_n(
+                obs_hit, wave_ex.filter(_extent_pred), "n_extents"
+            )
+            pag_ub = 0
+            if n_extents > 0:
+                # deduped extent mass, mirroring expand_pagination_df's
+                # per-(site, category, template, depth, priority) collapse
+                # (+1 covers the HDW over-scan quirk).  A tiny agg over the
+                # written wave parquet — listing-discovery waves only.
+                pag_ub = int(
+                    wave_ex.filter(_extent_pred)
+                    .groupBy(
+                        "site", "category", "url_template", "depth",
+                        "priority",
+                    )
+                    .agg(F.max("last_page").alias("lp"))
+                    .agg(
+                        F.sum(
+                            F.least(
+                                F.col("lp") + F.lit(1), F.lit(max_pagination)
+                            )
+                        ).alias("s")
+                    )
+                    .first()["s"]
+                    or 0
+                )
+            frontier_ub = n_links + pag_ub
         frontier = nxt
         lin_thread.join()
         if _lin_err:

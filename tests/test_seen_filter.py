@@ -1,5 +1,5 @@
 """Seen-filter properties (SURVEY.md §5.2-4): bloom no-false-negatives,
-cuckoo insert/contains/delete, end-to-end dedup correctness vs exact."""
+end-to-end dedup correctness vs exact on both probe strategies."""
 
 import numpy as np
 import pytest
@@ -7,7 +7,6 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from no_fasel_scrapers_spark.operators.seen_filter import (
-    CuckooFilter,
     bloom_params,
     build_bloom,
     build_filter_blobs,
@@ -15,6 +14,7 @@ from no_fasel_scrapers_spark.operators.seen_filter import (
     probe_bloom,
     update_filter_blobs,
 )
+from no_fasel_scrapers_spark.sources.catalog import Catalog
 
 HASHES = st.lists(
     st.integers(min_value=-(2**63), max_value=2**63 - 1),
@@ -39,7 +39,7 @@ class TestBloomLocal:
     def test_fpp_reasonable(self):
         rng = np.random.default_rng(42)
         ins = rng.integers(-(2**63), 2**63 - 1, size=20000, dtype=np.int64)
-        m, k = bloom_params(len(ins), bits_per_key=10)
+        m, k = bloom_params(len(ins))
         blob = build_bloom(ins.astype(np.uint64), m, k)
         probe = rng.integers(-(2**63), 2**63 - 1, size=20000, dtype=np.int64)
         fresh = np.setdiff1d(probe, ins)
@@ -47,38 +47,9 @@ class TestBloomLocal:
         assert mask.mean() < 0.03  # ~1% design fpp, generous bound
 
 
-class TestCuckoo:
-    @settings(max_examples=30, deadline=None)
-    @given(HASHES)
-    def test_insert_contains(self, keys):
-        cf = CuckooFilter(max(len(keys) * 2, 16))
-        ok = [cf.insert(k & ((1 << 64) - 1)) for k in keys]
-        assert all(ok)
-        for k in keys:
-            assert cf.contains(k & ((1 << 64) - 1))
-
-    def test_delete_keeps_live_keys(self):
-        keys = list(range(1000, 2000))
-        cf = CuckooFilter(4096)
-        for k in keys:
-            assert cf.insert(k)
-        dead, live = keys[::2], keys[1::2]
-        for k in dead:
-            assert cf.delete(k)
-        for k in live:
-            assert cf.contains(k)
-
-    def test_roundtrip_bytes(self):
-        cf = CuckooFilter(64)
-        for k in range(50):
-            cf.insert(k * 7919)
-        cf2 = CuckooFilter.from_bytes(cf.to_bytes(), cf.n_buckets)
-        for k in range(50):
-            assert cf2.contains(k * 7919)
-
-
 class TestDistributedDedup:
-    def test_matches_exact_antijoin(self, spark):
+    @pytest.mark.parametrize("strategy", ["broadcast", "cogroup"])
+    def test_matches_exact_antijoin(self, spark, strategy):
         cand = spark.range(0, 5000).select(
             (F.xxhash64(F.col("id"))).alias("url_hash"),
             F.concat(F.lit("u"), F.col("id")).alias("url"),
@@ -88,7 +59,9 @@ class TestDistributedDedup:
             F.concat(F.lit("u"), F.col("id")).alias("url"),
         )
         blobs = build_filter_blobs(seen, n_shards=8)
-        got = dedup_against_seen(cand, seen, blobs, n_shards=8)
+        got = dedup_against_seen(
+            cand, seen, blobs, n_shards=8, blob_strategy=strategy
+        )
         exact = cand.join(seen.select("url_hash"), "url_hash", "left_anti")
         a = sorted(r["url"] for r in got.collect())
         b = sorted(r["url"] for r in exact.collect())
@@ -101,6 +74,12 @@ class TestDistributedDedup:
         )
         out = dedup_against_seen(cand, None, None)
         assert out.count() == 10
+
+    def test_unknown_strategy_rejected(self, spark):
+        cand = spark.range(10).select(F.xxhash64("id").alias("url_hash"))
+        blobs = build_filter_blobs(cand, n_shards=4)
+        with pytest.raises(ValueError, match="unknown blob probe strategy"):
+            dedup_against_seen(cand, cand, blobs, 4, blob_strategy="bogus")
 
 
 class TestIncrementalBlobs:
@@ -156,3 +135,41 @@ class TestIncrementalBlobs:
             )
             want = sorted(i for i in range(2000) if i % 3 != 0)
             assert got == want, "blobs" if bl is not None else "exact"
+
+    def test_blobs_written_with_kind_column_resume(self, spark, tmp_path):
+        """Blobs in a catalog written while BLOB_SCHEMA still carried a
+        ``kind`` column update and probe exactly like fresh blobs."""
+        cand = spark.range(0, 3000).select(
+            F.col("id").alias("event_id"),
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+        )
+        seen = cand.filter(F.col("event_id") % 3 == 0).select("url_hash")
+        delta = cand.filter(F.col("event_id") % 7 == 1).select("url_hash")
+        fresh = build_filter_blobs(seen, 8, n_expected_per_shard=500)
+        cat = Catalog(str(tmp_path / "c"))
+        cat.write(
+            fresh.select(
+                "shard", F.lit("bloom").alias("kind"), "bits", "n_items",
+                "m", "k",
+            ),
+            "blobs",
+        )
+        legacy = cat.read(spark, "blobs")
+        assert "kind" in legacy.columns
+
+        def by_shard(blobs):
+            return {
+                r["shard"]: (bytes(r["bits"]), r["n_items"], r["m"], r["k"])
+                for r in blobs.collect()
+            }
+
+        def new_ids(seen_set, blobs):
+            out = dedup_against_seen(cand, seen_set, blobs, 8).collect()
+            return sorted(r["event_id"] for r in out)
+
+        assert new_ids(seen, legacy) == new_ids(seen, fresh)
+        got = update_filter_blobs(legacy, delta, 8, 500)
+        want = update_filter_blobs(fresh, delta, 8, 500)
+        assert by_shard(got) == by_shard(want)
+        both = seen.unionByName(delta)
+        assert new_ids(both, got) == new_ids(both, want)
