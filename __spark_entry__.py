@@ -4,9 +4,11 @@
 ``queries()`` — one entry per implemented operator family from SURVEY.md §2
 (reference operators O4-O24 re-expressed over the driver's testdata tables)
 plus the training-data operators (dedup family, ANN, text stats, multimodal
-plumbing).  ``oracle_sql()`` — DuckDB-equivalent ANSI SQL for every query
-whose semantics are SQL-expressible; xxhash64-based operators (minhash,
-simhash, LSH cells, fingerprints) and the crawl e2e run are rows-only.
+plumbing).  ``oracle_sql()`` — a DuckDB oracle for every query: plain SQL,
+or where DuckDB cannot evaluate the operator (seeded xxhash64, media
+decoding, the crawl) a VALUES relation recomputed in Python
+(oracle/analytic.py).  Both are views of ``REGISTRY``, filled by each
+query's ``@query`` decorator.
 
 Column names and types are aligned pairwise between the Spark plan and the
 oracle SQL (aggregates go through exact decimal casts so the doubles match
@@ -16,6 +18,7 @@ bit-for-bit; float-derived values are rounded on both sides).
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,6 +36,59 @@ def _dec_sum(col, scale: int = 2):
     the last ulps); routing through decimal makes the aggregate exact and
     engine-independent, then one exact cast back to double."""
     return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
+
+
+# ---------------------------------------------------------------------------
+# registry: each ``q_<name>`` function's ``@query`` decorator is its only
+# declaration; ``queries()`` and ``oracle_sql()`` are views of REGISTRY
+# ---------------------------------------------------------------------------
+
+@dataclass(frozen=True)
+class Query:
+    """One registry row.  ``oracle`` is DuckDB SQL, or a zero-argument
+    callable returning it (built when resolved, not at import).  A
+    ``retired`` row is left out of the driver's 50-row record, and the
+    test suite keeps comparing it with its oracle; ``bench`` rows are
+    timed by bench.py."""
+
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[], str]
+    retired: bool = False
+    bench: bool = False
+
+    def sql(self) -> str:
+        return self.oracle() if callable(self.oracle) else self.oracle
+
+
+REGISTRY: dict[str, Query] = {}
+
+
+def query(oracle, *, retired=False, bench=False):
+    """Register ``q_<name>`` as registry row ``<name>``."""
+
+    def register(fn):
+        name = fn.__name__.removeprefix("q_")
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is declared twice")
+        REGISTRY[name] = Query(fn, oracle, retired, bench)
+        return fn
+
+    return register
+
+
+def _analytic(builder: str) -> Callable[[], str]:
+    """Lazy VALUES oracle from oracle/analytic.py, for queries DuckDB
+    cannot evaluate (seeded xxhash64, media decoding, the crawl): an
+    independent Python recomputation over the parquet under
+    SPARK_GRAFT_ORACLE_SF_DIR (sf0.01 by default), read when the oracle
+    is resolved."""
+
+    def build() -> str:
+        from no_fasel_scrapers_spark.oracle import analytic
+
+        return getattr(analytic, builder)()
+
+    return build
 
 
 # ---------------------------------------------------------------------------
@@ -67,6 +123,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # relational / reference-operator queries (each cites its SURVEY.md §2 row)
 # ---------------------------------------------------------------------------
 
+@query("""
+    SELECT l_returnflag, l_linestatus,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+           CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
+           CAST(COUNT(*) AS BIGINT) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+    GROUP BY l_returnflag, l_linestatus
+""", bench=True)
 def q_pricing_summary(spark, sf_dir):
     """TPC-H Q1 shape — partial-agg groupBy (map-side combine, one shuffle)."""
     li = _t(spark, sf_dir, "lineitem").filter(
@@ -89,6 +155,15 @@ def q_pricing_summary(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT n_name,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+           CAST(COUNT(*) AS BIGINT) AS n_orders
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN nation ON c_nationkey = n_nationkey
+    GROUP BY n_name
+""", bench=True)
 def q_revenue_by_nation(spark, sf_dir):
     """3-table join: fact⋈fact shuffle join + broadcast dim (nation)."""
     c = _t(spark, sf_dir, "customer")
@@ -105,6 +180,17 @@ def q_revenue_by_nation(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT o_custkey, o_orderkey, o_totalprice, CAST(rnk AS INTEGER) AS rank
+    FROM (
+        SELECT o_custkey, o_orderkey, o_totalprice,
+               row_number() OVER (
+                   PARTITION BY o_custkey
+                   ORDER BY o_totalprice DESC, o_orderkey ASC
+               ) AS rnk
+        FROM orders
+    ) WHERE rnk <= 3
+""", bench=True)
 def q_top_orders_per_customer(spark, sf_dir):
     """Window precedence dedup — O20/O14 'first match wins' analog."""
     o = _t(spark, sf_dir, "orders")
@@ -118,6 +204,11 @@ def q_top_orders_per_customer(spark, sf_dir):
     )
 
 
+# retired: left_anti stays checked via seen_filter_dedup and decontaminate
+@query("""
+    SELECT c_custkey, c_name FROM customer
+    WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
+""", retired=True)
 def q_customers_without_orders(spark, sf_dir):
     """left_anti incremental-dedup shape — O10 (SURVEY.md §2)."""
     c = _t(spark, sf_dir, "customer")
@@ -127,6 +218,21 @@ def q_customers_without_orders(spark, sf_dir):
     ).select("c_custkey", "c_name")
 
 
+@query("""
+    SELECT o_orderkey, src, o_totalprice FROM (
+        SELECT *, row_number() OVER (
+            PARTITION BY o_orderkey
+            ORDER BY CASE src WHEN 'old' THEN 0 ELSE 1 END
+        ) AS rn
+        FROM (
+            SELECT o_orderkey, 'old' AS src, o_totalprice
+            FROM orders WHERE o_orderkey % 2 = 0
+            UNION ALL
+            SELECT o_orderkey, 'new' AS src, o_totalprice
+            FROM orders WHERE o_orderkey % 3 = 0
+        )
+    ) WHERE rn = 1
+""")
 def q_union_precedence_old_wins(spark, sf_dir):
     """O14: `new | old` (old wins) via explicit source-rank window."""
     from no_fasel_scrapers_spark.operators.merge import union_with_precedence
@@ -141,6 +247,21 @@ def q_union_precedence_old_wins(spark, sf_dir):
     return union_with_precedence(old, new, "o_orderkey", old_wins=True)
 
 
+@query("""
+    WITH cur AS (
+        SELECT l_orderkey AS series_id,
+               CAST(COUNT(*) AS BIGINT) AS episodes_total
+        FROM lineitem GROUP BY l_orderkey
+    ), old AS (
+        SELECT o_orderkey AS series_id,
+               CAST(o_orderkey % 4 AS BIGINT) AS old_count
+        FROM orders
+    )
+    SELECT c.series_id, c.episodes_total,
+           COALESCE(o.old_count, 0) AS old_count,
+           c.episodes_total <> COALESCE(o.old_count, 0) AS needs_update
+    FROM cur c LEFT JOIN old o USING (series_id)
+""")
 def q_episode_delta(spark, sf_dir):
     """O11 incremental tail-only recompute: stored count vs current count."""
     from no_fasel_scrapers_spark.operators.merge import episode_delta
@@ -159,6 +280,16 @@ def q_episode_delta(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT l_orderkey,
+           CAST(COUNT(*) AS BIGINT) AS n_episodes,
+           string_agg(
+               CAST(l_linenumber AS VARCHAR) || ':' ||
+               CAST(CAST(l_quantity AS INTEGER) AS VARCHAR),
+               ',' ORDER BY l_linenumber, CAST(l_quantity AS INTEGER)
+           ) AS episodes
+    FROM lineitem GROUP BY l_orderkey
+""", bench=True)
 def q_nested_assembly(spark, sf_dir):
     """O12 nested assembly: child rows → deterministic per-parent string."""
     li = _t(spark, sf_dir, "lineitem")
@@ -184,6 +315,13 @@ def q_nested_assembly(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT o_orderpriority,
+           md5(string_agg(CAST(o_orderkey AS VARCHAR), ','
+                          ORDER BY o_orderkey)) AS manifest_md5,
+           CAST(COUNT(*) AS BIGINT) AS n
+    FROM orders GROUP BY o_orderpriority
+""")
 def q_integrity_manifest(spark, sf_dir):
     """O24 md5 manifest over canonically-ordered group contents."""
     o = _t(spark, sf_dir, "orders")
@@ -201,6 +339,18 @@ def q_integrity_manifest(spark, sf_dir):
     )
 
 
+# retired: the broadcast decode join stays checked via trending_id_join
+@query("""
+    SELECT event_type,
+           CASE event_type WHEN 'view' THEN 'View' WHEN 'click' THEN 'Click'
+                WHEN 'purchase' THEN 'Purchase' WHEN 'signup' THEN 'Signup'
+                WHEN 'error' THEN 'Error' END AS label,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
+                WHEN 'purchase' THEN 5 WHEN 'signup' THEN 3
+                WHEN 'error' THEN 0 END) AS BIGINT) AS weight_total
+    FROM events GROUP BY event_type
+""", retired=True)
 def q_event_type_decode(spark, sf_dir):
     """O9 dict-decode via literal map (broadcast-join-free constant fold)."""
     ev = _t(spark, sf_dir, "events")
@@ -225,6 +375,18 @@ def q_event_type_decode(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT doc_id,
+           'https://w.test/' || CASE CAST(doc_id % 4 AS INTEGER)
+               WHEN 0 THEN '%d9%81%d9%8a%d9%84%d9%85/x'
+               WHEN 1 THEN 'asian-episodes/x'
+               WHEN 2 THEN 'anime-episodes/x'
+               ELSE 'show/x' END AS link,
+           CASE CAST(doc_id % 4 AS INTEGER)
+               WHEN 0 THEN 'movies' WHEN 1 THEN 'asian-series'
+               WHEN 2 THEN 'anime' ELSE 'series' END AS category
+    FROM documents
+""")
 def q_url_category(spark, sf_dir):
     """O21 URL-substring category classifier (TrendingScraper.py:74-81)."""
     from no_fasel_scrapers_spark.functions.cleanups import url_category
@@ -247,6 +409,14 @@ def q_url_category(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT p_partkey,
+           CASE WHEN p_partkey % 3 > 0 THEN p_name
+                ELSE p_name || ' part' END AS title,
+           CASE WHEN p_partkey % 5 = 0 THEN ''
+                ELSE CAST(p_partkey AS VARCHAR) END AS stream
+    FROM part
+""")
 def q_title_cleanups(spark, sf_dir):
     """O8 scalar cleanups: clean_title (Common.py:257-272) +
     clean_iframe_source (Common.py:360-364) as pure columns."""
@@ -280,6 +450,19 @@ def q_title_cleanups(spark, sf_dir):
     )
 
 
+@query("""
+    WITH a AS (
+        SELECT p_partkey AS pk_a,
+               regexp_replace(lower(p_name), '\\s+', '', 'g') AS k
+        FROM part
+    ), b AS (
+        SELECT p_partkey AS pk_b,
+               regexp_replace(lower(upper(replace(p_name, ' ', '   '))),
+                              '\\s+', '', 'g') AS k
+        FROM part
+    )
+    SELECT pk_a, pk_b FROM a JOIN b USING (k)
+""")
 def q_normalized_title_join(spark, sf_dir):
     """O20 normalized-key equi-join (the reference's 'fuzzy' match)."""
     from no_fasel_scrapers_spark.functions.cleanups import normalized_title_key
@@ -298,6 +481,15 @@ def q_normalized_title_join(spark, sf_dir):
     return a.join(b, "k").select("pk_a", "pk_b")
 
 
+@query("""
+    SELECT COALESCE(o_orderstatus, '<all>') AS status,
+           COALESCE(o_orderpriority, '<all>') AS priority,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+               AS total
+    FROM orders
+    GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
+""", bench=True)
 def q_rollup_status_priority(spark, sf_dir):
     """Grouping-sets rollup (SURVEY.md §2.2 aggregation checklist): subtotal
     and grand-total rows in one pass — absent in the reference, free in
@@ -320,6 +512,12 @@ def q_rollup_status_priority(spark, sf_dir):
     )
 
 
+# retired: plain INTERSECT, no engine code of its own
+@query("""
+    SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 2 = 0
+    INTERSECT
+    SELECT l_orderkey FROM lineitem
+""", retired=True)
 def q_intersect_keys(spark, sf_dir):
     """Set intersection (§2.2 set-ops checklist; the reference only has
     union-with-precedence and anti-difference)."""
@@ -332,6 +530,21 @@ def q_intersect_keys(spark, sf_dir):
     return a.intersect(b)
 
 
+# retired: window functions stay checked via top_orders_per_customer
+@query("""
+    WITH marked AS (
+        SELECT user_id, event_id,
+               CASE WHEN epoch(ts) - LAG(epoch(ts)) OVER w IS NULL
+                      OR epoch(ts) - LAG(epoch(ts)) OVER w > 1800
+                    THEN 1 ELSE 0 END AS new_sess
+        FROM events
+        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+    )
+    SELECT user_id,
+           CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
+           CAST(COUNT(*) AS BIGINT) AS n_events
+    FROM marked GROUP BY user_id
+""", retired=True, bench=True)
 def q_sessionize_events(spark, sf_dir):
     """Batch sessionization: 30-min-gap sessions via lag + running sum —
     the batch twin of the streaming session_window path (§2.2 windows)."""
@@ -356,6 +569,15 @@ def q_sessionize_events(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT d.doc_id AS item_id, d.source AS source,
+           substring(d.text, 1, 24) AS title,
+           CASE WHEN d.doc_id % 2 = 0 THEN 'movies'
+                ELSE 'series' END AS category
+    FROM documents d
+    JOIN (SELECT doc_id FROM documents WHERE doc_id % 11 = 0) r
+      ON d.doc_id = r.doc_id
+""")
 def q_trending_id_join(spark, sf_dir):
     """O19 trending equi-join by id (TrendingScraper.py:15-50): homepage
     recents ∩ stored catalog, inner join on item id, category tagged."""
@@ -376,6 +598,23 @@ def q_trending_id_join(spark, sf_dir):
     )
 
 
+@query("""
+    WITH g AS (
+        SELECT p_partkey,
+               list_filter(
+                   CASE WHEN p_partkey % 13 = 0
+                        THEN ['100%', '/']
+                        ELSE list_concat(string_split(p_type, ' '),
+                                         ['50%', '/']) END,
+                   x -> NOT contains(x, '%') AND x <> '/'
+               ) AS genres
+        FROM part
+    )
+    SELECT p_partkey,
+           array_to_string(genres, ',') AS genres_csv,
+           CAST(len(genres) AS INTEGER) AS n_genres
+    FROM g WHERE len(genres) > 0
+""")
 def q_genre_scrub_prune(spark, sf_dir):
     """O22 genre scrub + prune (Postprocessing.py:36-49,75-87): array
     higher-order filter drops junk entries, all-junk records are pruned."""
@@ -397,6 +636,26 @@ def q_genre_scrub_prune(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT CAST(p_partkey AS VARCHAR) AS key, p_name AS title,
+           'img/' || CAST(p_partkey AS VARCHAR) AS image_source,
+           'movies' AS category,
+           COALESCE(CASE WHEN p_partkey % 5 <> 0
+                         THEN CAST(p_partkey % 10 AS VARCHAR) END,
+                    'N/A') AS rating,
+           COALESCE(array_to_string(
+               CASE WHEN p_partkey % 7 <> 0
+                    THEN string_split(p_type, ' ') END, '|'),
+               '') AS genres_s
+    FROM part WHERE p_partkey % 3 <> 0
+    UNION ALL
+    SELECT CAST(p_partkey AS VARCHAR), p_name,
+           'img/' || CAST(p_partkey AS VARCHAR), 'series', 'N/A',
+           COALESCE(array_to_string(
+               CASE WHEN p_partkey % 2 = 0
+                    THEN string_split(p_type, ' ') END, '|'), '')
+    FROM part WHERE p_partkey % 3 = 0
+""")
 def q_all_content_index(spark, sf_dir):
     """O23 union-all indexer (AllContentIndexer.py:8-33): per-category
     tables with missing columns unified, Rating/Genres defaulted."""
@@ -433,6 +692,18 @@ def q_all_content_index(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT 'https://n' || CAST(n_nationkey AS VARCHAR) ||
+           '.test/cat/page/' || CAST(page AS VARCHAR) AS url,
+           'n' || CAST(n_nationkey AS VARCHAR) AS site,
+           CAST(1 AS INTEGER) AS depth,
+           CAST(0 AS INTEGER) AS priority
+    FROM (
+        SELECT n_nationkey,
+               unnest(generate_series(1, CAST(n_nationkey % 5 AS BIGINT) + 1)) AS page
+        FROM nation
+    )
+""")
 def q_pagination_expand(spark, sf_dir):
     """O4/O5 pagination extent → distributed page-range frontier rows."""
     from no_fasel_scrapers_spark.operators.frontier import expand_pagination
@@ -453,6 +724,15 @@ def q_pagination_expand(spark, sf_dir):
     return out.select("url", "site", "depth", "priority")
 
 
+@query("""
+    SELECT event_id AS url_hash,
+           CAST(event_id % 5 AS INTEGER) AS priority,
+           CAST(user_id % 3 AS INTEGER) AS depth,
+           event_type
+    FROM events
+    ORDER BY priority, depth, url_hash
+    LIMIT 500
+""")
 def q_frontier_take_wave(spark, sf_dir):
     """Frontier wave materialization: ORDER BY (priority, depth, key) LIMIT
     budget → TakeOrderedAndProject, leftover = left_anti (north_rule)."""
@@ -469,6 +749,21 @@ def q_frontier_take_wave(spark, sf_dir):
     return wave.select("url_hash", "priority", "depth", "event_type")
 
 
+@query("""
+    -- analytic RFC 9309 expectation from the generation rule:
+    -- even hosts: Disallow /d/0, Disallow /d/1 + LONGER Allow /d/1/
+    -- (allow wins), Disallow /*4$ (path ends in 4 <=> doc_id%10=4,
+    -- still out-lengthed by Allow /d/1/ when doc_id%7=1);
+    -- odd hosts: Disallow /d/2 only.
+    SELECT doc_id,
+           'h' || CAST(doc_id % 10 AS VARCHAR) || '.test' AS host
+    FROM documents
+    WHERE NOT (
+        (doc_id % 2 = 0 AND (doc_id % 7 = 0
+            OR (doc_id % 10 = 4 AND doc_id % 7 <> 1)))
+        OR (doc_id % 2 = 1 AND doc_id % 7 = 2)
+    )
+""")
 def q_robots_gate(spark, sf_dir):
     """north_rule robots gating, full RFC 9309 path (round 5): raw robots
     bodies → parse_robots_txt (compiled Allow/Disallow regex rules) →
@@ -515,6 +810,19 @@ def q_robots_gate(spark, sf_dir):
     return allowed.select("doc_id", "host")
 
 
+@query("""
+    SELECT event_id AS url_hash,
+           'h' || CAST(user_id % 20 AS VARCHAR) || '.test' AS host,
+           CAST(row_number() OVER (
+               PARTITION BY user_id % 20
+               ORDER BY event_id % 5, event_id % 3, event_id
+           ) - 1 AS INTEGER) AS fetch_seq,
+           CAST((row_number() OVER (
+               PARTITION BY user_id % 20
+               ORDER BY event_id % 5, event_id % 3, event_id
+           ) - 1) * (user_id % 20 + 1) * 10 AS BIGINT) AS scheduled_ms
+    FROM events
+""", bench=True)
 def q_politeness_schedule(spark, sf_dir):
     """north_rule per-host token-bucket schedule as a partitioned window."""
     from no_fasel_scrapers_spark.operators.politeness import schedule_fetches
@@ -539,6 +847,9 @@ def q_politeness_schedule(spark, sf_dir):
     return out.select("url_hash", "host", "fetch_seq", "scheduled_ms")
 
 
+@query("""
+    SELECT event_id FROM events WHERE event_id % 3 <> 0
+""", bench=True)
 def q_seen_filter_dedup(spark, sf_dir):
     """O10 at scale: bloom pre-filter + exact left_anti backstop must equal
     the plain anti-join (zero false drops — the correctness contract)."""
@@ -559,6 +870,14 @@ def q_seen_filter_dedup(spark, sf_dir):
     return dedup_against_seen(cand, seen, blobs, n_shards=16).select("event_id")
 
 
+@query("""
+    SELECT doc_id,
+           'http://www.site' || CAST(doc_id % 7 AS VARCHAR) ||
+           '.test/a/b/' || CAST(doc_id AS VARCHAR) ||
+           '?a=1&b=' || CAST(doc_id % 5 AS VARCHAR) AS canonical,
+           'www.site' || CAST(doc_id % 7 AS VARCHAR) || '.test' AS host
+    FROM documents
+""")
 def q_url_canonicalize(spark, sf_dir):
     """URL canonicalization — the key everything hashes off (SURVEY §7.1-1)."""
     from no_fasel_scrapers_spark.functions.canonical import (
@@ -584,6 +903,21 @@ def q_url_canonicalize(spark, sf_dir):
 # training-data operators
 # ---------------------------------------------------------------------------
 
+@query("""
+    WITH v AS (
+        SELECT user_id, ts, event_id FROM events
+        WHERE event_type = 'view'
+    ), p AS (
+        SELECT user_id, ts, MAX(value) AS purchase_value
+        FROM events WHERE event_type = 'purchase'
+        GROUP BY user_id, ts
+    )
+    SELECT v.user_id, v.event_id,
+           ROUND(p.purchase_value, 6) AS purchase_value,
+           strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts
+    FROM v ASOF LEFT JOIN p
+      ON v.user_id = p.user_id AND v.ts >= p.ts
+""")
 def q_asof_join(spark, sf_dir):
     """As-of join (temporal op absent in both the reference and Spark
     built-ins): every view event + the latest purchase at-or-before it per
@@ -610,6 +944,35 @@ def q_asof_join(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT 'n' || CAST(n_nationkey AS VARCHAR) || '.test' AS host,
+           CASE
+             WHEN n_nationkey % 3 = 0 THEN
+               '/*.zip$,/a/,/b' || CAST(n_nationkey AS VARCHAR) || '/'
+             WHEN n_nationkey % 3 = 1 THEN
+               '/mb' || CAST(n_nationkey AS VARCHAR) || '/'
+             ELSE ''
+           END AS prefixes_csv,
+           CASE
+             WHEN n_nationkey % 3 = 0 THEN '/a/open/'
+             WHEN n_nationkey % 3 = 1 THEN
+               '/mb' || CAST(n_nationkey AS VARCHAR) || '/ok$'
+             ELSE ''
+           END AS allows_csv,
+           CASE
+             WHEN n_nationkey % 3 = 0 THEN
+               '^/.*\\.zip$,^/a/,^/b' || CAST(n_nationkey AS VARCHAR)
+                   || '/,^/a/open/'
+             WHEN n_nationkey % 3 = 1 THEN
+               '^/mb' || CAST(n_nationkey AS VARCHAR) || '/,^/mb'
+                   || CAST(n_nationkey AS VARCHAR) || '/ok$'
+             ELSE ''
+           END AS regexes_csv,
+           CAST(CASE WHEN n_nationkey % 3 = 0
+                     THEN (n_nationkey % 5) * 1000
+                     ELSE 0 END AS BIGINT) AS crawl_delay_ms
+    FROM nation
+""")
 def q_robots_parse(spark, sf_dir):
     """robots.txt parsing as pure columns (windows resolve the stateful
     group grammar), incl. Allow directives and the precompiled RFC 9309
@@ -661,6 +1024,24 @@ def q_robots_parse(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT 'n' || CAST(n_nationkey AS VARCHAR) || '.test' AS host,
+           'url' AS kind,
+           'https://n' || CAST(n_nationkey AS VARCHAR)
+               || '.test/p' || CAST(i AS VARCHAR) AS url,
+           CASE WHEN i % 2 = 1
+                THEN '2024-01-0' || CAST(i AS VARCHAR) END AS lastmod
+    FROM nation,
+         UNNEST(generate_series(1, n_nationkey % 4 + 1)) AS t(i)
+    WHERE n_nationkey % 5 <> 0
+    UNION ALL
+    SELECT 'n' || CAST(n_nationkey AS VARCHAR) || '.test',
+           'sitemap',
+           'https://n' || CAST(n_nationkey AS VARCHAR)
+               || '.test/sm1.xml',
+           NULL
+    FROM nation WHERE n_nationkey % 5 = 0
+""")
 def q_sitemap_parse(spark, sf_dir):
     """Sitemap parsing as pure columns: urlset entries + nested index locs
     (kind='sitemap' rows recurse as ordinary frontier waves).  Analytic
@@ -706,6 +1087,60 @@ def q_sitemap_parse(spark, sf_dir):
     )
 
 
+# Script-detection probe rows (ADVICE r1): the driver documents corpus is
+# pure ASCII, so without these neither the engine's 'ar' branch nor its
+# 'zh' branch is ever exercised by the oracle compare — the oracles could
+# silently diverge on exactly the corpora this engine targets.  One shared
+# constant feeds BOTH the Spark input (createDataFrame) and the DuckDB
+# oracle (VALUES), so the two sides cannot drift.
+_SCRIPT_PROBE_ROWS = [
+    (9000001, "مرحبا بالعالم الجميل اليوم مرحبا"),    # Arabic-only → ar
+    (9000002, "你好 世界 今天 天气 很好 世界"),           # Han-only → zh
+    (9000003, "مرحبا hello مرحبا العالم"),             # ar ≥ latin → ar
+    (9000004, "the cat 你好 and the dog is on it"),    # han < latin → en
+    (9000005, "xyzzy plugh قط abcd"),                  # ar < latin → latin-other
+    (9000006, "٣٤٥ ٦٧٨"),                              # Arabic-Indic digits → ar
+    (9000007, "你好 مرحبا"),                            # ar AND han: ar wins (branch order)
+    (9000008, "the cat sat\n"),       # trailing newline: 3 tokens, not
+                                      # 3 + a phantom '' (ws_tokens fix)
+    (9000009, "a\x0bb the fox on"),   # \x0b IS whitespace in Java \s but
+                                      # NOT in RE2 \s — oracle uses the
+                                      # explicit class so both split it
+]
+
+_SCRIPT_PROBE_SQL = "SELECT * FROM (VALUES " + ", ".join(
+    f"(CAST({i} AS BIGINT), '{t}')" for i, t in _SCRIPT_PROBE_ROWS
+) + ") AS probe(doc_id, text)"
+
+_DOCS_WITH_PROBES_SQL = (
+    "SELECT doc_id, text FROM documents UNION ALL " + _SCRIPT_PROBE_SQL
+)
+
+
+def _docs_with_probes(spark, sf_dir):
+    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    probes = spark.createDataFrame(
+        _SCRIPT_PROBE_ROWS, "doc_id long, text string"
+    )
+    return d.unionByName(probes)
+
+
+# Language-ID CASE shared by the text_stats and training_prep oracles —
+# mirrors textstats.detect_lang branch-for-branch IN ORDER (ar before zh
+# before the latin branches; ADVICE r1 flagged the round-1 omission of ar)
+_LANG_CASE_SQL = """CASE
+    WHEN len(regexp_extract_all(text, '[\\x{0600}-\\x{06FF}]')) > 0
+         AND len(regexp_extract_all(text, '[\\x{0600}-\\x{06FF}]'))
+             >= len(regexp_extract_all(text, '[A-Za-z]')) THEN 'ar'
+    WHEN len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]')) > 0
+         AND len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]'))
+             >= len(regexp_extract_all(text, '[A-Za-z]')) THEN 'zh'
+    WHEN len(regexp_extract_all(text, '[A-Za-z]')) > 0 AND stop >= 0.05
+        THEN 'en'
+    WHEN len(regexp_extract_all(text, '[A-Za-z]')) > 0 THEN 'latin-other'
+    ELSE 'unknown' END"""
+
+
 # Capstone probe docs (round 4: the prep pipeline now gates on repetition
 # and strips corpus-level boilerplate, so each new stage needs rows that
 # exercise it — the driver corpus is healthy single-line text).  All are
@@ -737,6 +1172,124 @@ def _prep_probe_sql() -> str:
     ) + ") AS probe(doc_id, text)"
 
 
+@query(f"""
+    WITH tk AS (
+        SELECT doc_id, text,
+               list_filter(
+                   string_split_regex(coalesce(text, ''),
+                                      '[ \\t\\n\\x0b\\f\\r]+'),
+                   x -> x <> '') AS toks
+        FROM ({_DOCS_WITH_PROBES_SQL}
+              UNION ALL {_prep_probe_sql()})
+    ), t AS (
+        SELECT doc_id, text,
+               CASE WHEN len(toks) = 0 THEN 0.0 ELSE
+               CAST(len(list_filter(list_transform(toks, x -> lower(x)),
+                    x -> x IN ('the','a','an','and','or','of','to',
+                               'in','is','it','for','on','with','as',
+                               'at','by','be','this','that','from')))
+                    AS DOUBLE)
+               / len(toks) END AS stop,
+               CAST(len(regexp_extract_all(text,
+                    '[^\\p{{L}}\\p{{N}}_ \\t\\n\\x0b\\f\\r]'))
+                    AS DOUBLE) / length(text) AS punct,
+               CAST(length(text) AS DOUBLE) AS n
+        FROM tk
+    ), scored AS (
+        SELECT doc_id, text,
+               least(n / 500.0, 1.0) * 0.4
+               + greatest(0.0, 1.0 - punct * 4.0) * 0.3
+               + least(stop * 5.0, 1.0) * 0.3 AS quality,
+               {_LANG_CASE_SQL} AS lang_d
+        FROM t
+    ), kept AS (
+        SELECT doc_id, text FROM scored
+        WHERE lang_d = 'en' AND quality >= 0.55
+    ), rw AS (
+        -- repetition-gate twin (same tokenization as above)
+        SELECT doc_id, generate_subscripts(ws, 1) AS ord,
+               unnest(ws) AS w
+        FROM (
+            SELECT doc_id,
+                   list_filter(
+                       string_split_regex(coalesce(text, ''),
+                                          '[ \\t\\n\\x0b\\f\\r]+'),
+                       x -> x <> '') AS ws
+            FROM kept
+        )
+    ), rwc AS (
+        SELECT doc_id, w, count(*) AS c FROM rw GROUP BY 1, 2
+    ), rtopw AS (
+        SELECT doc_id, max(c) AS top_c FROM rwc GROUP BY doc_id
+    ), rwagg AS (
+        SELECT doc_id, count(*) AS n_w FROM rw GROUP BY 1
+    ), rg AS (
+        SELECT a.doc_id, a.w || ' ' || b.w AS g
+        FROM rw a JOIN rw b
+          ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
+    ), rgagg AS (
+        SELECT doc_id, count(*) AS n_g, count(DISTINCT g) AS nd_g
+        FROM rg GROUP BY 1
+    ), rep_kept AS (
+        SELECT k.doc_id, k.text
+        FROM kept k
+        LEFT JOIN rwagg USING (doc_id)
+        LEFT JOIN rtopw USING (doc_id)
+        LEFT JOIN rgagg USING (doc_id)
+        WHERE (CASE WHEN coalesce(rwagg.n_w, 0) = 0 THEN 0.0
+               ELSE rtopw.top_c * 1.0 / rwagg.n_w END) <= 0.35
+          AND (CASE WHEN coalesce(rgagg.n_g, 0) = 0 THEN 0.0
+               ELSE (rgagg.n_g - rgagg.nd_g) * 1.0 / rgagg.n_g
+               END) <= 0.2
+    ), ll AS (
+        -- corpus-level boilerplate line-dedup twin
+        SELECT doc_id, generate_subscripts(ls, 1) AS pos,
+               unnest(ls) AS line
+        FROM (
+            SELECT doc_id,
+                   string_split(coalesce(text, ''), chr(10)) AS ls
+            FROM rep_kept
+        )
+    ), lboiler AS (
+        SELECT line FROM ll
+        WHERE regexp_replace(line, '[ \\t\\x0b\\f\\r]', '', 'g')
+              <> ''
+        GROUP BY line
+        HAVING count(DISTINCT doc_id) > 2
+    ), lded AS (
+        SELECT ll.doc_id,
+               coalesce(string_agg(ll.line, chr(10) ORDER BY pos)
+                        FILTER (WHERE b.line IS NULL), '') AS text
+        FROM ll LEFT JOIN lboiler b ON ll.line = b.line
+        GROUP BY ll.doc_id
+    ), ded AS (
+        SELECT doc_id, text FROM (
+            SELECT doc_id, text,
+                   ROW_NUMBER() OVER (PARTITION BY md5(text)
+                                      ORDER BY doc_id) AS rn
+            FROM lded
+        ) WHERE rn = 1
+    ), toks AS (
+        -- chunker twin keeps trim+split (incl. edge empties, as
+        -- the engine chunker does) but with the EXPLICIT Java-\\s
+        -- class so \\x0b splits on both sides
+        SELECT doc_id,
+               string_split_regex(trim(text),
+                                  '[ \\t\\n\\x0b\\f\\r]+') AS tk
+        FROM ded WHERE text IS NOT NULL AND trim(text) <> ''
+    ), c AS (
+        SELECT doc_id, tk,
+               CAST(ceil(len(tk) / 48.0) AS INT) AS n_chunks
+        FROM toks
+    )
+    SELECT doc_id, CAST(i AS INT) AS chunk_id,
+           CAST(len(tk[i*48+1 : least(i*48+48, len(tk))]) AS INT)
+               AS n_tokens,
+           md5(array_to_string(
+               tk[i*48+1 : least(i*48+48, len(tk))], ' '))
+               AS chunk_md5
+    FROM c, UNNEST(generate_series(0, n_chunks - 1)) AS u(i)
+""")
 def q_training_prep(spark, sf_dir):
     """Capstone training-data prep pipeline, oracle-checked end to end:
     text quality/lang gate → repetition gate (Gopher-family signals) →
@@ -776,6 +1329,14 @@ def q_training_prep(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT c.c_nationkey AS nk, c.c_custkey, s.s_suppkey,
+           c.c_acctbal, s.s_acctbal AS lo
+    FROM customer c JOIN supplier s
+      ON c.c_nationkey = s.s_nationkey
+     AND c.c_acctbal >= s.s_acctbal
+     AND c.c_acctbal <= s.s_acctbal + 500.0
+""")
 def q_range_join(spark, sf_dir):
     """Range (point-in-interval) join via bucket decomposition — one hash
     shuffle instead of the nested-loop plan Catalyst picks for BETWEEN
@@ -800,6 +1361,26 @@ def q_range_join(spark, sf_dir):
     return out.select("nk", "c_custkey", "s_suppkey", "c_acctbal", "lo")
 
 
+# retired: the chunker runs inside training_prep (per-chunk md5)
+@query("""
+    WITH d AS (
+        SELECT doc_id,
+               string_split_regex(trim(text), '\\s+') AS toks
+        FROM documents
+        WHERE text IS NOT NULL AND trim(text) <> ''
+    ), c AS (
+        SELECT doc_id, toks,
+               CAST(ceil(len(toks) / 16.0) AS INT) AS n_chunks
+        FROM d
+    )
+    SELECT doc_id, CAST(i AS INT) AS chunk_id,
+           CAST(len(toks[i*16+1 : least(i*16+32, len(toks))])
+                AS INT) AS n_tokens,
+           array_to_string(
+               toks[i*16+1 : least(i*16+32, len(toks))], ' ')
+               AS chunk_text
+    FROM c, UNNEST(generate_series(0, n_chunks - 1)) AS t(i)
+""", retired=True, bench=True)
 def q_chunk_documents(spark, sf_dir):
     """Document chunking (training-data op): 32-token windows, stride 16 —
     pure columns (split → sequence → posexplode → slice), zero shuffle."""
@@ -809,6 +1390,17 @@ def q_chunk_documents(spark, sf_dir):
     return chunk_documents(d, size=32, stride=16)
 
 
+# retired: exact_dedup_stream drains to this answer; training_prep runs it
+@query("""
+    SELECT doc_id, source, prefix FROM (
+        SELECT doc_id, source, substring(text, 1, 16) AS prefix,
+               row_number() OVER (
+                   PARTITION BY md5(substring(text, 1, 16))
+                   ORDER BY doc_id ASC
+               ) AS rn
+        FROM documents
+    ) WHERE rn = 1
+""", retired=True, bench=True)
 def q_exact_dedup(spark, sf_dir):
     """Exact dedup: hash-groupBy, lowest-id survivor (training-data op)."""
     from no_fasel_scrapers_spark.operators.dedup import exact_dedup
@@ -819,44 +1411,39 @@ def q_exact_dedup(spark, sf_dir):
     return exact_dedup(d, text_col="prefix", id_col="doc_id")
 
 
-# Script-detection probe rows (ADVICE r1): the driver documents corpus is
-# pure ASCII, so without these neither the engine's 'ar' branch nor its
-# 'zh' branch is ever exercised by the oracle compare — the oracles could
-# silently diverge on exactly the corpora this engine targets.  One shared
-# constant feeds BOTH the Spark input (createDataFrame) and the DuckDB
-# oracle (VALUES), so the two sides cannot drift.
-_SCRIPT_PROBE_ROWS = [
-    (9000001, "مرحبا بالعالم الجميل اليوم مرحبا"),    # Arabic-only → ar
-    (9000002, "你好 世界 今天 天气 很好 世界"),           # Han-only → zh
-    (9000003, "مرحبا hello مرحبا العالم"),             # ar ≥ latin → ar
-    (9000004, "the cat 你好 and the dog is on it"),    # han < latin → en
-    (9000005, "xyzzy plugh قط abcd"),                  # ar < latin → latin-other
-    (9000006, "٣٤٥ ٦٧٨"),                              # Arabic-Indic digits → ar
-    (9000007, "你好 مرحبا"),                            # ar AND han: ar wins (branch order)
-    (9000008, "the cat sat\n"),       # trailing newline: 3 tokens, not
-                                      # 3 + a phantom '' (ws_tokens fix)
-    (9000009, "a\x0bb the fox on"),   # \x0b IS whitespace in Java \s but
-                                      # NOT in RE2 \s — oracle uses the
-                                      # explicit class so both split it
-]
-
-_SCRIPT_PROBE_SQL = "SELECT * FROM (VALUES " + ", ".join(
-    f"(CAST({i} AS BIGINT), '{t}')" for i, t in _SCRIPT_PROBE_ROWS
-) + ") AS probe(doc_id, text)"
-
-_DOCS_WITH_PROBES_SQL = (
-    "SELECT doc_id, text FROM documents UNION ALL " + _SCRIPT_PROBE_SQL
-)
-
-
-def _docs_with_probes(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    probes = spark.createDataFrame(
-        _SCRIPT_PROBE_ROWS, "doc_id long, text string"
+@query(f"""
+    WITH tk AS (
+        -- ws_tokens twin: maximal non-whitespace runs; explicit
+        -- Java-\\s class because RE2's \\s excludes \\x0b
+        SELECT doc_id, text,
+               list_filter(
+                   string_split_regex(coalesce(text, ''),
+                                      '[ \\t\\n\\x0b\\f\\r]+'),
+                   x -> x <> '') AS toks
+        FROM ({_DOCS_WITH_PROBES_SQL})
+    ), t AS (
+        SELECT doc_id, text,
+               CAST(len(toks) AS INTEGER) AS n_tokens_ws,
+               CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9 \\t\\n\\x0b\\f\\r]')) AS INTEGER) AS n_tokens_bpe,
+               CAST(len(regexp_extract_all(text, '[^\\p{{L}}\\p{{N}}_ \\t\\n\\x0b\\f\\r]')) AS DOUBLE) / length(text) AS punct,
+               CASE WHEN len(toks) = 0 THEN 0.0 ELSE
+               CAST(len(list_filter(list_transform(toks, x -> lower(x)),
+                    x -> x IN ('the','a','an','and','or','of','to','in','is','it','for',
+                               'on','with','as','at','by','be','this','that','from')))
+                    AS DOUBLE)
+               / len(toks) END AS stop,
+               CAST(length(text) AS DOUBLE) AS n
+        FROM tk
     )
-    return d.unionByName(probes)
-
-
+    SELECT doc_id, n_tokens_ws, n_tokens_bpe,
+           round(punct, 9) AS punct_r,
+           round(stop, 9) AS stop_r,
+           {_LANG_CASE_SQL} AS lang_detected,
+           round(least(n / 500.0, 1.0) * 0.4
+                 + greatest(0.0, 1.0 - punct * 4.0) * 0.3
+                 + least(stop * 5.0, 1.0) * 0.3, 9) AS quality_r
+    FROM t
+""", bench=True)
 def q_text_stats(spark, sf_dir):
     """Token counting, punct/stopword ratios, lang-id, quality — columnar.
     Input = documents ∪ script probes so the ar/zh branches are pinned by
@@ -901,6 +1488,75 @@ _REP_PROBE_SQL = "SELECT * FROM (VALUES " + ", ".join(
 ) + ") AS probe(doc_id, text)"
 
 
+@query(f"""
+    WITH d AS (
+        SELECT doc_id, text FROM documents
+        UNION ALL {_REP_PROBE_SQL}
+    ), w AS (
+        -- a token is a maximal non-whitespace run: split on the
+        -- EXPLICIT Java-\\s class (RE2's \\s excludes \\x0b) and
+        -- drop empties (they can only appear at the edges) —
+        -- matches the engine's tokenizer incl. leading/trailing tabs,
+        -- \\x0b, whitespace-only, and NULL text
+        SELECT doc_id, generate_subscripts(ws, 1) AS ord,
+               unnest(ws) AS w
+        FROM (
+            SELECT doc_id,
+                   list_filter(
+                       string_split_regex(coalesce(text, ''),
+                                          '[ \\t\\n\\x0b\\f\\r]+'),
+                       x -> x <> '') AS ws
+            FROM d
+        )
+    ), wc AS (
+        SELECT doc_id, w, count(*) AS c FROM w GROUP BY 1, 2
+    ), topw AS (
+        SELECT doc_id, w AS top_word, c AS top_c FROM (
+            SELECT doc_id, w, c, row_number() OVER (
+                PARTITION BY doc_id ORDER BY c DESC, w ASC
+            ) AS rn FROM wc
+        ) WHERE rn = 1
+    ), wagg AS (
+        SELECT doc_id, count(*) AS n_w, count(DISTINCT w) AS nd_w
+        FROM w GROUP BY 1
+    ), g AS (
+        SELECT a.doc_id, a.w || ' ' || b.w AS g
+        FROM w a JOIN w b
+          ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
+    ), gc AS (
+        SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2
+    ), topg AS (
+        SELECT doc_id, g AS top_2gram, c AS top_c FROM (
+            SELECT doc_id, g, c, row_number() OVER (
+                PARTITION BY doc_id ORDER BY c DESC, g ASC
+            ) AS rn FROM gc
+        ) WHERE rn = 1
+    ), gagg AS (
+        SELECT doc_id, count(*) AS n_g, count(DISTINCT g) AS nd_g
+        FROM g GROUP BY 1
+    )
+    SELECT d.doc_id,
+           CAST(coalesce(wagg.n_w, 0) AS INTEGER) AS n_words,
+           round(CASE WHEN coalesce(wagg.n_w, 0) = 0 THEN 0.0
+                 ELSE (wagg.n_w - wagg.nd_w) * 1.0 / wagg.n_w
+                 END, 9) AS dup_word_r,
+           topw.top_word,
+           round(CASE WHEN coalesce(wagg.n_w, 0) = 0 THEN 0.0
+                 ELSE topw.top_c * 1.0 / wagg.n_w
+                 END, 9) AS top_word_r,
+           round(CASE WHEN coalesce(gagg.n_g, 0) = 0 THEN 0.0
+                 ELSE (gagg.n_g - gagg.nd_g) * 1.0 / gagg.n_g
+                 END, 9) AS dup_2gram_r,
+           topg.top_2gram,
+           round(CASE WHEN coalesce(gagg.n_g, 0) = 0 THEN 0.0
+                 ELSE topg.top_c * 1.0 / gagg.n_g
+                 END, 9) AS top_2gram_r
+    FROM d
+    LEFT JOIN wagg USING (doc_id)
+    LEFT JOIN topw USING (doc_id)
+    LEFT JOIN gagg USING (doc_id)
+    LEFT JOIN topg USING (doc_id)
+""", bench=True)
 def q_repetition_stats(spark, sf_dir):
     """Gopher-family repetition quality signals (training-data op): dup
     word/2-gram fractions and most-frequent word/2-gram coverage — one
@@ -958,6 +1614,36 @@ def _line_probe_sql() -> str:
     ) + ") AS probe(doc_id, text)"
 
 
+@query(f"""
+    WITH d AS (
+        SELECT doc_id, text FROM documents
+        UNION ALL {_line_probe_sql()}
+    ), l AS (
+        SELECT doc_id, generate_subscripts(ls, 1) AS pos,
+               unnest(ls) AS line
+        FROM (
+            SELECT doc_id,
+                   string_split(coalesce(text, ''), chr(10)) AS ls
+            FROM d
+        )
+    ), boiler AS (
+        SELECT line FROM l
+        WHERE regexp_replace(line, '[ \t\x0b\f\r]', '', 'g') <> ''
+        GROUP BY line
+        HAVING count(DISTINCT doc_id) > 2
+    ), marked AS (
+        SELECT l.doc_id, l.pos, l.line,
+               (b.line IS NOT NULL) AS boiler
+        FROM l LEFT JOIN boiler b ON l.line = b.line
+    )
+    SELECT doc_id,
+           coalesce(string_agg(line, chr(10) ORDER BY pos)
+                    FILTER (WHERE NOT boiler), '') AS text,
+           CAST(count(*) AS INTEGER) AS n_lines,
+           CAST(count(*) FILTER (WHERE boiler) AS INTEGER)
+               AS n_removed
+    FROM marked GROUP BY doc_id
+""", bench=True)
 def q_line_dedup(spark, sf_dir):
     """CCNet-style corpus-level boilerplate removal (training-data op):
     lines occurring in >2 distinct docs are dropped from every doc; text
@@ -971,6 +1657,27 @@ def q_line_dedup(spark, sf_dir):
     return line_dedup(d, max_docs=2)
 
 
+# retired: jaccard_verify runs inside minhash_dedup and near_dup_groups
+@query("""
+    WITH g AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   generate_series(1, greatest(
+                       len(string_split_regex(trim(lower(text)), '\\s+')) - 2, 1)),
+                   i -> array_to_string(
+                       (string_split_regex(trim(lower(text)), '\\s+'))[i:i+2], ' ')
+               )) AS grams
+        FROM documents
+    )
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           round(
+               CASE WHEN len(list_distinct(list_concat(a.grams, b.grams))) = 0
+                    THEN 1.0
+                    ELSE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+                         / len(list_distinct(list_concat(a.grams, b.grams)))
+               END, 6) AS jaccard_r
+    FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
+""", retired=True)
 def q_ngram_jaccard(spark, sf_dir):
     """Exact word-3-gram Jaccard on adjacent-id candidate pairs."""
     from no_fasel_scrapers_spark.operators.dedup import jaccard_verify
@@ -985,6 +1692,14 @@ def q_ngram_jaccard(spark, sf_dir):
     )
 
 
+# retired: events_hourly_stream drains to this same batch answer
+@query("""
+    SELECT event_type,
+           strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+    FROM events GROUP BY event_type, date_trunc('hour', ts)
+""", retired=True, bench=True)
 def q_events_hourly(spark, sf_dir):
     """Windowed rollup (streaming-analog tumbling window, batch form)."""
     ev = _t(spark, sf_dir, "events")
@@ -997,6 +1712,13 @@ def q_events_hourly(spark, sf_dir):
     )
 
 
+@query("""
+    SELECT event_type,
+           strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
+    FROM events GROUP BY event_type, date_trunc('hour', ts)
+""", bench=True)
 def q_events_hourly_stream(spark, sf_dir):
     """The SAME hourly rollup as ``events_hourly``, but computed by
     Structured Streaming (streaming/ingest.py): file-source stream over
@@ -1075,6 +1797,14 @@ def _stream_dedup_probe_sql() -> str:
     )
 
 
+@query(f"""
+    SELECT DISTINCT md5(text) AS text_md5,
+           CAST(length(text) AS INTEGER) AS text_len
+    FROM (
+        SELECT text FROM documents
+        UNION ALL {_stream_dedup_probe_sql()}
+    )
+""", bench=True)
 def q_exact_dedup_stream(spark, sf_dir):
     """Streaming twin of ``exact_dedup`` (streaming/ingest.py): file-source
     stream over the documents parquet + probe file, synthetic event time,
@@ -1150,6 +1880,16 @@ def q_exact_dedup_stream(spark, sf_dir):
     return spark.table(name)
 
 
+# retired: with_media_metadata is media_features' first stage
+@query("""
+    SELECT doc_id,
+           CAST(16 + doc_id % 16 AS INTEGER) AS width,
+           CAST(8 + doc_id % 8 AS INTEGER) AS height,
+           CAST(1 + doc_id % 3 AS INTEGER) AS channels,
+           CAST(9 + (16 + doc_id % 16) * (8 + doc_id % 8) * (1 + doc_id % 3) AS BIGINT) AS n_bytes,
+           'nfsi-fake' AS codec
+    FROM documents
+""", retired=True, bench=True)
 def q_media_metadata(spark, sf_dir):
     """Multimodal plumbing: binary payload → typed metadata struct.
 
@@ -1184,6 +1924,7 @@ def q_media_metadata(spark, sf_dir):
     )
 
 
+@query(_analytic("audio_features_sql"), bench=True)
 def q_audio_features(spark, sf_dir):
     """Audio modality: WAV decode + signal features, for real.
 
@@ -1270,6 +2011,26 @@ def q_audio_features(spark, sf_dir):
     )
 
 
+# retired: ivf_ann ranks its probed cells by the same exact cosine
+@query("""
+    WITH q AS (
+        SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
+        FROM embeddings WHERE vec_id < 5
+    ), s AS (
+        SELECT q.query_id, e.vec_id,
+               list_cosine_similarity(e.embedding::DOUBLE[], q.qv) AS c
+        FROM embeddings e, q
+    )
+    SELECT query_id, vec_id, CAST(rn AS INTEGER) AS rank,
+           round(c, 4) AS cosine_r
+    FROM (
+        SELECT query_id, vec_id, c,
+               row_number() OVER (
+                   PARTITION BY query_id ORDER BY c DESC, vec_id ASC
+               ) AS rn
+        FROM s
+    ) WHERE rn <= 10
+""", retired=True, bench=True)
 def q_ann_bruteforce(spark, sf_dir):
     """Exact cosine top-k: broadcast query batch, one corpus pass."""
     from no_fasel_scrapers_spark.operators.similarity import brute_force_topk
@@ -1288,9 +2049,19 @@ def q_ann_bruteforce(spark, sf_dir):
     )
 
 
+# retired: embedding_near_dup_lsh filters its pairs by the same cosine_sim
+@query("""
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           round(list_cosine_similarity(a.embedding::DOUBLE[],
+                                        b.embedding::DOUBLE[]), 4) AS cosine_r
+    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+    WHERE a.vec_id < 100 AND b.vec_id < 100
+      AND list_cosine_similarity(a.embedding::DOUBLE[],
+                                 b.embedding::DOUBLE[]) >= 0.2
+""", retired=True)
 def q_cosine_pairs_exact(spark, sf_dir):
     """Embedding near-dup, exact path: all-pairs cosine over a bounded slice
-    (the LSH-bucketed variant is the scale path, rows-only below)."""
+    (the LSH-bucketed ``embedding_near_dup_lsh`` is the scale path)."""
     from no_fasel_scrapers_spark.operators.dedup import cosine_sim
 
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100).select(
@@ -1313,6 +2084,7 @@ def q_cosine_pairs_exact(spark, sf_dir):
 # correctness scale, rendered as VALUES relations (same pattern as the
 # robots_parse/sitemap_parse analytic oracles).
 
+@query(_analytic("minhash_dedup_sql"), bench=True)
 def q_minhash_dedup(spark, sf_dir):
     """MinHash+LSH near-dup dedup (shingle→minhash→band→bucket-join)."""
     from no_fasel_scrapers_spark.operators.dedup import minhash_dedup
@@ -1321,6 +2093,7 @@ def q_minhash_dedup(spark, sf_dir):
     return minhash_dedup(d).select("doc_id", "lang")
 
 
+@query(_analytic("substring_dedup_sql"), bench=True)
 def q_substring_dedup(spark, sf_dir):
     """ExactSubstr corpus dedup (Lee et al. 2022, training-data op): any
     32-token run occurring twice anywhere in the corpus survives only at
@@ -1340,6 +2113,7 @@ def q_substring_dedup(spark, sf_dir):
     )
 
 
+@query(_analytic("near_dup_groups_sql"), bench=True)
 def q_near_dup_groups(spark, sf_dir):
     """Transitive near-dup group resolution: verified MinHash pairs →
     alternating large-star/small-star connected components (Kiveris et
@@ -1371,6 +2145,7 @@ def q_near_dup_groups(spark, sf_dir):
     return out.select("doc_id", "group_id", "is_survivor")
 
 
+@query(_analytic("decontaminate_sql"), bench=True)
 def q_decontaminate(spark, sf_dir):
     """Train/test n-gram decontamination (operators/corpus.py): test set =
     doc_id % 17 == 0, flag every training doc sharing a word 4-gram with
@@ -1385,6 +2160,7 @@ def q_decontaminate(spark, sf_dir):
     return decontaminate(train, test, n=4)
 
 
+@query(_analytic("sample_stratified_sql"), bench=True)
 def q_sample_stratified(spark, sf_dir):
     """Deterministic per-language hash sampling (operators/corpus.py):
     keep fractions en=0.5 zh=0.25 fr=0.1 (default 0.05) keyed on
@@ -1405,6 +2181,19 @@ def q_sample_stratified(spark, sf_dir):
     )
 
 
+@query("""
+    WITH terms AS (
+        SELECT unnest(list_distinct(
+                   string_split_regex(lower(trim(text)), '\\s+')
+               )) AS term
+        FROM documents WHERE text IS NOT NULL
+    )
+    SELECT term, COUNT(*) AS doc_freq
+    FROM terms WHERE term <> ''
+    GROUP BY term
+    ORDER BY doc_freq DESC, term
+    LIMIT 100
+""", bench=True)
 def q_vocab_top_terms(spark, sf_dir):
     """Top-100 terms by document frequency (operators/corpus.py): one
     explode + map-side-combined shuffle on term + TakeOrderedAndProject;
@@ -1414,6 +2203,7 @@ def q_vocab_top_terms(spark, sf_dir):
     return vocab_top_terms(_t(spark, sf_dir, "documents"), k=100)
 
 
+@query(_analytic("simhash_pairs_sql"), bench=True)
 def q_simhash_pairs(spark, sf_dir):
     """SimHash near-dup: 16-bit chunk blocking + bit_count verify."""
     from no_fasel_scrapers_spark.operators.dedup import (
@@ -1425,6 +2215,7 @@ def q_simhash_pairs(spark, sf_dir):
     return simhash_near_pairs(with_simhash(d), max_hamming=16)
 
 
+@query(_analytic("ivf_ann_sql"))
 def q_ivf_ann(spark, sf_dir):
     """IVF/LSH-bucketed ANN: deterministic hyperplane cells, multi-probe.
     Analytic oracle (oracle/analytic.py) mirrors cells + probes + exact
@@ -1446,6 +2237,8 @@ def q_ivf_ann(spark, sf_dir):
     )
 
 
+# retired: the IVF operator it measures is checked via ivf_ann
+@query(_analytic("ivf_recall_sql"), retired=True)
 def q_ivf_recall(spark, sf_dir):
     """Recall@5 CURVE of the IVF multi-probe ANN path vs exact brute
     force, at probe depths 1/2/3 (Hamming radius of cells probed), with
@@ -1560,6 +2353,7 @@ def _with_planted_near_dups(e):
     return e.select("vec_id", "embedding").unionByName(planted)
 
 
+@query(_analytic("embedding_near_dup_sql"))
 def q_embedding_near_dup_lsh(spark, sf_dir):
     """Cosine near-dup via band-OR amplified hyperplane LSH + exact verify
     over the planted-near-dup corpus (L=10 tables × 6 bits → recall ≈0.95
@@ -1576,6 +2370,8 @@ def q_embedding_near_dup_lsh(spark, sf_dir):
     return out.select("id_a", "id_b", F.round("cosine", 4).alias("cosine_r"))
 
 
+# retired: the LSH operator it measures is checked via embedding_near_dup_lsh
+@query(_analytic("embedding_near_dup_recall_sql"), retired=True)
 def q_embedding_near_dup_recall(spark, sf_dir):
     """Measured recall of the LSH near-dup path against the exact all-pairs
     truth on the planted corpus — the round-1 recall defect made visible:
@@ -1614,6 +2410,7 @@ def q_embedding_near_dup_recall(spark, sf_dir):
     )
 
 
+@query(_analytic("charset_decode_sql"), bench=True)
 def q_charset_decode(spark, sf_dir):
     """Legacy-encoding ingestion (round 5): charset sniff + decode at the
     html-bytes boundary (functions/charset.py — WHATWG ladder: BOM →
@@ -1664,6 +2461,7 @@ def q_charset_decode(spark, sf_dir):
     )
 
 
+@query(_analytic("doc_fingerprints_sql"))
 def q_doc_fingerprints(spark, sf_dir):
     """Document fingerprinting: whole-doc xxhash64 + shingle winnow."""
     from no_fasel_scrapers_spark.operators.textstats import (
@@ -1679,6 +2477,7 @@ def q_doc_fingerprints(spark, sf_dir):
     )
 
 
+@query(_analytic("media_features_sql"))
 def q_media_features(spark, sf_dir):
     """Multimodal feature extraction: binary → fixed-length array<float>
     (pixel-histogram stand-in for a real embedding; numpy per Arrow batch).
@@ -1789,6 +2588,7 @@ def q_media_features(spark, sf_dir):
     )
 
 
+@query(_analytic("video_frames_sql"))
 def q_video_frames(spark, sf_dir):
     """Video frame-sampling through a REAL container (round 5): per-doc
     MJPEG-in-AVI payloads (operators/avi.py — RIFF walk, ``00dc`` frames
@@ -1870,6 +2670,57 @@ def q_video_frames(spark, sf_dir):
     )
 
 
+@query("""
+    WITH cur AS (
+        SELECT CAST(l_orderkey AS VARCHAR) AS series_id,
+               l_orderkey AS k,
+               CAST(row_number() OVER (
+                   PARTITION BY l_orderkey ORDER BY l_linenumber
+               ) AS INT) AS num
+        FROM lineitem
+    ), st AS (
+        SELECT series_id, k, COUNT(*) AS cur_count,
+               CASE WHEN k % 3 = 0 THEN CAST(k % 4 AS INT)
+                    ELSE 0 END AS old_count
+        FROM cur GROUP BY series_id, k
+    ), nn AS (
+        SELECT c.series_id, COUNT(*) AS n_new
+        FROM cur c JOIN st USING (series_id)
+        WHERE st.cur_count <> st.old_count AND c.num > st.old_count
+        GROUP BY c.series_id
+    ), totals AS (
+        SELECT st.series_id, st.k, st.cur_count,
+               CAST(st.old_count AS INT) AS old_count,
+               CAST(st.old_count + COALESCE(nn.n_new, 0) AS INT)
+                   AS episodes_total,
+               CAST(COALESCE(nn.n_new, 0) AS INT) AS n_new
+        FROM st LEFT JOIN nn USING (series_id)
+    ), old_eps AS (
+        SELECT series_id,
+               'e' || CAST(k AS VARCHAR) || 'x'
+                   || CAST(j AS VARCHAR) AS eid,
+               CAST(j AS INT) AS num,
+               'old' || CAST(k AS VARCHAR) || '-'
+                   || CAST(j AS VARCHAR) AS src
+        FROM (SELECT series_id, k, old_count FROM st
+              WHERE old_count > 0),
+             UNNEST(generate_series(1, old_count)) AS u(j)
+    ), merged AS (
+        SELECT * FROM old_eps
+        UNION ALL
+        SELECT c.series_id,
+               'e' || CAST(c.k AS VARCHAR) || 'x'
+                   || CAST(c.num AS VARCHAR),
+               c.num,
+               'src' || CAST(c.k AS VARCHAR) || '-'
+                   || CAST(c.num AS VARCHAR)
+        FROM cur c JOIN totals t USING (series_id)
+        WHERE t.cur_count <> t.old_count AND c.num > t.old_count
+    )
+    SELECT m.series_id, m.eid, m.num, m.src,
+           t.old_count, t.episodes_total, t.n_new
+    FROM merged m JOIN totals t USING (series_id)
+""")
 def q_anime_delta(spark, sf_dir):
     """Anime episode-list incremental merge (FaselAnimeScraper.py:112-124
     semantics, operators/merge.anime_episode_delta): unchanged series pass
@@ -1930,6 +2781,7 @@ def q_anime_delta(spark, sf_dir):
     )
 
 
+@query(_analytic("crawl_e2e_sql"))
 def q_crawl_e2e(spark, sf_dir):
     """The crawl engine end-to-end on the deterministic synthetic site
     fixture: frontier waves, robots, bloom dedup, politeness, extraction.
@@ -1965,6 +2817,7 @@ def q_crawl_e2e(spark, sf_dir):
     )
 
 
+@query(_analytic("link_pagerank_sql"))
 def q_link_pagerank(spark, sf_dir):
     """Fixed-point PageRank over the crawled link graph as a frontier /
     recrawl priority signal (operators/linkrank.py): crawl the fixture
@@ -2005,6 +2858,7 @@ def q_link_pagerank(spark, sf_dir):
     return out
 
 
+@query(_analytic("recrawl_delta_sql"))
 def q_recrawl_delta(spark, sf_dir):
     """Recrawl/invalidation cycle (the one crawl semantic VERDICT r4 noted
     had no registry row): crawl the fixture site, invalidate a
@@ -2078,6 +2932,14 @@ def q_recrawl_delta(spark, sf_dir):
     )
 
 
+@query("""
+SELECT source AS host,
+       COUNT(*) AS n_pages,
+       CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes
+FROM documents
+GROUP BY source
+ORDER BY host
+""")
 def q_warc_roundtrip(spark, sf_dir):
     """WARC source/sink (sources/warc.py, Python DataSource API):
     documents → pages schema → WARC sink → WARC scan → per-host rollup.
@@ -2113,6 +2975,46 @@ def q_warc_roundtrip(spark, sf_dir):
     )
 
 
+def _pii_scrub_sql() -> str:
+    """Oracle twin of q_pii_scrub, built from the SAME pattern constants
+    so the two sides cannot drift (DuckDB regexp_replace needs the 'g'
+    flag — Spark replaces all occurrences by default)."""
+    from no_fasel_scrapers_spark.operators.quality import PII_PATTERNS
+
+    pats = {name: pat for name, pat, _ in PII_PATTERNS}
+    clean = "t"
+    for name, pat, repl in PII_PATTERNS:
+        clean = f"regexp_replace({clean}, '{pat}', '{repl}', 'g')"
+    return f"""
+        WITH planted AS (
+            SELECT doc_id,
+                   COALESCE(text, '')
+                   || CASE WHEN doc_id % 3 = 0
+                           THEN ' contact user' || CAST(doc_id AS VARCHAR)
+                                || '@example.com' ELSE '' END
+                   || CASE WHEN doc_id % 4 = 1
+                           THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR)
+                                || '.7 seen' ELSE '' END
+                   || CASE WHEN doc_id % 5 = 2
+                           THEN ' call +9715550'
+                                || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
+                           ELSE '' END
+                   AS t
+            FROM documents
+        )
+        SELECT doc_id,
+               CAST(len(regexp_extract_all(t, '{pats["email"]}')) AS BIGINT)
+                   AS n_email,
+               CAST(len(regexp_extract_all(t, '{pats["ip"]}')) AS BIGINT)
+                   AS n_ip,
+               CAST(len(regexp_extract_all(t, '{pats["phone"]}')) AS BIGINT)
+                   AS n_phone,
+               md5({clean}) AS clean_md5
+        FROM planted
+    """
+
+
+@query(_pii_scrub_sql, bench=True)
 def q_pii_scrub(spark, sf_dir):
     """PII redaction (operators/quality.pii_scrub): plant deterministic
     emails / IPv4s / phone numbers into the documents text with pure
@@ -2162,1055 +3064,33 @@ def q_pii_scrub(spark, sf_dir):
     )
 
 
-def _pii_scrub_sql() -> str:
-    """Oracle twin of q_pii_scrub, built from the SAME pattern constants
-    so the two sides cannot drift (DuckDB regexp_replace needs the 'g'
-    flag — Spark replaces all occurrences by default)."""
-    from no_fasel_scrapers_spark.operators.quality import PII_PATTERNS
-
-    pats = {name: pat for name, pat, _ in PII_PATTERNS}
-    clean = "t"
-    for name, pat, repl in PII_PATTERNS:
-        clean = f"regexp_replace({clean}, '{pat}', '{repl}', 'g')"
-    return f"""
-        WITH planted AS (
-            SELECT doc_id,
-                   COALESCE(text, '')
-                   || CASE WHEN doc_id % 3 = 0
-                           THEN ' contact user' || CAST(doc_id AS VARCHAR)
-                                || '@example.com' ELSE '' END
-                   || CASE WHEN doc_id % 4 = 1
-                           THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-                                || '.7 seen' ELSE '' END
-                   || CASE WHEN doc_id % 5 = 2
-                           THEN ' call +9715550'
-                                || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                           ELSE '' END
-                   AS t
-            FROM documents
-        )
-        SELECT doc_id,
-               CAST(len(regexp_extract_all(t, '{pats["email"]}')) AS BIGINT)
-                   AS n_email,
-               CAST(len(regexp_extract_all(t, '{pats["ip"]}')) AS BIGINT)
-                   AS n_ip,
-               CAST(len(regexp_extract_all(t, '{pats["phone"]}')) AS BIGINT)
-                   AS n_phone,
-               md5({clean}) AS clean_md5
-        FROM planted
-    """
-
+# ---------------------------------------------------------------------------
+# driver contract: views of REGISTRY
+# ---------------------------------------------------------------------------
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Exactly 50 entries — the driver records the first 50 registry rows
-    (round 2's 53-entry registry dropped its tail off the record), so the
-    registry is pinned to the cap with every query oracle-checked — as of
-    round 4 including ``crawl_e2e`` (per-(wave, site, role) rollup vs the
-    independent Python crawl scheduler, 50/50).  Three round-2
-    entries were retired as redundant (their operators stay oracle-pinned
-    via ``retired_queries()`` + tests/test_retired_queries.py):
-
-    - ``cosine_pairs_exact`` — subsumed by ``embedding_near_dup_recall``'s
-      exact-cosine truth side;
-    - ``events_hourly`` — byte-identical semantics to the oracle-checked
-      ``events_hourly_stream`` (availableNow drains to the batch answer);
-    - ``ngram_jaccard`` — the jaccard-verify stage runs inside the
-      oracle-checked ``minhash_dedup`` and ``near_dup_groups``.
-
-    Two more retired in round 3 to make room for the new corpus-curation
-    operators (``repetition_stats``, ``line_dedup``):
-
-    - ``ann_bruteforce`` — exact cosine top-k is the oracle-checked truth
-      side of ``ivf_recall`` (same brute_force_topk call);
-    - ``chunk_documents`` — the chunker runs inside the oracle-checked
-      ``training_prep`` capstone (per-chunk md5 pins its output).
-
-    One more retired in round 4 to make room for the streaming dedup twin
-    (``exact_dedup_stream`` — closes the batch/streaming asymmetry for the
-    corpus operators):
-
-    - ``intersect_keys`` — plain built-in ``INTERSECT``, no engine code of
-      its own; stays oracle-pinned in tests/test_retired_queries.py.
-
-    One more retired in round 5 to make room for the recrawl/invalidation
-    cycle (``recrawl_delta`` — the one crawl semantic without a registry
-    row, VERDICT r4 #5):
-
-    - ``embedding_near_dup_recall`` — a 1-row recall metric whose exact
-      truth side duplicates the already-retired ``cosine_pairs_exact``;
-      the LSH operator it measures stays registry-checked via
-      ``embedding_near_dup_lsh``.
-
-    And a second round-5 retirement to make room for PII redaction
-    (``pii_scrub`` — the scrubbing stage every corpus-release pipeline
-    runs; no registry row covered it):
-
-    - ``ivf_recall`` — the same retire-the-recall-metric argument as
-      ``embedding_near_dup_recall``: a 3-row recall/scan curve whose
-      exact truth side is the retired ``ann_bruteforce``; the IVF
-      operator it measures stays registry-checked via ``ivf_ann``.
-
-    And a third round-5 retirement to make room for the audio modality
-    (``audio_features`` — real WAV/RIFF PCM decode, the one multimodal
-    lane without a registry row now that PNG/JPEG/GIF cover images):
-
-    - ``media_metadata`` — ``with_media_metadata`` is the FIRST stage of
-      the registry-checked ``media_features`` (same operator, same
-      mapInPandas path, plus codec/width/height/channels in its output),
-      so the metadata struct stays fully registry-checked there.
-
-    And a fourth round-5 retirement to make room for the video modality
-    (``video_frames`` — real MJPEG-in-AVI container through
-    ``sample_frames``, the one modality without a registry row now that
-    images and audio have theirs):
-
-    - ``exact_dedup`` — the same twin-coverage argument as the round-2
-      ``events_hourly`` retirement: the registry-checked
-      ``exact_dedup_stream`` drains to the byte-identical batch DISTINCT
-      answer (its oracle IS the batch semantics), and exact dedup also
-      runs as a pinned stage inside the oracle-checked ``training_prep``
-      capstone, so the operator stays doubly registry-checked.
-    """
-    return {
-        "pricing_summary": q_pricing_summary,
-        "revenue_by_nation": q_revenue_by_nation,
-        "top_orders_per_customer": q_top_orders_per_customer,
-        "link_pagerank": q_link_pagerank,
-        "union_precedence_old_wins": q_union_precedence_old_wins,
-        "episode_delta": q_episode_delta,
-        "anime_delta": q_anime_delta,
-        "nested_assembly": q_nested_assembly,
-        "integrity_manifest": q_integrity_manifest,
-        "substring_dedup": q_substring_dedup,
-        "url_category": q_url_category,
-        "title_cleanups": q_title_cleanups,
-        "normalized_title_join": q_normalized_title_join,
-        "rollup_status_priority": q_rollup_status_priority,
-        "charset_decode": q_charset_decode,
-        "trending_id_join": q_trending_id_join,
-        "genre_scrub_prune": q_genre_scrub_prune,
-        "all_content_index": q_all_content_index,
-        "pagination_expand": q_pagination_expand,
-        "frontier_take_wave": q_frontier_take_wave,
-        "robots_gate": q_robots_gate,
-        "politeness_schedule": q_politeness_schedule,
-        "seen_filter_dedup": q_seen_filter_dedup,
-        "url_canonicalize": q_url_canonicalize,
-        "asof_join": q_asof_join,
-        "range_join": q_range_join,
-        "robots_parse": q_robots_parse,
-        "sitemap_parse": q_sitemap_parse,
-        "warc_roundtrip": q_warc_roundtrip,
-        "audio_features": q_audio_features,
-        "media_features": q_media_features,
-        "training_prep": q_training_prep,
-        "video_frames": q_video_frames,
-        "exact_dedup_stream": q_exact_dedup_stream,
-        "text_stats": q_text_stats,
-        "repetition_stats": q_repetition_stats,
-        "line_dedup": q_line_dedup,
-        "events_hourly_stream": q_events_hourly_stream,
-        "minhash_dedup": q_minhash_dedup,
-        "near_dup_groups": q_near_dup_groups,
-        "decontaminate": q_decontaminate,
-        "sample_stratified": q_sample_stratified,
-        "vocab_top_terms": q_vocab_top_terms,
-        "simhash_pairs": q_simhash_pairs,
-        "ivf_ann": q_ivf_ann,
-        "pii_scrub": q_pii_scrub,
-        "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-        "recrawl_delta": q_recrawl_delta,
-        "doc_fingerprints": q_doc_fingerprints,
-        "crawl_e2e": q_crawl_e2e,
-    }
-
-
-def retired_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Round-2 registry entries retired to fit the driver's 50-row record.
-
-    Each is still a working query with a DuckDB oracle
-    (``retired_oracle_sql()``); tests/test_retired_queries.py keeps the
-    full value-level comparison green so no correctness signal was lost
-    by trimming the driver-visible registry."""
-    return {
-        "ngram_jaccard": q_ngram_jaccard,
-        "events_hourly": q_events_hourly,
-        "cosine_pairs_exact": q_cosine_pairs_exact,
-        "ann_bruteforce": q_ann_bruteforce,
-        "chunk_documents": q_chunk_documents,
-        "intersect_keys": q_intersect_keys,
-        "embedding_near_dup_recall": q_embedding_near_dup_recall,
-        "ivf_recall": q_ivf_recall,
-        "media_metadata": q_media_metadata,
-        "exact_dedup": q_exact_dedup,
-        # retired round 5 for charset_decode: window-function coverage
-        # stays registry-checked via top_orders_per_customer
-        "sessionize_events": q_sessionize_events,
-        # retired round 5 for link_pagerank: the left_anti shape stays
-        # registry-checked via seen_filter_dedup's exact backstop and
-        # decontaminate's anti-join
-        "customers_without_orders": q_customers_without_orders,
-        # retired round 5 for substring_dedup: the broadcast dict-decode
-        # equi-join shape (O9) stays registry-checked via trending_id_join
-        # and normalized_title_join
-        "event_type_decode": q_event_type_decode,
-    }
-
-
-# Language-ID CASE shared by the text_stats and training_prep oracles —
-# mirrors textstats.detect_lang branch-for-branch IN ORDER (ar before zh
-# before the latin branches; ADVICE r1 flagged the round-1 omission of ar)
-_LANG_CASE_SQL = """CASE
-    WHEN len(regexp_extract_all(text, '[\\x{0600}-\\x{06FF}]')) > 0
-         AND len(regexp_extract_all(text, '[\\x{0600}-\\x{06FF}]'))
-             >= len(regexp_extract_all(text, '[A-Za-z]')) THEN 'ar'
-    WHEN len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]')) > 0
-         AND len(regexp_extract_all(text, '[\\x{4E00}-\\x{9FFF}]'))
-             >= len(regexp_extract_all(text, '[A-Za-z]')) THEN 'zh'
-    WHEN len(regexp_extract_all(text, '[A-Za-z]')) > 0 AND stop >= 0.05
-        THEN 'en'
-    WHEN len(regexp_extract_all(text, '[A-Za-z]')) > 0 THEN 'latin-other'
-    ELSE 'unknown' END"""
-
-
-_WARC_ROUNDTRIP_SQL = """
-SELECT source AS host,
-       COUNT(*) AS n_pages,
-       CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes
-FROM documents
-GROUP BY source
-ORDER BY host
-"""
-
-
-def _analytic_oracles() -> dict[str, str]:
-    """VALUES oracles for the xxhash-seeded queries (oracle/analytic.py).
-
-    Computed at call time from the driver's correctness-scale parquet
-    (sf0.01 unless SPARK_GRAFT_ORACLE_SF_DIR overrides).  A builder
-    failure RAISES — silently degrading to rows-only would let an
-    environment regression (missing duckdb/numpy, moved testdata) report
-    a green gate with no oracles behind it (ADVICE r2).  Set
-    SPARK_GRAFT_ALLOW_ORACLE_DEGRADE=1 to opt into the old degrade-to-
-    rows-only behavior (each degraded query is still printed loudly)."""
-    from no_fasel_scrapers_spark.oracle import analytic as ao
-
-    out: dict[str, str] = {}
-    failed: list[tuple[str, BaseException]] = []
-    builders = {
-        "minhash_dedup": ao.minhash_dedup_sql,
-        "near_dup_groups": ao.near_dup_groups_sql,
-        "decontaminate": ao.decontaminate_sql,
-        "sample_stratified": ao.sample_stratified_sql,
-        "simhash_pairs": ao.simhash_pairs_sql,
-        "ivf_ann": ao.ivf_ann_sql,
-        "embedding_near_dup_lsh": ao.embedding_near_dup_sql,
-        "doc_fingerprints": ao.doc_fingerprints_sql,
-        "media_features": ao.media_features_sql,
-        "audio_features": ao.audio_features_sql,
-        "video_frames": ao.video_frames_sql,
-        "crawl_e2e": ao.crawl_e2e_sql,
-        "recrawl_delta": ao.recrawl_delta_sql,
-        "charset_decode": ao.charset_decode_sql,
-        "link_pagerank": ao.link_pagerank_sql,
-        "substring_dedup": ao.substring_dedup_sql,
-    }
-    for name, build in builders.items():
-        try:
-            out[name] = build()
-        except Exception as ex:
-            failed.append((name, ex))
-    if failed:
-        import os
-        import sys
-
-        for name, ex in failed:
-            print(f"analytic oracle {name} failed: {ex!r}", file=sys.stderr)
-        if os.environ.get("SPARK_GRAFT_ALLOW_ORACLE_DEGRADE") != "1":
-            raise RuntimeError(
-                f"{len(failed)}/{len(builders)} analytic oracle builders "
-                f"failed ({[n for n, _ in failed]}); refusing to silently "
-                "degrade the correctness gate to rows-only. Set "
-                "SPARK_GRAFT_ALLOW_ORACLE_DEGRADE=1 to opt in."
-            ) from failed[0][1]
-    return out
+    """The active rows: exactly 50, because the driver records only the
+    first 50 registry rows."""
+    return {n: q.build for n, q in REGISTRY.items() if not q.retired}
 
 
 def oracle_sql() -> dict[str, str]:
-    return _analytic_oracles() | {
-        "warc_roundtrip": _WARC_ROUNDTRIP_SQL,
-        "pii_scrub": _pii_scrub_sql(),
-        "vocab_top_terms": """
-            WITH terms AS (
-                SELECT unnest(list_distinct(
-                           string_split_regex(lower(trim(text)), '\\s+')
-                       )) AS term
-                FROM documents WHERE text IS NOT NULL
-            )
-            SELECT term, COUNT(*) AS doc_freq
-            FROM terms WHERE term <> ''
-            GROUP BY term
-            ORDER BY doc_freq DESC, term
-            LIMIT 100
-        """,
-        "asof_join": """
-            WITH v AS (
-                SELECT user_id, ts, event_id FROM events
-                WHERE event_type = 'view'
-            ), p AS (
-                SELECT user_id, ts, MAX(value) AS purchase_value
-                FROM events WHERE event_type = 'purchase'
-                GROUP BY user_id, ts
-            )
-            SELECT v.user_id, v.event_id,
-                   ROUND(p.purchase_value, 6) AS purchase_value,
-                   strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts
-            FROM v ASOF LEFT JOIN p
-              ON v.user_id = p.user_id AND v.ts >= p.ts
-        """,
-        "robots_parse": """
-            SELECT 'n' || CAST(n_nationkey AS VARCHAR) || '.test' AS host,
-                   CASE
-                     WHEN n_nationkey % 3 = 0 THEN
-                       '/*.zip$,/a/,/b' || CAST(n_nationkey AS VARCHAR) || '/'
-                     WHEN n_nationkey % 3 = 1 THEN
-                       '/mb' || CAST(n_nationkey AS VARCHAR) || '/'
-                     ELSE ''
-                   END AS prefixes_csv,
-                   CASE
-                     WHEN n_nationkey % 3 = 0 THEN '/a/open/'
-                     WHEN n_nationkey % 3 = 1 THEN
-                       '/mb' || CAST(n_nationkey AS VARCHAR) || '/ok$'
-                     ELSE ''
-                   END AS allows_csv,
-                   CASE
-                     WHEN n_nationkey % 3 = 0 THEN
-                       '^/.*\\.zip$,^/a/,^/b' || CAST(n_nationkey AS VARCHAR)
-                           || '/,^/a/open/'
-                     WHEN n_nationkey % 3 = 1 THEN
-                       '^/mb' || CAST(n_nationkey AS VARCHAR) || '/,^/mb'
-                           || CAST(n_nationkey AS VARCHAR) || '/ok$'
-                     ELSE ''
-                   END AS regexes_csv,
-                   CAST(CASE WHEN n_nationkey % 3 = 0
-                             THEN (n_nationkey % 5) * 1000
-                             ELSE 0 END AS BIGINT) AS crawl_delay_ms
-            FROM nation
-        """,
-        "sitemap_parse": """
-            SELECT 'n' || CAST(n_nationkey AS VARCHAR) || '.test' AS host,
-                   'url' AS kind,
-                   'https://n' || CAST(n_nationkey AS VARCHAR)
-                       || '.test/p' || CAST(i AS VARCHAR) AS url,
-                   CASE WHEN i % 2 = 1
-                        THEN '2024-01-0' || CAST(i AS VARCHAR) END AS lastmod
-            FROM nation,
-                 UNNEST(generate_series(1, n_nationkey % 4 + 1)) AS t(i)
-            WHERE n_nationkey % 5 <> 0
-            UNION ALL
-            SELECT 'n' || CAST(n_nationkey AS VARCHAR) || '.test',
-                   'sitemap',
-                   'https://n' || CAST(n_nationkey AS VARCHAR)
-                       || '.test/sm1.xml',
-                   NULL
-            FROM nation WHERE n_nationkey % 5 = 0
-        """,
-        "training_prep": f"""
-            WITH tk AS (
-                SELECT doc_id, text,
-                       list_filter(
-                           string_split_regex(coalesce(text, ''),
-                                              '[ \\t\\n\\x0b\\f\\r]+'),
-                           x -> x <> '') AS toks
-                FROM ({_DOCS_WITH_PROBES_SQL}
-                      UNION ALL {_prep_probe_sql()})
-            ), t AS (
-                SELECT doc_id, text,
-                       CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-                       CAST(len(list_filter(list_transform(toks, x -> lower(x)),
-                            x -> x IN ('the','a','an','and','or','of','to',
-                                       'in','is','it','for','on','with','as',
-                                       'at','by','be','this','that','from')))
-                            AS DOUBLE)
-                       / len(toks) END AS stop,
-                       CAST(len(regexp_extract_all(text,
-                            '[^\\p{{L}}\\p{{N}}_ \\t\\n\\x0b\\f\\r]'))
-                            AS DOUBLE) / length(text) AS punct,
-                       CAST(length(text) AS DOUBLE) AS n
-                FROM tk
-            ), scored AS (
-                SELECT doc_id, text,
-                       least(n / 500.0, 1.0) * 0.4
-                       + greatest(0.0, 1.0 - punct * 4.0) * 0.3
-                       + least(stop * 5.0, 1.0) * 0.3 AS quality,
-                       {_LANG_CASE_SQL} AS lang_d
-                FROM t
-            ), kept AS (
-                SELECT doc_id, text FROM scored
-                WHERE lang_d = 'en' AND quality >= 0.55
-            ), rw AS (
-                -- repetition-gate twin (same tokenization as above)
-                SELECT doc_id, generate_subscripts(ws, 1) AS ord,
-                       unnest(ws) AS w
-                FROM (
-                    SELECT doc_id,
-                           list_filter(
-                               string_split_regex(coalesce(text, ''),
-                                                  '[ \\t\\n\\x0b\\f\\r]+'),
-                               x -> x <> '') AS ws
-                    FROM kept
-                )
-            ), rwc AS (
-                SELECT doc_id, w, count(*) AS c FROM rw GROUP BY 1, 2
-            ), rtopw AS (
-                SELECT doc_id, max(c) AS top_c FROM rwc GROUP BY doc_id
-            ), rwagg AS (
-                SELECT doc_id, count(*) AS n_w FROM rw GROUP BY 1
-            ), rg AS (
-                SELECT a.doc_id, a.w || ' ' || b.w AS g
-                FROM rw a JOIN rw b
-                  ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
-            ), rgagg AS (
-                SELECT doc_id, count(*) AS n_g, count(DISTINCT g) AS nd_g
-                FROM rg GROUP BY 1
-            ), rep_kept AS (
-                SELECT k.doc_id, k.text
-                FROM kept k
-                LEFT JOIN rwagg USING (doc_id)
-                LEFT JOIN rtopw USING (doc_id)
-                LEFT JOIN rgagg USING (doc_id)
-                WHERE (CASE WHEN coalesce(rwagg.n_w, 0) = 0 THEN 0.0
-                       ELSE rtopw.top_c * 1.0 / rwagg.n_w END) <= 0.35
-                  AND (CASE WHEN coalesce(rgagg.n_g, 0) = 0 THEN 0.0
-                       ELSE (rgagg.n_g - rgagg.nd_g) * 1.0 / rgagg.n_g
-                       END) <= 0.2
-            ), ll AS (
-                -- corpus-level boilerplate line-dedup twin
-                SELECT doc_id, generate_subscripts(ls, 1) AS pos,
-                       unnest(ls) AS line
-                FROM (
-                    SELECT doc_id,
-                           string_split(coalesce(text, ''), chr(10)) AS ls
-                    FROM rep_kept
-                )
-            ), lboiler AS (
-                SELECT line FROM ll
-                WHERE regexp_replace(line, '[ \\t\\x0b\\f\\r]', '', 'g')
-                      <> ''
-                GROUP BY line
-                HAVING count(DISTINCT doc_id) > 2
-            ), lded AS (
-                SELECT ll.doc_id,
-                       coalesce(string_agg(ll.line, chr(10) ORDER BY pos)
-                                FILTER (WHERE b.line IS NULL), '') AS text
-                FROM ll LEFT JOIN lboiler b ON ll.line = b.line
-                GROUP BY ll.doc_id
-            ), ded AS (
-                SELECT doc_id, text FROM (
-                    SELECT doc_id, text,
-                           ROW_NUMBER() OVER (PARTITION BY md5(text)
-                                              ORDER BY doc_id) AS rn
-                    FROM lded
-                ) WHERE rn = 1
-            ), toks AS (
-                -- chunker twin keeps trim+split (incl. edge empties, as
-                -- the engine chunker does) but with the EXPLICIT Java-\\s
-                -- class so \\x0b splits on both sides
-                SELECT doc_id,
-                       string_split_regex(trim(text),
-                                          '[ \\t\\n\\x0b\\f\\r]+') AS tk
-                FROM ded WHERE text IS NOT NULL AND trim(text) <> ''
-            ), c AS (
-                SELECT doc_id, tk,
-                       CAST(ceil(len(tk) / 48.0) AS INT) AS n_chunks
-                FROM toks
-            )
-            SELECT doc_id, CAST(i AS INT) AS chunk_id,
-                   CAST(len(tk[i*48+1 : least(i*48+48, len(tk))]) AS INT)
-                       AS n_tokens,
-                   md5(array_to_string(
-                       tk[i*48+1 : least(i*48+48, len(tk))], ' '))
-                       AS chunk_md5
-            FROM c, UNNEST(generate_series(0, n_chunks - 1)) AS u(i)
-        """,
-        "range_join": """
-            SELECT c.c_nationkey AS nk, c.c_custkey, s.s_suppkey,
-                   c.c_acctbal, s.s_acctbal AS lo
-            FROM customer c JOIN supplier s
-              ON c.c_nationkey = s.s_nationkey
-             AND c.c_acctbal >= s.s_acctbal
-             AND c.c_acctbal <= s.s_acctbal + 500.0
-        """,
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-                   CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-                   CAST(COUNT(*) AS BIGINT) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_nation": """
-            SELECT n_name,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-                   CAST(COUNT(*) AS BIGINT) AS n_orders
-            FROM customer
-            JOIN orders ON c_custkey = o_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-            GROUP BY n_name
-        """,
-        "top_orders_per_customer": """
-            SELECT o_custkey, o_orderkey, o_totalprice, CAST(rnk AS INTEGER) AS rank
-            FROM (
-                SELECT o_custkey, o_orderkey, o_totalprice,
-                       row_number() OVER (
-                           PARTITION BY o_custkey
-                           ORDER BY o_totalprice DESC, o_orderkey ASC
-                       ) AS rnk
-                FROM orders
-            ) WHERE rnk <= 3
-        """,
-        "union_precedence_old_wins": """
-            SELECT o_orderkey, src, o_totalprice FROM (
-                SELECT *, row_number() OVER (
-                    PARTITION BY o_orderkey
-                    ORDER BY CASE src WHEN 'old' THEN 0 ELSE 1 END
-                ) AS rn
-                FROM (
-                    SELECT o_orderkey, 'old' AS src, o_totalprice
-                    FROM orders WHERE o_orderkey % 2 = 0
-                    UNION ALL
-                    SELECT o_orderkey, 'new' AS src, o_totalprice
-                    FROM orders WHERE o_orderkey % 3 = 0
-                )
-            ) WHERE rn = 1
-        """,
-        "anime_delta": """
-            WITH cur AS (
-                SELECT CAST(l_orderkey AS VARCHAR) AS series_id,
-                       l_orderkey AS k,
-                       CAST(row_number() OVER (
-                           PARTITION BY l_orderkey ORDER BY l_linenumber
-                       ) AS INT) AS num
-                FROM lineitem
-            ), st AS (
-                SELECT series_id, k, COUNT(*) AS cur_count,
-                       CASE WHEN k % 3 = 0 THEN CAST(k % 4 AS INT)
-                            ELSE 0 END AS old_count
-                FROM cur GROUP BY series_id, k
-            ), nn AS (
-                SELECT c.series_id, COUNT(*) AS n_new
-                FROM cur c JOIN st USING (series_id)
-                WHERE st.cur_count <> st.old_count AND c.num > st.old_count
-                GROUP BY c.series_id
-            ), totals AS (
-                SELECT st.series_id, st.k, st.cur_count,
-                       CAST(st.old_count AS INT) AS old_count,
-                       CAST(st.old_count + COALESCE(nn.n_new, 0) AS INT)
-                           AS episodes_total,
-                       CAST(COALESCE(nn.n_new, 0) AS INT) AS n_new
-                FROM st LEFT JOIN nn USING (series_id)
-            ), old_eps AS (
-                SELECT series_id,
-                       'e' || CAST(k AS VARCHAR) || 'x'
-                           || CAST(j AS VARCHAR) AS eid,
-                       CAST(j AS INT) AS num,
-                       'old' || CAST(k AS VARCHAR) || '-'
-                           || CAST(j AS VARCHAR) AS src
-                FROM (SELECT series_id, k, old_count FROM st
-                      WHERE old_count > 0),
-                     UNNEST(generate_series(1, old_count)) AS u(j)
-            ), merged AS (
-                SELECT * FROM old_eps
-                UNION ALL
-                SELECT c.series_id,
-                       'e' || CAST(c.k AS VARCHAR) || 'x'
-                           || CAST(c.num AS VARCHAR),
-                       c.num,
-                       'src' || CAST(c.k AS VARCHAR) || '-'
-                           || CAST(c.num AS VARCHAR)
-                FROM cur c JOIN totals t USING (series_id)
-                WHERE t.cur_count <> t.old_count AND c.num > t.old_count
-            )
-            SELECT m.series_id, m.eid, m.num, m.src,
-                   t.old_count, t.episodes_total, t.n_new
-            FROM merged m JOIN totals t USING (series_id)
-        """,
-        "episode_delta": """
-            WITH cur AS (
-                SELECT l_orderkey AS series_id,
-                       CAST(COUNT(*) AS BIGINT) AS episodes_total
-                FROM lineitem GROUP BY l_orderkey
-            ), old AS (
-                SELECT o_orderkey AS series_id,
-                       CAST(o_orderkey % 4 AS BIGINT) AS old_count
-                FROM orders
-            )
-            SELECT c.series_id, c.episodes_total,
-                   COALESCE(o.old_count, 0) AS old_count,
-                   c.episodes_total <> COALESCE(o.old_count, 0) AS needs_update
-            FROM cur c LEFT JOIN old o USING (series_id)
-        """,
-        "nested_assembly": """
-            SELECT l_orderkey,
-                   CAST(COUNT(*) AS BIGINT) AS n_episodes,
-                   string_agg(
-                       CAST(l_linenumber AS VARCHAR) || ':' ||
-                       CAST(CAST(l_quantity AS INTEGER) AS VARCHAR),
-                       ',' ORDER BY l_linenumber, CAST(l_quantity AS INTEGER)
-                   ) AS episodes
-            FROM lineitem GROUP BY l_orderkey
-        """,
-        "integrity_manifest": """
-            SELECT o_orderpriority,
-                   md5(string_agg(CAST(o_orderkey AS VARCHAR), ','
-                                  ORDER BY o_orderkey)) AS manifest_md5,
-                   CAST(COUNT(*) AS BIGINT) AS n
-            FROM orders GROUP BY o_orderpriority
-        """,
-        "url_category": """
-            SELECT doc_id,
-                   'https://w.test/' || CASE CAST(doc_id % 4 AS INTEGER)
-                       WHEN 0 THEN '%d9%81%d9%8a%d9%84%d9%85/x'
-                       WHEN 1 THEN 'asian-episodes/x'
-                       WHEN 2 THEN 'anime-episodes/x'
-                       ELSE 'show/x' END AS link,
-                   CASE CAST(doc_id % 4 AS INTEGER)
-                       WHEN 0 THEN 'movies' WHEN 1 THEN 'asian-series'
-                       WHEN 2 THEN 'anime' ELSE 'series' END AS category
-            FROM documents
-        """,
-        "title_cleanups": """
-            SELECT p_partkey,
-                   CASE WHEN p_partkey % 3 > 0 THEN p_name
-                        ELSE p_name || ' part' END AS title,
-                   CASE WHEN p_partkey % 5 = 0 THEN ''
-                        ELSE CAST(p_partkey AS VARCHAR) END AS stream
-            FROM part
-        """,
-        "normalized_title_join": """
-            WITH a AS (
-                SELECT p_partkey AS pk_a,
-                       regexp_replace(lower(p_name), '\\s+', '', 'g') AS k
-                FROM part
-            ), b AS (
-                SELECT p_partkey AS pk_b,
-                       regexp_replace(lower(upper(replace(p_name, ' ', '   '))),
-                                      '\\s+', '', 'g') AS k
-                FROM part
-            )
-            SELECT pk_a, pk_b FROM a JOIN b USING (k)
-        """,
-        "rollup_status_priority": """
-            SELECT COALESCE(o_orderstatus, '<all>') AS status,
-                   COALESCE(o_orderpriority, '<all>') AS priority,
-                   CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                       AS total
-            FROM orders
-            GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-        """,
-        "exact_dedup_stream": f"""
-            SELECT DISTINCT md5(text) AS text_md5,
-                   CAST(length(text) AS INTEGER) AS text_len
-            FROM (
-                SELECT text FROM documents
-                UNION ALL {_stream_dedup_probe_sql()}
-            )
-        """,
-        "trending_id_join": """
-            SELECT d.doc_id AS item_id, d.source AS source,
-                   substring(d.text, 1, 24) AS title,
-                   CASE WHEN d.doc_id % 2 = 0 THEN 'movies'
-                        ELSE 'series' END AS category
-            FROM documents d
-            JOIN (SELECT doc_id FROM documents WHERE doc_id % 11 = 0) r
-              ON d.doc_id = r.doc_id
-        """,
-        "genre_scrub_prune": """
-            WITH g AS (
-                SELECT p_partkey,
-                       list_filter(
-                           CASE WHEN p_partkey % 13 = 0
-                                THEN ['100%', '/']
-                                ELSE list_concat(string_split(p_type, ' '),
-                                                 ['50%', '/']) END,
-                           x -> NOT contains(x, '%') AND x <> '/'
-                       ) AS genres
-                FROM part
-            )
-            SELECT p_partkey,
-                   array_to_string(genres, ',') AS genres_csv,
-                   CAST(len(genres) AS INTEGER) AS n_genres
-            FROM g WHERE len(genres) > 0
-        """,
-        "all_content_index": """
-            SELECT CAST(p_partkey AS VARCHAR) AS key, p_name AS title,
-                   'img/' || CAST(p_partkey AS VARCHAR) AS image_source,
-                   'movies' AS category,
-                   COALESCE(CASE WHEN p_partkey % 5 <> 0
-                                 THEN CAST(p_partkey % 10 AS VARCHAR) END,
-                            'N/A') AS rating,
-                   COALESCE(array_to_string(
-                       CASE WHEN p_partkey % 7 <> 0
-                            THEN string_split(p_type, ' ') END, '|'),
-                       '') AS genres_s
-            FROM part WHERE p_partkey % 3 <> 0
-            UNION ALL
-            SELECT CAST(p_partkey AS VARCHAR), p_name,
-                   'img/' || CAST(p_partkey AS VARCHAR), 'series', 'N/A',
-                   COALESCE(array_to_string(
-                       CASE WHEN p_partkey % 2 = 0
-                            THEN string_split(p_type, ' ') END, '|'), '')
-            FROM part WHERE p_partkey % 3 = 0
-        """,
-        "pagination_expand": """
-            SELECT 'https://n' || CAST(n_nationkey AS VARCHAR) ||
-                   '.test/cat/page/' || CAST(page AS VARCHAR) AS url,
-                   'n' || CAST(n_nationkey AS VARCHAR) AS site,
-                   CAST(1 AS INTEGER) AS depth,
-                   CAST(0 AS INTEGER) AS priority
-            FROM (
-                SELECT n_nationkey,
-                       unnest(generate_series(1, CAST(n_nationkey % 5 AS BIGINT) + 1)) AS page
-                FROM nation
-            )
-        """,
-        "frontier_take_wave": """
-            SELECT event_id AS url_hash,
-                   CAST(event_id % 5 AS INTEGER) AS priority,
-                   CAST(user_id % 3 AS INTEGER) AS depth,
-                   event_type
-            FROM events
-            ORDER BY priority, depth, url_hash
-            LIMIT 500
-        """,
-        "robots_gate": """
-            -- analytic RFC 9309 expectation from the generation rule:
-            -- even hosts: Disallow /d/0, Disallow /d/1 + LONGER Allow /d/1/
-            -- (allow wins), Disallow /*4$ (path ends in 4 <=> doc_id%10=4,
-            -- still out-lengthed by Allow /d/1/ when doc_id%7=1);
-            -- odd hosts: Disallow /d/2 only.
-            SELECT doc_id,
-                   'h' || CAST(doc_id % 10 AS VARCHAR) || '.test' AS host
-            FROM documents
-            WHERE NOT (
-                (doc_id % 2 = 0 AND (doc_id % 7 = 0
-                    OR (doc_id % 10 = 4 AND doc_id % 7 <> 1)))
-                OR (doc_id % 2 = 1 AND doc_id % 7 = 2)
-            )
-        """,
-        "politeness_schedule": """
-            SELECT event_id AS url_hash,
-                   'h' || CAST(user_id % 20 AS VARCHAR) || '.test' AS host,
-                   CAST(row_number() OVER (
-                       PARTITION BY user_id % 20
-                       ORDER BY event_id % 5, event_id % 3, event_id
-                   ) - 1 AS INTEGER) AS fetch_seq,
-                   CAST((row_number() OVER (
-                       PARTITION BY user_id % 20
-                       ORDER BY event_id % 5, event_id % 3, event_id
-                   ) - 1) * (user_id % 20 + 1) * 10 AS BIGINT) AS scheduled_ms
-            FROM events
-        """,
-        "seen_filter_dedup": """
-            SELECT event_id FROM events WHERE event_id % 3 <> 0
-        """,
-        "url_canonicalize": """
-            SELECT doc_id,
-                   'http://www.site' || CAST(doc_id % 7 AS VARCHAR) ||
-                   '.test/a/b/' || CAST(doc_id AS VARCHAR) ||
-                   '?a=1&b=' || CAST(doc_id % 5 AS VARCHAR) AS canonical,
-                   'www.site' || CAST(doc_id % 7 AS VARCHAR) || '.test' AS host
-            FROM documents
-        """,
-        "text_stats": f"""
-            WITH tk AS (
-                -- ws_tokens twin: maximal non-whitespace runs; explicit
-                -- Java-\\s class because RE2's \\s excludes \\x0b
-                SELECT doc_id, text,
-                       list_filter(
-                           string_split_regex(coalesce(text, ''),
-                                              '[ \\t\\n\\x0b\\f\\r]+'),
-                           x -> x <> '') AS toks
-                FROM ({_DOCS_WITH_PROBES_SQL})
-            ), t AS (
-                SELECT doc_id, text,
-                       CAST(len(toks) AS INTEGER) AS n_tokens_ws,
-                       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9 \\t\\n\\x0b\\f\\r]')) AS INTEGER) AS n_tokens_bpe,
-                       CAST(len(regexp_extract_all(text, '[^\\p{{L}}\\p{{N}}_ \\t\\n\\x0b\\f\\r]')) AS DOUBLE) / length(text) AS punct,
-                       CASE WHEN len(toks) = 0 THEN 0.0 ELSE
-                       CAST(len(list_filter(list_transform(toks, x -> lower(x)),
-                            x -> x IN ('the','a','an','and','or','of','to','in','is','it','for',
-                                       'on','with','as','at','by','be','this','that','from')))
-                            AS DOUBLE)
-                       / len(toks) END AS stop,
-                       CAST(length(text) AS DOUBLE) AS n
-                FROM tk
-            )
-            SELECT doc_id, n_tokens_ws, n_tokens_bpe,
-                   round(punct, 9) AS punct_r,
-                   round(stop, 9) AS stop_r,
-                   {_LANG_CASE_SQL} AS lang_detected,
-                   round(least(n / 500.0, 1.0) * 0.4
-                         + greatest(0.0, 1.0 - punct * 4.0) * 0.3
-                         + least(stop * 5.0, 1.0) * 0.3, 9) AS quality_r
-            FROM t
-        """,
-        # The streaming path must converge to the identical batch answer
-        # (availableNow drains everything; complete mode emits all windows)
-        "events_hourly_stream": """
-            SELECT event_type,
-                   strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-                   CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-            FROM events GROUP BY event_type, date_trunc('hour', ts)
-        """,
-        "repetition_stats": f"""
-            WITH d AS (
-                SELECT doc_id, text FROM documents
-                UNION ALL {_REP_PROBE_SQL}
-            ), w AS (
-                -- a token is a maximal non-whitespace run: split on the
-                -- EXPLICIT Java-\\s class (RE2's \\s excludes \\x0b) and
-                -- drop empties (they can only appear at the edges) —
-                -- matches the engine's tokenizer incl. leading/trailing tabs,
-                -- \\x0b, whitespace-only, and NULL text
-                SELECT doc_id, generate_subscripts(ws, 1) AS ord,
-                       unnest(ws) AS w
-                FROM (
-                    SELECT doc_id,
-                           list_filter(
-                               string_split_regex(coalesce(text, ''),
-                                                  '[ \\t\\n\\x0b\\f\\r]+'),
-                               x -> x <> '') AS ws
-                    FROM d
-                )
-            ), wc AS (
-                SELECT doc_id, w, count(*) AS c FROM w GROUP BY 1, 2
-            ), topw AS (
-                SELECT doc_id, w AS top_word, c AS top_c FROM (
-                    SELECT doc_id, w, c, row_number() OVER (
-                        PARTITION BY doc_id ORDER BY c DESC, w ASC
-                    ) AS rn FROM wc
-                ) WHERE rn = 1
-            ), wagg AS (
-                SELECT doc_id, count(*) AS n_w, count(DISTINCT w) AS nd_w
-                FROM w GROUP BY 1
-            ), g AS (
-                SELECT a.doc_id, a.w || ' ' || b.w AS g
-                FROM w a JOIN w b
-                  ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
-            ), gc AS (
-                SELECT doc_id, g, count(*) AS c FROM g GROUP BY 1, 2
-            ), topg AS (
-                SELECT doc_id, g AS top_2gram, c AS top_c FROM (
-                    SELECT doc_id, g, c, row_number() OVER (
-                        PARTITION BY doc_id ORDER BY c DESC, g ASC
-                    ) AS rn FROM gc
-                ) WHERE rn = 1
-            ), gagg AS (
-                SELECT doc_id, count(*) AS n_g, count(DISTINCT g) AS nd_g
-                FROM g GROUP BY 1
-            )
-            SELECT d.doc_id,
-                   CAST(coalesce(wagg.n_w, 0) AS INTEGER) AS n_words,
-                   round(CASE WHEN coalesce(wagg.n_w, 0) = 0 THEN 0.0
-                         ELSE (wagg.n_w - wagg.nd_w) * 1.0 / wagg.n_w
-                         END, 9) AS dup_word_r,
-                   topw.top_word,
-                   round(CASE WHEN coalesce(wagg.n_w, 0) = 0 THEN 0.0
-                         ELSE topw.top_c * 1.0 / wagg.n_w
-                         END, 9) AS top_word_r,
-                   round(CASE WHEN coalesce(gagg.n_g, 0) = 0 THEN 0.0
-                         ELSE (gagg.n_g - gagg.nd_g) * 1.0 / gagg.n_g
-                         END, 9) AS dup_2gram_r,
-                   topg.top_2gram,
-                   round(CASE WHEN coalesce(gagg.n_g, 0) = 0 THEN 0.0
-                         ELSE topg.top_c * 1.0 / gagg.n_g
-                         END, 9) AS top_2gram_r
-            FROM d
-            LEFT JOIN wagg USING (doc_id)
-            LEFT JOIN topw USING (doc_id)
-            LEFT JOIN gagg USING (doc_id)
-            LEFT JOIN topg USING (doc_id)
-        """,
-        "line_dedup": f"""
-            WITH d AS (
-                SELECT doc_id, text FROM documents
-                UNION ALL {_line_probe_sql()}
-            ), l AS (
-                SELECT doc_id, generate_subscripts(ls, 1) AS pos,
-                       unnest(ls) AS line
-                FROM (
-                    SELECT doc_id,
-                           string_split(coalesce(text, ''), chr(10)) AS ls
-                    FROM d
-                )
-            ), boiler AS (
-                SELECT line FROM l
-                WHERE regexp_replace(line, '[ \t\x0b\f\r]', '', 'g') <> ''
-                GROUP BY line
-                HAVING count(DISTINCT doc_id) > 2
-            ), marked AS (
-                SELECT l.doc_id, l.pos, l.line,
-                       (b.line IS NOT NULL) AS boiler
-                FROM l LEFT JOIN boiler b ON l.line = b.line
-            )
-            SELECT doc_id,
-                   coalesce(string_agg(line, chr(10) ORDER BY pos)
-                            FILTER (WHERE NOT boiler), '') AS text,
-                   CAST(count(*) AS INTEGER) AS n_lines,
-                   CAST(count(*) FILTER (WHERE boiler) AS INTEGER)
-                       AS n_removed
-            FROM marked GROUP BY doc_id
-        """,
-    }
-
-
-def retired_oracle_sql() -> dict[str, str]:
-    """DuckDB oracles for ``retired_queries()`` — kept green by
-    tests/test_retired_queries.py (same compare as the driver's gate)."""
-    from no_fasel_scrapers_spark.oracle import analytic as ao
-
-    return {
-        # analytic VALUES oracles, same builders the registry used through
-        # round 4 (retired round 5 for recrawl_delta and pii_scrub)
-        "embedding_near_dup_recall": ao.embedding_near_dup_recall_sql(),
-        "ivf_recall": ao.ivf_recall_sql(),
-        # retired round 5 for link_pagerank
-        "customers_without_orders": """
-            SELECT c_custkey, c_name FROM customer
-            WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        """,
-        # retired round 5 for audio_features (with_media_metadata stays
-        # registry-checked as media_features' first stage)
-        "media_metadata": """
-            SELECT doc_id,
-                   CAST(16 + doc_id % 16 AS INTEGER) AS width,
-                   CAST(8 + doc_id % 8 AS INTEGER) AS height,
-                   CAST(1 + doc_id % 3 AS INTEGER) AS channels,
-                   CAST(9 + (16 + doc_id % 16) * (8 + doc_id % 8) * (1 + doc_id % 3) AS BIGINT) AS n_bytes,
-                   'nfsi-fake' AS codec
-            FROM documents
-        """,
-        "intersect_keys": """
-            SELECT o_orderkey AS k FROM orders WHERE o_orderkey % 2 = 0
-            INTERSECT
-            SELECT l_orderkey FROM lineitem
-        """,
-        # retired round 5 for substring_dedup
-        "event_type_decode": """
-            SELECT event_type,
-                   CASE event_type WHEN 'view' THEN 'View' WHEN 'click' THEN 'Click'
-                        WHEN 'purchase' THEN 'Purchase' WHEN 'signup' THEN 'Signup'
-                        WHEN 'error' THEN 'Error' END AS label,
-                   CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
-                        WHEN 'purchase' THEN 5 WHEN 'signup' THEN 3
-                        WHEN 'error' THEN 0 END) AS BIGINT) AS weight_total
-            FROM events GROUP BY event_type
-        """,
-        # retired round 5 for charset_decode
-        "sessionize_events": """
-            WITH marked AS (
-                SELECT user_id, event_id,
-                       CASE WHEN epoch(ts) - LAG(epoch(ts)) OVER w IS NULL
-                              OR epoch(ts) - LAG(epoch(ts)) OVER w > 1800
-                            THEN 1 ELSE 0 END AS new_sess
-                FROM events
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            )
-            SELECT user_id,
-                   CAST(SUM(new_sess) AS BIGINT) AS n_sessions,
-                   CAST(COUNT(*) AS BIGINT) AS n_events
-            FROM marked GROUP BY user_id
-        """,
-        # retired round 5 for video_frames (batch semantics stay
-        # registry-checked via exact_dedup_stream + training_prep)
-        "exact_dedup": """
-            SELECT doc_id, source, prefix FROM (
-                SELECT doc_id, source, substring(text, 1, 16) AS prefix,
-                       row_number() OVER (
-                           PARTITION BY md5(substring(text, 1, 16))
-                           ORDER BY doc_id ASC
-                       ) AS rn
-                FROM documents
-            ) WHERE rn = 1
-        """,
-        "ngram_jaccard": """
-            WITH g AS (
-                SELECT doc_id,
-                       list_distinct(list_transform(
-                           generate_series(1, greatest(
-                               len(string_split_regex(trim(lower(text)), '\\s+')) - 2, 1)),
-                           i -> array_to_string(
-                               (string_split_regex(trim(lower(text)), '\\s+'))[i:i+2], ' ')
-                       )) AS grams
-                FROM documents
-            )
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   round(
-                       CASE WHEN len(list_distinct(list_concat(a.grams, b.grams))) = 0
-                            THEN 1.0
-                            ELSE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-                                 / len(list_distinct(list_concat(a.grams, b.grams)))
-                       END, 6) AS jaccard_r
-            FROM g a JOIN g b ON b.doc_id = a.doc_id + 1
-        """,
-        "events_hourly": """
-            SELECT event_type,
-                   strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-                   CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-            FROM events GROUP BY event_type, date_trunc('hour', ts)
-        """,
-        "cosine_pairs_exact": """
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_cosine_similarity(a.embedding::DOUBLE[],
-                                                b.embedding::DOUBLE[]), 4) AS cosine_r
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE a.vec_id < 100 AND b.vec_id < 100
-              AND list_cosine_similarity(a.embedding::DOUBLE[],
-                                         b.embedding::DOUBLE[]) >= 0.2
-        """,
-        "ann_bruteforce": """
-            WITH q AS (
-                SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-                FROM embeddings WHERE vec_id < 5
-            ), s AS (
-                SELECT q.query_id, e.vec_id,
-                       list_cosine_similarity(e.embedding::DOUBLE[], q.qv) AS c
-                FROM embeddings e, q
-            )
-            SELECT query_id, vec_id, CAST(rn AS INTEGER) AS rank,
-                   round(c, 4) AS cosine_r
-            FROM (
-                SELECT query_id, vec_id, c,
-                       row_number() OVER (
-                           PARTITION BY query_id ORDER BY c DESC, vec_id ASC
-                       ) AS rn
-                FROM s
-            ) WHERE rn <= 10
-        """,
-        "chunk_documents": """
-            WITH d AS (
-                SELECT doc_id,
-                       string_split_regex(trim(text), '\\s+') AS toks
-                FROM documents
-                WHERE text IS NOT NULL AND trim(text) <> ''
-            ), c AS (
-                SELECT doc_id, toks,
-                       CAST(ceil(len(toks) / 16.0) AS INT) AS n_chunks
-                FROM d
-            )
-            SELECT doc_id, CAST(i AS INT) AS chunk_id,
-                   CAST(len(toks[i*16+1 : least(i*16+32, len(toks))])
-                        AS INT) AS n_tokens,
-                   array_to_string(
-                       toks[i*16+1 : least(i*16+32, len(toks))], ' ')
-                       AS chunk_text
-            FROM c, UNNEST(generate_series(0, n_chunks - 1)) AS t(i)
-        """,
-    }
+    """DuckDB oracle for every active row, resolved now (the analytic ones
+    read SPARK_GRAFT_ORACLE_SF_DIR at this call).  Any builder failure
+    raises, naming every failed row: a gate degraded to rows-only would
+    report green with no oracle behind it."""
+    out: dict[str, str] = {}
+    failed: dict[str, Exception] = {}
+    for name, q in REGISTRY.items():
+        if q.retired:
+            continue
+        try:
+            out[name] = q.sql()
+        except Exception as ex:
+            failed[name] = ex
+    if failed:
+        raise RuntimeError(
+            f"{len(failed)} oracle builders failed: "
+            + "; ".join(f"{n}: {ex!r}" for n, ex in failed.items())
+        ) from next(iter(failed.values()))
+    return out

@@ -60,37 +60,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_PAGES = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "1000000"))
 
-BENCH_QUERIES = [
-    "pricing_summary",
-    "revenue_by_nation",
-    "top_orders_per_customer",
-    "nested_assembly",
-    "seen_filter_dedup",
-    "politeness_schedule",
-    "exact_dedup",
-    "exact_dedup_stream",
-    "text_stats",
-    "repetition_stats",
-    "line_dedup",
-    "minhash_dedup",
-    "substring_dedup",
-    "simhash_pairs",
-    "ann_bruteforce",
-    "events_hourly",
-    "events_hourly_stream",
-    "media_metadata",
-    "audio_features",
-    "rollup_status_priority",
-    "sessionize_events",
-    "chunk_documents",
-    "near_dup_groups",
-    "decontaminate",
-    "vocab_top_terms",
-    "sample_stratified",
-    "pii_scrub",
-    "charset_decode",
-]
-
 
 def _spark(cpus: int):
     from no_fasel_scrapers_spark.session import get_spark
@@ -547,10 +516,11 @@ def run_queries(spark) -> dict[str, float]:
     estimator the extract path has always used."""
     import __spark_entry__ as E
 
-    qs = E.queries() | E.retired_queries()
     out = {}
-    for name in BENCH_QUERIES:
-        fn = qs[name]
+    for name, q in E.REGISTRY.items():
+        if not q.bench:
+            continue
+        fn = q.build
 
         def once() -> float:
             t0 = time.time()

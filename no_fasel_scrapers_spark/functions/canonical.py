@@ -54,11 +54,6 @@ def url_host(url: Column) -> Column:
     return F.regexp_replace(host_port, r":\d*$", "")
 
 
-def _port(url: Column) -> Column:
-    host_port = F.regexp_replace(_authority(url), r"^.*@", "")
-    return F.regexp_extract(host_port, r":(\d+)$", 1)
-
-
 def _path_and_query(url: Column) -> Column:
     # strip authority, then fragment
     rest = F.regexp_replace(_after_scheme(url), r"^[^/?#]*", "")

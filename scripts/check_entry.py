@@ -3,7 +3,7 @@
 Runs every ``queries()`` entry at the given sf dir, runs the matching
 ``oracle_sql()`` in DuckDB over the same parquet, and compares row count,
 column names, and the exact multiset of values (columns sorted by name,
-like the driver).  Rows-only queries are executed and counted.
+like the driver).
 
 Usage: python scripts/check_entry.py [sf_dir] [only_query ...]
 """
@@ -57,7 +57,6 @@ def main() -> int:
     qs = E.queries()
     oracles = E.oracle_sql()
     failures = []
-    rows_only = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -69,10 +68,6 @@ def main() -> int:
             print(f"FAIL {name}: spark raised {type(ex).__name__}: {ex}")
             continue
         dt = time.time() - t0
-        if name not in oracles:
-            rows_only.append(name)
-            print(f"ok   {name}: rows-only, {len(sdf)} rows ({dt:.1f}s)")
-            continue
         odf = con.execute(oracles[name]).df()
         if sorted(sdf.columns) != sorted(odf.columns):
             failures.append(name)
@@ -110,11 +105,6 @@ def main() -> int:
         print(f"ok   entry(): {len(edf)} rows ({time.time()-t0:.1f}s)")
         print(edf.head(10).to_string())
 
-    # rows-only means NO value-level oracle ran for that query — surface it
-    # so an oracle-degrade regression can't hide behind a green exit code
-    # (only crawl_e2e is rows-only by design)
-    if rows_only:
-        print(f"\nrows-only (no oracle ran): {rows_only}")
     print(f"\n{len(failures)} failures: {failures}" if failures else "\nALL OK")
     return 1 if failures else 0
 

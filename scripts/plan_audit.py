@@ -196,15 +196,12 @@ EXPECTATIONS = {
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="plan_audit", master="local[4]")
-    # retired_queries(): entries trimmed from the 50-slot driver registry
-    # but still part of the engine surface (bench.py times them too)
-    qs = E.queries() | E.retired_queries()
     failures = 0
     print("# PLANS — physical-plan audit (generated by scripts/plan_audit.py)\n")
     print(f"Input: {sf_dir}; AQE on (final plans may re-optimize at runtime; "
           "assertions target the static physical plan).\n")
     for name, checks in EXPECTATIONS.items():
-        df = qs[name](spark, sf_dir)
+        df = E.REGISTRY[name].build(spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

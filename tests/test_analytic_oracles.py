@@ -11,10 +11,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def _spark_rows(spark, qname):
-    # embedding_near_dup_recall moved to retired_queries() in round 5
-    # (driver record capped at 50 rows); its value check lives on here.
-    fn = E.queries().get(qname) or E.retired_queries()[qname]
-    df = fn(spark, SF)
+    df = E.REGISTRY[qname].build(spark, SF)
     return sorted(tuple(r) for r in df.collect())
 
 

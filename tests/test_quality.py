@@ -73,7 +73,7 @@ def test_repetition_whitespace_contract(spark):
         assert r.dup_word_frac == 0.0
 
 
-def test_repetition_stats_matches_oracle(spark, monkeypatch):
+def test_repetition_stats_matches_oracle(spark):
     """The registry's repetition_stats query (corpus + probe rows) equals
     its DuckDB oracle value for value, canonicalized as the retired-query
     compare does."""
@@ -83,15 +83,13 @@ def test_repetition_stats_matches_oracle(spark, monkeypatch):
     import __spark_entry__ as E
     from test_retired_queries import SF_DIR, _canon
 
-    # oracle_sql() also builds the analytic VALUES oracles; pin them to
-    # the small sf so they stay cheap (and scoped to this test)
-    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM '{SF_DIR}/documents.parquet'"
     )
-    sdf = E.queries()["repetition_stats"](spark, SF_DIR).toPandas()
-    odf = con.execute(E.oracle_sql()["repetition_stats"]).df()
+    q = E.REGISTRY["repetition_stats"]
+    sdf = q.build(spark, SF_DIR).toPandas()
+    odf = con.execute(q.sql()).df()
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf) > 0
     a, b = _canon(sdf), _canon(odf)

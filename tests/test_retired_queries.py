@@ -1,25 +1,8 @@
-"""The three registry entries retired in round 3 (to fit the driver's
-50-row CORRECTNESS record) keep their full value-level oracle comparison
-here — same canonicalization as the driver / scripts/check_entry.py.
-
-Retired (see __spark_entry__.queries() docstring):
-- ngram_jaccard      (verify stage runs inside minhash_dedup/near_dup_groups)
-- events_hourly      (identical semantics to events_hourly_stream)
-- cosine_pairs_exact (subsumed by embedding_near_dup_recall's truth side)
-- ann_bruteforce     (exact top-k is ivf_recall's oracle-checked truth side)
-- chunk_documents    (runs inside the oracle-checked training_prep capstone)
-- embedding_near_dup_recall (retired round 5 for recrawl_delta; its exact
-  truth side duplicates cosine_pairs_exact)
-- ivf_recall (retired round 5 for pii_scrub; same retire-the-recall-metric
-  argument — ivf_ann keeps the operator registry-checked)
-- media_metadata (retired round 5 for audio_features; with_media_metadata
-  stays registry-checked as media_features' first stage)
-- customers_without_orders (retired round 5 for link_pagerank; the
-  left_anti shape stays registry-checked via seen_filter_dedup's exact
-  backstop and decontaminate's anti-join)
-"""
+"""Guards on ``__spark_entry__.REGISTRY``, and its retired rows' oracles."""
 
 import os
+import subprocess
+import sys
 
 import duckdb
 import pandas as pd
@@ -51,17 +34,19 @@ def con():
 
 
 def test_registry_is_exactly_50_and_fully_oracle_checked():
-    qs = E.queries()
-    assert len(qs) == 50, "driver records the first 50 registry rows"
-    oracles = E.oracle_sql()
-    missing = [n for n in qs if n not in oracles]
-    assert not missing, f"oracle-less queries inside the record: {missing}"
+    active = [q for q in E.REGISTRY.values() if not q.retired]
+    assert len(active) == len(E.queries()) == 50, (
+        "driver records the first 50 registry rows"
+    )
+    assert all(q.oracle for q in active)
 
 
 # derived from the registry, not hand-listed: a new retirement that
 # forgot to extend this test would silently lose its value-level check
 # (round-5 review find — exact_dedup was retired without a row here)
-@pytest.mark.parametrize("name", sorted(E.retired_queries()))
+@pytest.mark.parametrize(
+    "name", sorted(n for n, q in E.REGISTRY.items() if q.retired)
+)
 def test_retired_query_matches_oracle(spark, con, name, monkeypatch):
     # the analytic VALUES oracles (embedding_near_dup_recall) bake data
     # from a parquet dir at oracle-BUILD time — pin them to the same sf
@@ -69,8 +54,9 @@ def test_retired_query_matches_oracle(spark, con, name, monkeypatch):
     # os.environ assignment ran at pytest collection and leaked the
     # override into every other test module; round-5 review find)
     monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", SF_DIR)
-    sdf = E.retired_queries()[name](spark, SF_DIR).toPandas()
-    odf = con.execute(E.retired_oracle_sql()[name]).df()
+    q = E.REGISTRY[name]
+    sdf = q.build(spark, SF_DIR).toPandas()
+    odf = con.execute(q.sql()).df()
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert len(sdf) == len(odf)
     a, b = _canon(sdf), _canon(odf)
@@ -82,17 +68,35 @@ def test_retired_query_matches_oracle(spark, con, name, monkeypatch):
 
 
 def test_analytic_oracles_fail_loudly(monkeypatch):
-    """An oracle-builder failure must raise, not silently degrade the gate
-    to rows-only (ADVICE r2) — unless the explicit opt-out env is set."""
+    """An oracle-builder failure must raise, naming the failed row, not
+    silently degrade the gate to rows-only (ADVICE r2)."""
     from no_fasel_scrapers_spark.oracle import analytic as ao
 
     def boom():
         raise OSError("testdata missing")
 
-    monkeypatch.delenv("SPARK_GRAFT_ALLOW_ORACLE_DEGRADE", raising=False)
     monkeypatch.setattr(ao, "minhash_dedup_sql", boom)
-    with pytest.raises(RuntimeError, match="analytic oracle builders"):
-        E._analytic_oracles()
-    monkeypatch.setenv("SPARK_GRAFT_ALLOW_ORACLE_DEGRADE", "1")
-    out = E._analytic_oracles()
-    assert "minhash_dedup" not in out and "simhash_pairs" in out
+    with pytest.raises(RuntimeError, match="oracle builders failed: minhash"):
+        E.oracle_sql()
+
+
+def test_duplicate_declaration_rejected(monkeypatch):
+    monkeypatch.setattr(E, "REGISTRY", dict(E.REGISTRY))
+    with pytest.raises(ValueError, match="'pricing_summary' is declared"):
+        E.query("SELECT 1")(E.q_pricing_summary)
+
+
+def test_import_loads_no_package_module():
+    """The driver and --py-files zip runs rely on importing the entry
+    module without loading the package: every package import stays
+    inside a query or oracle body."""
+    code = (
+        "import sys, __spark_entry__; "
+        "print([m for m in sys.modules if m.startswith('no_fasel')])"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]"
