@@ -17,6 +17,9 @@ bit-for-bit; float-derived values are rounded on both sides).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -27,6 +30,14 @@ from pyspark.sql.window import Window
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp directory, removed when the process exits: the frames
+    a query returns read it lazily, after the query function is done."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def _dec_sum(col, scale: int = 2):
@@ -1731,12 +1742,11 @@ def q_events_hourly_stream(spark, sf_dir):
     would hold back windows younger than the final watermark)."""
     import os
     import shutil as _sh
-    import tempfile
     import uuid
 
     from no_fasel_scrapers_spark.streaming.ingest import run_stream_to_sink
 
-    src = tempfile.mkdtemp(prefix="nfs_stream_events_")
+    src = _scratch_dir("nfs_stream_events_")
     _sh.copy(os.path.join(sf_dir, "events.parquet"), src)
     # watermarks require TIMESTAMP (not NTZ); the session tz is pinned UTC
     # (session.py), so reading the tz-less parquet micros as TIMESTAMP
@@ -1765,7 +1775,7 @@ def q_events_hourly_stream(spark, sf_dir):
     name = "evstream_" + uuid.uuid4().hex[:8]
     q = run_stream_to_sink(
         agg,
-        checkpoint=tempfile.mkdtemp(prefix="nfs_stream_ckpt_"),
+        checkpoint=_scratch_dir("nfs_stream_ckpt_"),
         query_name=name,
         output_mode="complete",
     )
@@ -1815,7 +1825,6 @@ def q_exact_dedup_stream(spark, sf_dir):
     (fingerprint + text length)."""
     import os
     import shutil as _sh
-    import tempfile
     import uuid
 
     import pyarrow as pa
@@ -1826,7 +1835,7 @@ def q_exact_dedup_stream(spark, sf_dir):
         run_stream_to_sink,
     )
 
-    src = tempfile.mkdtemp(prefix="nfs_stream_docs_")
+    src = _scratch_dir("nfs_stream_docs_")
     _sh.copy(os.path.join(sf_dir, "documents.parquet"), src)
     # probe file written with pyarrow directly: a Spark
     # createDataFrame(local rows)→parquet job measured a flat ~4s on
@@ -1870,7 +1879,7 @@ def q_exact_dedup_stream(spark, sf_dir):
     try:
         q = run_stream_to_sink(
             ded,
-            checkpoint=tempfile.mkdtemp(prefix="nfs_stream_ckpt_"),
+            checkpoint=_scratch_dir("nfs_stream_ckpt_"),
             query_name=name,
             output_mode="append",
         )
@@ -2790,14 +2799,13 @@ def q_crawl_e2e(spark, sf_dir):
     tests compare against) rolled up per (wave, site, role) with UTF-8
     text byte sums, so wave membership, gating, dedup, pagination AND
     extracted text are pinned at value level in the driver record."""
-    import tempfile
 
     from no_fasel_scrapers_spark.plans.crawl import run_crawl
     from no_fasel_scrapers_spark.sources.catalog import Catalog
     from no_fasel_scrapers_spark.sources.fixture import Fixture, FixtureConfig
 
     fx = Fixture(FixtureConfig())
-    cat = Catalog(tempfile.mkdtemp(prefix="nfs_crawl_entry_"))
+    cat = Catalog(_scratch_dir("nfs_crawl_entry_"))
     res = run_crawl(
         spark,
         fx.pages_df(spark),
@@ -2829,7 +2837,6 @@ def q_link_pagerank(spark, sf_dir):
     Oracle: the independent Python scheduler + the same integer
     recurrence (oracle/analytic.link_pagerank_rows) — an EXACT match,
     no float tolerance anywhere."""
-    import tempfile
 
     from no_fasel_scrapers_spark.functions.canonical import canonicalize_url
     from no_fasel_scrapers_spark.operators.linkrank import pagerank
@@ -2838,7 +2845,7 @@ def q_link_pagerank(spark, sf_dir):
     from no_fasel_scrapers_spark.sources.fixture import Fixture, FixtureConfig
 
     fx = Fixture(FixtureConfig())
-    cat = Catalog(tempfile.mkdtemp(prefix="nfs_pagerank_"))
+    cat = Catalog(_scratch_dir("nfs_pagerank_"))
     res = run_crawl(
         spark, fx.pages_df(spark), fx.seeds_df(spark), fx.robots_df(spark),
         cat,
@@ -2873,7 +2880,6 @@ def q_recrawl_delta(spark, sf_dir):
     non-invalidated records survive untouched (text_bytes), and links
     re-discovered by recrawled pages stay deduped against the imported
     seen set (n_records, n_refetched)."""
-    import tempfile
 
     from no_fasel_scrapers_spark.operators.merge import union_with_precedence
     from no_fasel_scrapers_spark.plans.crawl import run_crawl
@@ -2881,7 +2887,7 @@ def q_recrawl_delta(spark, sf_dir):
     from no_fasel_scrapers_spark.sources.fixture import Fixture, FixtureConfig
 
     fx = Fixture(FixtureConfig())
-    cat1 = Catalog(tempfile.mkdtemp(prefix="nfs_recrawl1_"))
+    cat1 = Catalog(_scratch_dir("nfs_recrawl1_"))
     res1 = run_crawl(
         spark, fx.pages_df(spark), fx.seeds_df(spark), fx.robots_df(spark),
         cat1,
@@ -2909,7 +2915,7 @@ def q_recrawl_delta(spark, sf_dir):
             "ISO-8859-1",
         ),
     )
-    cat2 = Catalog(tempfile.mkdtemp(prefix="nfs_recrawl2_"))
+    cat2 = Catalog(_scratch_dir("nfs_recrawl2_"))
     res2 = run_crawl(
         spark, pages2, seeds2, fx.robots_df(spark), cat2,
         seen=res1.seen, recrawl=recrawl.select("url"),
@@ -2945,7 +2951,6 @@ def q_warc_roundtrip(spark, sf_dir):
     documents → pages schema → WARC sink → WARC scan → per-host rollup.
     Oracle computes the same rollup directly, so any framing/encoding loss
     in the round-trip breaks the value hash."""
-    import tempfile
 
     from no_fasel_scrapers_spark.sources import warc
 
@@ -2961,7 +2966,7 @@ def q_warc_roundtrip(spark, sf_dir):
         F.lit(None).cast("string").alias("text"),
         F.lit(None).cast("string").alias("lang"),
     )
-    out = tempfile.mkdtemp(prefix="nfs_warc_rt_")
+    out = _scratch_dir("nfs_warc_rt_")
     pages.repartition(8).write.format("warc").mode("append").save(out)
     back = spark.read.format("warc").load(out)
     return (

@@ -7,13 +7,18 @@ wave; this operator is the scale path:
 
 1. the seen set is summarized into per-shard **bloom blobs** (numpy bitsets,
    one per ``pmod(url_hash, n_shards)``), built distributed with
-   ``applyInPandas`` and checkpointed to the catalog each wave;
+   ``applyInPandas`` and checkpointed to the catalog each wave.  Each
+   wave's keys are ORed into the standing blobs: on the driver
+   (:func:`or_into_shard_map`, no Spark job) while the filter fits the
+   broadcast probe, by one shard cogroup (:func:`update_filter_blobs`)
+   beyond it;
 2. candidate URLs probe the blobs inside ``mapInPandas`` (vectorized numpy,
    no per-row Python) — *bloom-negative rows are definitely new* and skip
    the expensive path entirely (the predicate-pushdown analog: cheap
    membership before the join, SURVEY.md §4).  Blobs reach the probe as a
-   Spark broadcast variable (≤512 MB of filter) or a shard cogroup (beyond),
-   NEVER as a joined-on column: attaching a blob to each row ships
+   Spark broadcast variable (≤512 MB of filter, shipped from the
+   driver-held :data:`ShardMap`) or a shard cogroup (beyond), NEVER as a
+   joined-on column: attaching a blob to each row ships
    O(rows × blob bytes) — measured superlinear on the 3M-page site crawl;
 3. only bloom-positive rows (true seen + fpp false positives) go through the
    exact ``left_anti`` join backstop, so correctness never depends on fpp.
@@ -30,14 +35,21 @@ task by the shard-cogroup probe path.
 from __future__ import annotations
 
 import math
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BLOB_SCHEMA = "shard int, bits binary, n_items long, m long, k int"
+# the same schema for blob tables the driver writes with pyarrow
+_BLOB_ARROW = pa.schema([
+    ("shard", pa.int32()), ("bits", pa.binary()), ("n_items", pa.int64()),
+    ("m", pa.int64()), ("k", pa.int32()),
+])
 BITS_PER_KEY = 10
 
 
@@ -54,11 +66,16 @@ def _bloom_positions(h: np.ndarray, m: int, k: int) -> Iterator[np.ndarray]:
         yield ((h1 + np.uint64(i) * h2) % np.uint64(m)).astype(np.int64)
 
 
-def build_bloom(hashes: np.ndarray, m: int, k: int) -> bytes:
-    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
+def _set_bits(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> None:
+    """Set the k bloom positions of every hash in ``bits``, in place."""
     if len(hashes):
         for pos in _bloom_positions(hashes, m, k):
             np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def build_bloom(hashes: np.ndarray, m: int, k: int) -> bytes:
+    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
+    _set_bits(bits, hashes, m, k)
     return bits.tobytes()
 
 
@@ -154,6 +171,91 @@ def update_filter_blobs(
     )
 
 
+class ShardBlob(NamedTuple):
+    """One shard's blob, held on the driver."""
+
+    m: int
+    k: int
+    bits: bytes
+    n_items: int
+
+
+# The whole filter on the driver, {shard: ShardBlob}: what the broadcast
+# probe ships, and what a crawl keeps between waves while the filter fits
+# the broadcast path.
+ShardMap = dict[int, ShardBlob]
+
+def _shard_map(rows: Iterable) -> ShardMap:
+    return {
+        int(r["shard"]): ShardBlob(
+            int(r["m"]), int(r["k"]), bytes(r["bits"]), int(r["n_items"])
+        )
+        for r in rows
+    }
+
+
+def collect_shard_map(blobs: DataFrame) -> ShardMap:
+    """Blob rows → driver map (one collect of n_shards rows)."""
+    return _shard_map(blobs.select(*_BLOB_ARROW.names).collect())
+
+
+def read_shard_map(path: str) -> ShardMap:
+    """Blob snapshot directory → driver map, read by pyarrow (no job)."""
+    return _shard_map(
+        pq.read_table(path, columns=_BLOB_ARROW.names).to_pylist()
+    )
+
+
+def shard_map_table(blobs: ShardMap) -> pa.Table:
+    """Driver map → a ``BLOB_SCHEMA`` arrow table, shard order."""
+    shards = sorted(blobs)
+    return pa.table(
+        [
+            shards,
+            [blobs[s].bits for s in shards],
+            [blobs[s].n_items for s in shards],
+            [blobs[s].m for s in shards],
+            [blobs[s].k for s in shards],
+        ],
+        schema=_BLOB_ARROW,
+    )
+
+
+def or_into_shard_map(
+    blobs: ShardMap,
+    url_hash: np.ndarray,
+    n_shards: int,
+    n_expected_per_shard: int,
+) -> ShardMap:
+    """:func:`update_filter_blobs` on the driver: a new map with the keys
+    ORed in, bit for bit the cogroup's result.  A shard the map lacks
+    starts empty; a blob with another (m, k) raises."""
+    m, k = bloom_params(n_expected_per_shard)
+    for s, b in blobs.items():
+        if (b.m, b.k) != (m, k):
+            raise ValueError(
+                f"shard {s}: cannot OR-merge blobs with different (m, k)"
+                f" — rebuild with a pinned n_expected_per_shard"
+            )
+    h64 = np.asarray(url_hash, dtype=np.int64)
+    # numpy % with a positive modulus matches F.pmod
+    shards = h64 % n_shards
+    out = dict(blobs)
+    for s in np.unique(shards).tolist():
+        h = h64[shards == s].astype(np.uint64)
+        old = blobs.get(s)
+        bits = (
+            np.zeros((m + 7) // 8, dtype=np.uint8)
+            if old is None
+            else np.frombuffer(old.bits, dtype=np.uint8).copy()
+        )
+        _set_bits(bits, h, m, k)
+        out[s] = ShardBlob(
+            m, k, bits.tobytes(), (0 if old is None else old.n_items) + len(h)
+        )
+    return out
+
+
 # "auto" strategy cutover: collect + Spark-broadcast the whole filter up to
 # this many bytes (512 MB ≈ 4×10^8 keys at 10 bits/key); past that, the
 # shard-cogroup path keeps every blob off the driver.
@@ -168,7 +270,7 @@ def _filter_bytes(blobs: DataFrame) -> int:
 
 def mark_maybe_seen(
     candidates: DataFrame,
-    blobs: DataFrame,
+    blobs: DataFrame | ShardMap,
     n_shards: int = 32,
     strategy: str = "auto",
 ) -> DataFrame:
@@ -193,16 +295,21 @@ def mark_maybe_seen(
     - ``auto``: broadcast while the filter totals ≤ ``BROADCAST_MAX_BYTES``
       (one n_shards-row agg job), else cogroup.
 
-    Either way :func:`probe_bloom` runs vectorized numpy per batch/group.
+    ``blobs`` may also be a :data:`ShardMap` the caller already holds on
+    the driver; it probes by broadcast, with no collect.  Either way
+    :func:`probe_bloom` runs vectorized numpy per batch/group.
     """
+    held = isinstance(blobs, dict)
     if strategy == "auto":
         strategy = (
             "broadcast"
-            if _filter_bytes(blobs) <= BROADCAST_MAX_BYTES
+            if held or _filter_bytes(blobs) <= BROADCAST_MAX_BYTES
             else "cogroup"
         )
     if strategy not in ("broadcast", "cogroup"):
         raise ValueError(f"unknown blob probe strategy: {strategy!r}")
+    if held and strategy == "cogroup":
+        raise ValueError("a driver-held shard map probes by broadcast only")
 
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
@@ -210,10 +317,7 @@ def mark_maybe_seen(
     cand_cols = [f.name for f in candidates.schema.fields]
 
     if strategy == "broadcast":
-        shard_map = {
-            int(r["shard"]): (int(r["m"]), int(r["k"]), bytes(r["bits"]))
-            for r in blobs.select("shard", "m", "k", "bits").collect()
-        }
+        shard_map = blobs if held else collect_shard_map(blobs)
         bc = candidates.sparkSession.sparkContext.broadcast(shard_map)
 
         def _probe(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -230,9 +334,10 @@ def mark_maybe_seen(
                         ent = tbl.get(int(s))
                         if ent is None:
                             continue
-                        m, k, blob = ent
                         idx = np.nonzero(shards == s)[0]
-                        maybe[idx] = probe_bloom(blob, h[idx], m, k)
+                        maybe[idx] = probe_bloom(
+                            ent.bits, h[idx], ent.m, ent.k
+                        )
                 res["maybe_seen"] = maybe
                 yield res
 
@@ -264,7 +369,7 @@ def mark_maybe_seen(
 def dedup_against_seen(
     candidates: DataFrame,
     seen: DataFrame | None,
-    blobs: DataFrame | None,
+    blobs: DataFrame | ShardMap | None,
     n_shards: int = 32,
     broadcast_hint: bool = True,
     blob_strategy: str = "auto",

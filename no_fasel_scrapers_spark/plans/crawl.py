@@ -30,10 +30,14 @@ Scale notes (100 TB / 10^10 URLs) — the big tables are never shuffled:
   discoveries vs a semi-reduced hit set — see the loop-bottom comment),
   so no stage anywhere shuffles the seen set;
 - bloom blobs are incremental: pinned (m, k) sizing from expected_urls,
-  each wave's keys ORed into the standing blob of their shard in one
-  cogroup stage (O(filter bytes) per wave),
-  checkpointed and restored on resume; only bloom-positive rows reach the
-  exact backstop;
+  each wave's keys ORed into the standing blob of their shard (O(filter
+  bytes) per wave), checkpointed and restored on resume; only
+  bloom-positive rows reach the exact backstop.  A filter that fits the
+  broadcast probe (≤ BROADCAST_MAX_BYTES) stays on the driver between
+  waves: the probe ships it as is, and the update reads the wave's
+  published seen keys with pyarrow, ORs them in with numpy and publishes
+  the blobs as an arrow table — no Spark job.  A larger filter is updated
+  by one shard cogroup stage and read back;
 - a global audit rank is OFF by default (single-partition window); the
   deterministic order still exists logically via the (priority, depth,
   url_hash) key;
@@ -62,9 +66,13 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import ParamSpec, TypeVar
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..functions.extract import EXTRACT_SCHEMA, extract_page
 from ..operators.frontier import (
@@ -83,7 +91,11 @@ from ..operators.seen_filter import (
     BITS_PER_KEY,
     BROADCAST_MAX_BYTES,
     build_filter_blobs,
+    collect_shard_map,
     dedup_against_seen,
+    or_into_shard_map,
+    read_shard_map,
+    shard_map_table,
     update_filter_blobs,
 )
 from ..sources.catalog import Catalog
@@ -179,8 +191,27 @@ def _prep_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-def _empty_seen(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "url_hash long, url string, wave int, rank int")
+def _empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
+    """An empty frame planned as a ``LocalRelation``, which the optimizer
+    prunes from a union.  ``createDataFrame([], schema)`` plans a
+    4-partition ``LogicalRDD`` instead, whose tasks run in every scan."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table())
+
+
+_SEEN_SCHEMA = "url_hash long, url string, wave int, rank int"
+_LINEAGE_SCHEMA = pa.schema(
+    [("wave", pa.int32())]
+    + [
+        (c, pa.int64())
+        for c in (
+            "frontier_size", "robots_blocked", "dedup_dropped", "attempted",
+            "fetched", "missed",
+        )
+    ]
+)
+_URL_HASH_SCHEMA = pa.schema([("url_hash", pa.int64())])
 
 
 # The frames a wave caches (`wave`, `scheduled`, the pipelined frontier)
@@ -260,7 +291,7 @@ def run_crawl(
     # inferred from them (ADVICE r3).
     caller_seen = seen is not None
     if seen is None:
-        seen = _empty_seen(spark)
+        seen = _empty_frame(spark, _SEEN_SCHEMA)
         if seen_prior is not None:
             seen = seen.unionByName(
                 with_frontier_keys(seen_prior.select("url"), n_salts).select(
@@ -305,7 +336,10 @@ def run_crawl(
     # the bloom gate below costs no extra count() job
     seen_count = sum(l.get("attempted", 0) for l in lineage)
     if seen_prior is not None or (lineage == [] and start_wave > 0):
-        seen_count = max(seen_count, seen.select("url_hash").distinct().count())
+        # the log's manifest rows: at least its distinct keys (an imported
+        # history may repeat a url), and the gate only picks when the
+        # filter is built — dedup stays exact either way
+        seen_count = max(seen_count, catalog.log_rows("seen"))
 
     robots_b = robots
     wave_no = start_wave
@@ -328,24 +362,44 @@ def run_crawl(
         if expected_urls * BITS_PER_KEY // 8 <= BROADCAST_MAX_BYTES
         else "cogroup"
     )
-    blobs = (
-        catalog.read(spark, "blobs") if catalog.exists("blobs") else None
-    )
-    if blobs is not None:
+    # The standing filter: a driver-held ShardMap on the broadcast path,
+    # a blob-table DataFrame on the cogroup path; None until built.
+    blobs = None
+    b_snap = catalog.latest("blobs")
+    if b_snap is not None:
+        log = logging.getLogger(__name__)
         # Fail-fast guard (ADVICE r1): restored blobs carry pinned (m, k);
         # a resume launched with a different --expected-urls would only
-        # blow up executor-side at merge time, mid-wave, after robots/
-        # dedup/fetch work.  Check on the driver up front — n_shards rows —
-        # and trigger a one-shot rebuild from the seen set instead of
-        # dying later (the loop below rebuilds whenever blobs is None).
+        # blow up at merge time, mid-wave, after robots/dedup/fetch work.
+        # Check on the driver up front — n_shards rows — and trigger a
+        # one-shot rebuild from the seen set instead of dying later (the
+        # loop below rebuilds whenever blobs is None).
         exp_m, exp_k = _bloom_params(n_per_shard)
-        got = blobs.select("m", "k").distinct().collect()
-        if any((r["m"], r["k"]) != (exp_m, exp_k) for r in got):
-            logging.getLogger(__name__).warning(
+        if blob_strategy == "broadcast":
+            blobs = read_shard_map(b_snap.path)
+            got = {(b.m, b.k) for b in blobs.values()}
+        else:
+            blobs = catalog.read(spark, "blobs")
+            got = {
+                (r["m"], r["k"])
+                for r in blobs.select("m", "k").distinct().collect()
+            }
+        # the seen and blob publishes are two commits, so a kill between
+        # them leaves a filter without the last wave's keys — false
+        # negatives, which the filter must never have
+        covered = b_snap.meta.get("seen_wave")
+        if any(g != (exp_m, exp_k) for g in got):
+            log.warning(
                 "restored filter blobs have (m, k) = %s but expected_urls="
                 "%d pins %s; discarding and rebuilding from the seen set",
-                [(r["m"], r["k"]) for r in got], expected_urls,
-                (exp_m, exp_k),
+                sorted(got), expected_urls, (exp_m, exp_k),
+            )
+            blobs = None
+        elif covered is None or int(covered) < start_wave - 1:
+            log.warning(
+                "restored filter blobs cover the seen log through wave %s "
+                "but the crawl resumes at wave %d; rebuilding from the "
+                "seen set", covered, start_wave,
             )
             blobs = None
 
@@ -407,6 +461,10 @@ def run_crawl(
     _links_size = F.when(F.col("links").isNull(), F.lit(0)).otherwise(
         F.size(F.col("links"))
     )
+    # pages one extent row can expand to (+1 covers the HDW over-scan
+    # quirk); summed over the extent rows it bounds expand_pagination_df's
+    # per-(site, category, template, depth, priority) max from above
+    _pag_extent = F.least(F.col("last_page") + 1, F.lit(max_pagination))
 
     # ---- pipelined-frontier state ---------------------------------------
     # The wave-k frontier writer runs on a thread UNDER wave k+1's fetch
@@ -474,11 +532,17 @@ def run_crawl(
         # semantics are identical either way.  First crossing builds the
         # blobs once from the full seen set.
         if blobs is None and seen_count >= bloom_min_seen:
-            blobs = build_filter_blobs(
+            built = build_filter_blobs(
                 seen, n_shards, n_expected_per_shard=n_per_shard
             )
-            catalog.write(blobs, "blobs", meta={"wave": wave_no})
-            blobs = catalog.read(spark, "blobs")
+            # seen_wave: the last wave whose seen delta the blobs hold
+            b_meta = {"wave": wave_no, "seen_wave": wave_no - 1}
+            if blob_strategy == "broadcast":
+                blobs = collect_shard_map(built)
+                catalog.write(shard_map_table(blobs), "blobs", meta=b_meta)
+            else:
+                catalog.write(built, "blobs", meta=b_meta)
+                blobs = catalog.read(spark, "blobs")
         # a broadcast hint is only safe when the wave is KNOWN bounded:
         # either by an explicit budget, or because the observation-derived
         # UPPER bound on this frontier (leftover + raw link mentions +
@@ -577,9 +641,7 @@ def run_crawl(
             # raw discovery masses for the pipelined tail's frontier-size
             # upper bound — they ride the same write action for free
             F.sum(_links_size).alias("n_links"),
-            F.sum(
-                F.when(_extent_pred, 1).otherwise(0)
-            ).alias("n_extents"),
+            F.sum(F.when(_extent_pred, _pag_extent)).alias("n_pag"),
         )
         snap = catalog.write(
             extracted, "extracted", meta={"wave": wave_no, "kind": "delta"}
@@ -659,27 +721,44 @@ def run_crawl(
         _seen_parts = max(1, min(n_shards, n_fresh // 4_000_000 + 1))
         seen_out = seen_delta.coalesce(_seen_parts)
         _seen_err: list = []
+        # the updated driver-held filter, handed back to the loop
+        _seen_res: list = []
 
-        def _write_seen():
+        def _write_seen(standing):
             try:
-                catalog.write(
+                s_snap = catalog.write(
                     seen_out, "seen",
                     meta={"wave": wave_no, "kind": "delta"},
                 )
-                if blobs is not None:
-                    # OR the wave's delta keys into the standing blobs
-                    # (pinned size, one cogroup stage) and checkpoint;
+                if standing is None:
+                    return
+                b_meta = {"wave": wave_no, "seen_wave": wave_no}
+                if blob_strategy == "broadcast":
+                    # OR the published delta's keys into the driver-held
+                    # filter and publish it — no Spark job
+                    keys = pq.read_table(
+                        s_snap.path, schema=_URL_HASH_SCHEMA
+                    )["url_hash"].to_numpy()
+                    new = or_into_shard_map(
+                        standing, keys, n_shards, n_per_shard
+                    )
+                    catalog.write(shard_map_table(new), "blobs", meta=b_meta)
+                    _seen_res.append(new)
+                else:
+                    # one cogroup stage over the standing blob table;
                     # read-back keeps the blob lineage flat across waves
                     catalog.write(
                         update_filter_blobs(
-                            blobs, seen_delta, n_shards, n_per_shard
+                            standing, seen_delta, n_shards, n_per_shard
                         ),
-                        "blobs", meta={"wave": wave_no},
+                        "blobs", meta=b_meta,
                     )
             except BaseException as ex:
                 _seen_err.append(ex)
 
-        seen_thread = InheritableThread(target=_write_seen, daemon=True)
+        seen_thread = InheritableThread(
+            target=_write_seen, args=(blobs,), daemon=True
+        )
         seen_thread.start()
         _mark("seen_checkpoint")
 
@@ -724,8 +803,8 @@ def run_crawl(
         # checkpoint wall (~1.2-1.5 s/wave at BOTH scaling levels, r5b
         # stage decomposition) to this stage; the thread now runs
         # underneath the entire frontier build + write below, and the log
-        # re-read (flat base+deltas scan, bounded lineage) plus the blob
-        # read-back happen after that write.
+        # re-read (flat base+deltas scan, bounded lineage) plus the pick-up
+        # of the updated blobs happen after that write.
         #
         # Pipelined tail: wave k's frontier writer is about to be STARTED
         # on a thread and joined only here, one wave later — it runs under
@@ -750,7 +829,7 @@ def run_crawl(
         delta_keys = wave_ex.select(F.xxhash64("url").alias("url_hash"))
         if not leftover_vs_full:
             if wave_budget is None:
-                leftover = spark.createDataFrame([], frontier.schema)
+                leftover = _empty_frame(spark, frontier.schema)
             elif catalog.exists("frontier"):
                 # the taken-wave keys are RECOMPUTED from the read-back
                 # (deterministic: after dedup the (priority, depth,
@@ -814,33 +893,14 @@ def run_crawl(
             }
         )
         # lineage is an append-log too: ONE row per wave (O(delta), not a
-        # growing rewrite), published on a thread that overlaps the
-        # frontier write — the two jobs share no inputs
-        l = lineage[-1]
-        lineage_df = spark.createDataFrame(
-            [
-                (
-                    l["wave"], l["frontier_size"], l["robots_blocked"],
-                    l["dedup_dropped"], l["attempted"], l["fetched"],
-                    l["missed"],
-                )
-            ],
-            "wave int, frontier_size long, robots_blocked long, "
-            "dedup_dropped long, attempted long, fetched long, missed long",
+        # growing rewrite), written by pyarrow — no Spark job
+        catalog.write(
+            pa.table(
+                [[lineage[-1][c]] for c in _LINEAGE_SCHEMA.names],
+                schema=_LINEAGE_SCHEMA,
+            ),
+            "lineage", meta={"wave": wave_no, "kind": "delta"},
         )
-        _lin_err: list = []
-
-        def _write_lineage():
-            try:
-                catalog.write(
-                    lineage_df, "lineage",
-                    meta={"wave": wave_no, "kind": "delta"},
-                )
-            except BaseException as ex:
-                _lin_err.append(ex)
-
-        lin_thread = InheritableThread(target=_write_lineage, daemon=True)
-        lin_thread.start()
 
         # ---- pipelined frontier write ------------------------------------
         # The write (and with it the whole frontier COMPUTE: link explode,
@@ -879,37 +939,15 @@ def run_crawl(
             n_links = _obs_n(
                 obs_hit, wave_ex.select(F.explode("links")), "n_links"
             )
-            n_extents = _obs_n(
-                obs_hit, wave_ex.filter(_extent_pred), "n_extents"
+            n_pag = _obs_n(
+                obs_hit,
+                wave_ex.filter(_extent_pred).select(
+                    F.explode(F.sequence(F.lit(1), _pag_extent))
+                ),
+                "n_pag",
             )
-            pag_ub = 0
-            if n_extents > 0:
-                # deduped extent mass, mirroring expand_pagination_df's
-                # per-(site, category, template, depth, priority) collapse
-                # (+1 covers the HDW over-scan quirk).  A tiny agg over the
-                # written wave parquet — listing-discovery waves only.
-                pag_ub = int(
-                    wave_ex.filter(_extent_pred)
-                    .groupBy(
-                        "site", "category", "url_template", "depth",
-                        "priority",
-                    )
-                    .agg(F.max("last_page").alias("lp"))
-                    .agg(
-                        F.sum(
-                            F.least(
-                                F.col("lp") + F.lit(1), F.lit(max_pagination)
-                            )
-                        ).alias("s")
-                    )
-                    .first()["s"]
-                    or 0
-                )
-            frontier_ub = n_links + pag_ub
+            frontier_ub = n_links + n_pag
         frontier = nxt
-        lin_thread.join()
-        if _lin_err:
-            raise _lin_err[0]
         # the seen log (and standing blobs) must be current before the NEXT
         # wave's dedup gate / first-crossing blob build read them
         seen_thread.join()
@@ -917,7 +955,11 @@ def run_crawl(
             raise _seen_err[0]
         seen = catalog.read_log(spark, "seen")
         if blobs is not None:
-            blobs = catalog.read(spark, "blobs")
+            blobs = (
+                _seen_res[0]
+                if blob_strategy == "broadcast"
+                else catalog.read(spark, "blobs")
+            )
         _f_prev = {"thread": f_thread, "err": _f_err, "ms": _f_ms}
         _mark("next_frontier")
         if _prev_nxt is not None:
@@ -945,7 +987,7 @@ def run_crawl(
     extracted_all = (
         catalog.read_union(spark, "extracted")
         if catalog.exists("extracted")
-        else spark.createDataFrame([], CRAWL_EXTRACT_SCHEMA)
+        else _empty_frame(spark, CRAWL_EXTRACT_SCHEMA)
     )
     return CrawlResult(
         extracted=extracted_all, seen=seen, lineage=lineage, waves=wave_no
@@ -1027,8 +1069,10 @@ def _resume_point(catalog: Catalog) -> int:
     Publishes happen in wave order, so the walk terminates within the
     1-2 torn waves a single crash can leave; blobs are excluded from the
     completeness test because they are only written once the seen set
-    crosses the bloom gate (stale blob bits are harmless either way — the
-    exact-seen backstop corrects bloom false positives)."""
+    crosses the bloom gate.  Extra blob bits are harmless (the exact-seen
+    backstop corrects bloom false positives); missing ones are not, so
+    ``run_crawl`` rebuilds a restored filter whose meta ``seen_wave`` is
+    older than the wave before the resume point."""
 
     def _delta_waves(name: str) -> set[int]:
         return {

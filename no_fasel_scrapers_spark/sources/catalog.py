@@ -26,6 +26,8 @@ import os
 import shutil
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -35,8 +37,6 @@ def _footer_row_count(data_dir: str) -> int:
     the driver — exact and job-free for the local backend; the Iceberg
     binding gets this from the snapshot summary instead."""
     import glob
-
-    import pyarrow.parquet as pq
 
     total = 0
     for f in glob.glob(
@@ -97,23 +97,43 @@ class Catalog:
     # -- IO ----------------------------------------------------------------
     def write(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         name: str,
         partition_by: list[str] | None = None,
         meta: dict | None = None,
     ) -> Snapshot:
-        """Write a new immutable snapshot of ``name`` and publish it."""
+        """Write a new immutable snapshot of ``name`` and publish it.
+
+        ``df`` is a Spark DataFrame or a driver-side ``pyarrow.Table``.
+        A table is written by pyarrow as one parquet file, with no Spark
+        job: the path for the crawl's few-row bookkeeping tables (lineage
+        rows, filter blobs), where a job's fixed cost is the whole cost."""
         prev = self.latest(name)
         version = 0 if prev is None else prev.version + 1
         data_dir = os.path.join(self._tdir(name), f"v{version}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        # exact manifest row count from the committed files' parquet
-        # footers, read driver-side — no Spark job, and (unlike an
-        # Observation on the write) immune to task-retry over-counting
-        rows = _footer_row_count(data_dir)
+        if isinstance(df, pa.Table):
+            if partition_by:
+                raise ValueError("an arrow table is written unpartitioned")
+            # a writer killed before its publish leaves an unpublished
+            # v{N}; replace it, as the Spark writer's overwrite mode does
+            shutil.rmtree(data_dir, ignore_errors=True)
+            os.makedirs(data_dir)
+            # zstd, the session's parquet codec (session.py): bloom bits
+            # are mostly zeros and shrink ~2x against pyarrow's snappy
+            pq.write_table(
+                df, os.path.join(data_dir, "part-00000.parquet"),
+                compression="zstd",
+            )
+            rows = df.num_rows
+        else:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(data_dir)
+            # exact manifest row count from the committed files' parquet
+            # footers, read driver-side — no Spark job, and (unlike an
+            # Observation on the write) immune to task-retry over-counting
+            rows = _footer_row_count(data_dir)
         manifest = {
             "version": version,
             "rows": rows,
@@ -151,6 +171,16 @@ class Catalog:
             raise FileNotFoundError(f"table {name!r} has no published snapshot")
         return spark.read.parquet(*[s.path for s in snaps])
 
+    def _log_snapshots(self, name: str) -> list[Snapshot]:
+        snaps = self.snapshots(name)
+        if not snaps:
+            raise FileNotFoundError(f"table {name!r} has no published snapshot")
+        base = 0
+        for i, s in enumerate(snaps):
+            if s.meta.get("kind") in ("base", "compact"):
+                base = i
+        return snaps[base:]
+
     def read_log(self, spark: SparkSession, name: str) -> DataFrame:
         """Append-log read honoring compaction markers.
 
@@ -161,14 +191,14 @@ class Catalog:
         compaction) stay a single atomic manifest publish while normal
         writers keep appending O(delta) snapshots — the local stand-in for
         an Iceberg REPLACE commit on an append table."""
-        snaps = self.snapshots(name)
-        if not snaps:
-            raise FileNotFoundError(f"table {name!r} has no published snapshot")
-        base = 0
-        for i, s in enumerate(snaps):
-            if s.meta.get("kind") in ("base", "compact"):
-                base = i
-        return spark.read.parquet(*[s.path for s in snaps[base:]])
+        return spark.read.parquet(*[s.path for s in self._log_snapshots(name)])
+
+    def log_rows(self, name: str) -> int:
+        """Rows ``read_log`` reads, summed from the manifests — no Spark
+        job; 0 for a table with no published snapshot."""
+        if not self.exists(name):
+            return 0
+        return sum(s.rows for s in self._log_snapshots(name))
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._tdir(name), ignore_errors=True)

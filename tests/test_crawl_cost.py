@@ -7,17 +7,24 @@ tracker, so a regression shows up as a failing count, not as noise."""
 
 import pytest
 
+from no_fasel_scrapers_spark.plans import crawl as crawl_mod
 from no_fasel_scrapers_spark.plans.crawl import run_crawl
 from no_fasel_scrapers_spark.sources.catalog import Catalog
 
 KEY = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 # Measured on the Fixture() crawl at local[4] with 32 shuffle partitions:
-# 5 waves, 29.6 jobs and 61.4 tasks per wave (365 tasks per wave when the
-# cached wave frames kept all 32 shuffle partitions).  The ceilings allow
-# ~20% more jobs and ~30% more tasks than measured.
-MAX_JOBS_PER_WAVE = 36
-MAX_TASKS_PER_WAVE = 80
+# 5 waves, 26.6 jobs and 46.2 tasks per wave (365 tasks per wave when the
+# cached wave frames kept all 32 shuffle partitions; 29.6 jobs and 61.4
+# tasks while the lineage row and the pagination bound ran Spark jobs);
+# with the filter built from wave 0, 26.0 jobs and 44.4 tasks per wave
+# (34.0 jobs while the filter was updated by a cogroup stage and read back
+# every wave).  The ceilings allow ~20% more jobs and ~30% more tasks than
+# measured.
+MAX_JOBS_PER_WAVE = 32
+MAX_TASKS_PER_WAVE = 60
+MAX_BLOOM_JOBS_PER_WAVE = 32
+MAX_BLOOM_TASKS_PER_WAVE = 58
 
 
 def _group_cost(sc, group):
@@ -48,27 +55,52 @@ def _inputs(spark, fixture):
     )
 
 
-def test_fixture_crawl_jobs_and_tasks_per_wave(spark, fixture, tmp_path):
+def _crawl_cost(spark, fixture, tmp_path, group, **kw):
+    """(waves, jobs, tasks) of one fixture crawl run under ``group``."""
     sc = spark.sparkContext
-    spark.conf.set(KEY, "false")
-    sc.setJobGroup("crawl-cost", "fixture crawl under the cost guard")
+    sc.setJobGroup(group, "fixture crawl under the cost guard")
     try:
         res = run_crawl(
-            spark, *_inputs(spark, fixture), Catalog(str(tmp_path / "c"))
+            spark, *_inputs(spark, fixture), Catalog(str(tmp_path / group)),
+            **kw,
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    # the crawl's background writer threads inherit the job group, so
+    # their jobs (seen/blob checkpoint, frontier) count too
+    return (res.waves, *_group_cost(sc, group))
+
+
+def test_fixture_crawl_jobs_and_tasks_per_wave(spark, fixture, tmp_path):
+    spark.conf.set(KEY, "false")
+    waves, jobs, tasks = _crawl_cost(spark, fixture, tmp_path, "crawl-cost")
     # the caller's value comes back after a crawl that returned
     assert spark.conf.get(KEY) == "false"
     spark.conf.unset(KEY)
 
-    jobs, tasks = _group_cost(sc, "crawl-cost")
-    # the crawl's background writer threads inherit the job group, so
-    # their jobs (seen/blob checkpoint, lineage, frontier) count too
-    assert res.waves == 5
-    assert jobs / res.waves <= MAX_JOBS_PER_WAVE, (jobs, res.waves)
-    assert tasks / res.waves <= MAX_TASKS_PER_WAVE, (tasks, res.waves)
+    assert waves == 5
+    assert jobs / waves <= MAX_JOBS_PER_WAVE, (jobs, waves)
+    assert tasks / waves <= MAX_TASKS_PER_WAVE, (tasks, waves)
+
+
+def test_bloom_fixture_crawl_jobs_and_tasks_per_wave(
+    spark, fixture, tmp_path, monkeypatch
+):
+    """The same crawl with the filter built from wave 0: each wave also
+    probes the driver-held filter and publishes its update, which runs
+    no cogroup stage."""
+
+    def _cogroup_update(*a, **k):
+        raise AssertionError("the broadcast-sized filter ran a cogroup")
+
+    monkeypatch.setattr(crawl_mod, "update_filter_blobs", _cogroup_update)
+    waves, jobs, tasks = _crawl_cost(
+        spark, fixture, tmp_path, "crawl-cost-bloom", bloom_min_seen=0
+    )
+    assert waves == 5
+    assert jobs / waves <= MAX_BLOOM_JOBS_PER_WAVE, (jobs, waves)
+    assert tasks / waves <= MAX_BLOOM_TASKS_PER_WAVE, (tasks, waves)
 
 
 class _FailingCatalog(Catalog):

@@ -2,9 +2,17 @@
 (north_rule resumability)."""
 
 import logging
+import os
 
+import numpy as np
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
+from no_fasel_scrapers_spark.operators.seen_filter import (
+    probe_bloom,
+    read_shard_map,
+)
 from no_fasel_scrapers_spark.plans import crawl as crawl_mod
 from no_fasel_scrapers_spark.plans.crawl import resume_crawl, run_crawl
 from no_fasel_scrapers_spark.sources.catalog import Catalog
@@ -88,6 +96,31 @@ def test_torn_manifest_ignored(spark, fixture, tmp_path):
     assert cat.read(spark, "t").count() == 3
 
 
+def test_catalog_writes_arrow_table(spark, tmp_path):
+    """A pyarrow table publishes like a DataFrame, with no Spark job."""
+    cat = Catalog(str(tmp_path / "a"))
+    cat.write(spark.range(2).select(F.col("id").alias("n")), "t")
+    # an unpublished v1 left by a killed writer is replaced, not merged
+    os.makedirs(os.path.join(cat.root, "t", "v1"))
+    with open(os.path.join(cat.root, "t", "v1", "stale.parquet"), "w") as fp:
+        fp.write("torn")
+    tbl = pa.table({"n": pa.array([5, 6, 7], pa.int64())})
+    sc = spark.sparkContext
+    sc.setJobGroup("arrow-write", "catalog write of an arrow table")
+    try:
+        snap = cat.write(tbl, "t", meta={"wave": 1})
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("arrow-write") == []
+    assert (snap.version, snap.rows, snap.meta) == (1, 3, {"wave": 1})
+    assert os.listdir(snap.path) == ["part-00000.parquet"]
+    assert [s.rows for s in cat.snapshots("t")] == [2, 3]
+    assert cat.log_rows("t") == 5
+    assert sorted(r["n"] for r in cat.read(spark, "t").collect()) == [5, 6, 7]
+    with pytest.raises(ValueError, match="unpartitioned"):
+        cat.write(tbl, "t", partition_by=["n"])
+
+
 def test_catalog_merge_upsert_both_precedences(spark, tmp_path):
     cat = Catalog(str(tmp_path / "m"))
     old = spark.createDataFrame(
@@ -142,8 +175,8 @@ def test_resume_after_midwave_crash_torn_frontier(spark, fixture, tmp_path):
     f = cat.latest("frontier")
     assert int(f.meta["wave"]) == 3
     cat.unpublish("frontier", f.version)  # wave 2's frontier never landed
-    # the torn wave's lineage write rides its own thread — simulate the
-    # crash landing before it, too
+    # the torn wave's lineage row is published before its frontier write
+    # starts — simulate the crash landing before it, too
     lin = [
         s for s in cat.snapshots("lineage") if int(s.meta.get("wave", -1)) == 2
     ]
@@ -211,3 +244,35 @@ def test_resume_fresh_run_torn_wave0(spark, fixture, tmp_path):
 
     resumed = resume_crawl(spark, pages, seeds, robots, cat)
     assert _state(resumed) == _state(full)
+
+
+def test_resume_rebuilds_filter_lagging_the_seen_log(
+    spark, fixture, tmp_path, caplog
+):
+    """Kill between a wave's seen publish and its blob publish: the last
+    blob snapshot lacks that wave's keys.  Resume must rebuild the filter
+    from the seen set; restoring it would leave false negatives that only
+    the frontier's exact prune hides."""
+    pages = fixture.pages_df(spark)
+    seeds = fixture.seeds_df(spark)
+    robots = fixture.robots_df(spark)
+
+    cat = Catalog(str(tmp_path / "lag"))
+    run_crawl(spark, pages, seeds, robots, cat, max_waves=3, bloom_min_seen=0)
+    b = cat.latest("blobs")
+    assert b.meta == {"wave": 2, "seen_wave": 2}
+    cat.unpublish("blobs", b.version)
+    with caplog.at_level(logging.WARNING, logger=crawl_mod.__name__):
+        resumed = resume_crawl(
+            spark, pages, seeds, robots, cat, bloom_min_seen=0
+        )
+    assert "cover the seen log through wave 1" in caplog.text
+
+    held = read_shard_map(cat.latest("blobs").path)
+    h = np.array(
+        [r["url_hash"] for r in resumed.seen.collect()], dtype=np.int64
+    )
+    shards = h % 32
+    for s in np.unique(shards).tolist():
+        m, k, bits, _ = held[s]
+        assert probe_bloom(bits, h[shards == s].astype(np.uint64), m, k).all()

@@ -100,3 +100,25 @@ def test_import_loads_no_package_module():
         text=True, check=True,
     )
     assert out.stdout.strip() == "[]"
+
+
+def test_query_scratch_dirs_removed_at_exit(tmp_path):
+    """A registry crawl query keeps its catalog in a temp directory that
+    the returned frame reads lazily: the directory outlives the query
+    function and is removed when the process exits."""
+    code = (
+        "import glob, os\n"
+        "import __spark_entry__ as E\n"
+        "from no_fasel_scrapers_spark.session import get_spark\n"
+        "spark = get_spark(master='local[2]')\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "E.REGISTRY['crawl_e2e'].build(spark, '').collect()\n"
+        "print(len(glob.glob(os.path.join(os.environ['TMPDIR'], 'nfs_*'))))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, check=True, env=dict(os.environ, TMPDIR=str(tmp_path)),
+    )
+    assert out.stdout.strip().splitlines()[-1] == "1"
+    assert sorted(p.name for p in tmp_path.glob("nfs_*")) == []

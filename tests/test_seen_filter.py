@@ -10,8 +10,12 @@ from no_fasel_scrapers_spark.operators.seen_filter import (
     bloom_params,
     build_bloom,
     build_filter_blobs,
+    collect_shard_map,
     dedup_against_seen,
+    or_into_shard_map,
     probe_bloom,
+    read_shard_map,
+    shard_map_table,
     update_filter_blobs,
 )
 from no_fasel_scrapers_spark.sources.catalog import Catalog
@@ -173,3 +177,60 @@ class TestIncrementalBlobs:
         assert by_shard(got) == by_shard(want)
         both = seen.unionByName(delta)
         assert new_ids(both, got) == new_ids(both, want)
+
+
+class TestDriverHeldBlobs:
+    """or_into_shard_map: the driver-side OR == the cogroup update."""
+
+    def test_driver_or_equals_cogroup_update(self, spark, tmp_path):
+        n_shards, nps = 8, 1000
+        # standing blobs lack shards 0 and 1; the delta lacks shard 5
+        a = spark.range(0, 4000).select(
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        ).filter(F.pmod("url_hash", F.lit(n_shards)) >= 2)
+        b = spark.range(4000, 7000).select(
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        ).filter(F.pmod("url_hash", F.lit(n_shards)) != 5)
+        standing = build_filter_blobs(a, n_shards, n_expected_per_shard=nps)
+        want = collect_shard_map(
+            update_filter_blobs(standing, b, n_shards, nps)
+        )
+        held = collect_shard_map(standing)
+        assert not {0, 1} & set(held)
+        keys = np.array([r["url_hash"] for r in b.collect()], dtype=np.int64)
+        got = or_into_shard_map(held, keys, n_shards, nps)
+        assert got == want
+        # the input map is left as it was
+        assert held == collect_shard_map(standing)
+        # the arrow table round-trips through the catalog unchanged
+        cat = Catalog(str(tmp_path / "c"))
+        snap = cat.write(shard_map_table(got), "blobs")
+        assert snap.rows == len(got)
+        assert read_shard_map(snap.path) == got
+        assert collect_shard_map(cat.read(spark, "blobs")) == got
+
+    def test_driver_or_rejects_mismatched_sizing(self, spark):
+        a = spark.range(0, 500).select(
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash")
+        )
+        held = collect_shard_map(
+            build_filter_blobs(a, 4, n_expected_per_shard=100)
+        )
+        with pytest.raises(ValueError, match="cannot OR-merge"):
+            or_into_shard_map(held, np.array([1, 2], np.int64), 4, 9999)
+
+    def test_held_map_probes_like_the_table(self, spark):
+        cand = spark.range(0, 3000).select(
+            F.col("id").alias("event_id"),
+            F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+        )
+        seen = cand.filter(F.col("event_id") % 3 == 0).select("url_hash")
+        blobs = build_filter_blobs(seen, 8, n_expected_per_shard=500)
+        got = dedup_against_seen(cand, seen, collect_shard_map(blobs), 8)
+        want = sorted(i for i in range(3000) if i % 3 != 0)
+        assert sorted(r["event_id"] for r in got.collect()) == want
+        with pytest.raises(ValueError, match="broadcast only"):
+            dedup_against_seen(
+                cand, seen, collect_shard_map(blobs), 8,
+                blob_strategy="cogroup",
+            )
