@@ -866,6 +866,7 @@ def q_seen_filter_dedup(spark, sf_dir):
     the plain anti-join (zero false drops — the correctness contract)."""
     from no_fasel_scrapers_spark.operators.seen_filter import (
         build_filter_blobs,
+        collect_shard_map,
         dedup_against_seen,
     )
 
@@ -877,7 +878,8 @@ def q_seen_filter_dedup(spark, sf_dir):
         ).alias("url_hash"),
     )
     seen = cand.filter(F.col("event_id") % 3 == 0).select("url_hash")
-    blobs = build_filter_blobs(seen, n_shards=16)
+    # a driver-sized filter: held, so the probe broadcasts it
+    blobs = collect_shard_map(build_filter_blobs(seen, n_shards=16))
     return dedup_against_seen(cand, seen, blobs, n_shards=16).select("event_id")
 
 

@@ -85,8 +85,6 @@ def main() -> None:
     )
     if args.seen_prior:
         kw["seen_prior"] = spark.read.parquet(args.seen_prior)
-    elif fx is not None and not args.pages:
-        pass  # fresh crawl of the fixture by default
     if args.recrawl_urls:
         with open(args.recrawl_urls) as fh:
             urls = [(u.strip(),) for u in fh if u.strip()]

@@ -16,25 +16,18 @@ is ``repartition(host, host_salt)`` so one mega-host spreads over
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.canonical import canonicalize_url, url_host
-
-FRONTIER_SCHEMA = (
-    "url string, url_hash long, host string, host_salt int, site string, "
-    "category string, role string, url_template string, depth int, "
-    "priority int, discovered_from string"
-)
 
 ORDER_COLS = ["priority", "depth", "url_hash"]
 
 # pagination expansion: pages per explode task (see _pagination_cols) —
 # bounds both the per-task URL-build work and the sequence() array size
 PAGINATION_CHUNK = 8_192
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=8)

@@ -7,19 +7,22 @@ wave; this operator is the scale path:
 
 1. the seen set is summarized into per-shard **bloom blobs** (numpy bitsets,
    one per ``pmod(url_hash, n_shards)``), built distributed with
-   ``applyInPandas`` and checkpointed to the catalog each wave.  Each
-   wave's keys are ORed into the standing blobs: on the driver
-   (:func:`or_into_shard_map`, no Spark job) while the filter fits the
-   broadcast probe, by one shard cogroup (:func:`update_filter_blobs`)
-   beyond it;
+   ``applyInPandas`` and checkpointed to the catalog each wave.  The filter
+   lives in one of two forms, picked here once from the pinned sizing
+   (``expected_urls * BITS_PER_KEY / 8`` bytes, see :class:`CrawlFilter`):
+   held on the driver as a :data:`ShardMap` up to
+   :data:`BROADCAST_MAX_BYTES`, a blob-table DataFrame beyond it.  Each
+   wave's keys are ORed into the standing blobs in the form's own way: on
+   the driver (:func:`or_into_shard_map`, no Spark job) or by one shard
+   cogroup (:func:`update_filter_blobs`);
 2. candidate URLs probe the blobs inside ``mapInPandas`` (vectorized numpy,
    no per-row Python) — *bloom-negative rows are definitely new* and skip
    the expensive path entirely (the predicate-pushdown analog: cheap
-   membership before the join, SURVEY.md §4).  Blobs reach the probe as a
-   Spark broadcast variable (≤512 MB of filter, shipped from the
-   driver-held :data:`ShardMap`) or a shard cogroup (beyond), NEVER as a
-   joined-on column: attaching a blob to each row ships
-   O(rows × blob bytes) — measured superlinear on the 3M-page site crawl;
+   membership before the join, SURVEY.md §4).  The form chooses the probe:
+   a held map ships as a Spark broadcast variable, a blob table meets the
+   candidates in a shard cogroup — NEVER as a joined-on column: attaching
+   a blob to each row ships O(rows × blob bytes) — measured superlinear on
+   the 3M-page site crawl;
 3. only bloom-positive rows (true seen + fpp false positives) go through the
    exact ``left_anti`` join backstop, so correctness never depends on fpp.
 
@@ -35,13 +38,14 @@ task by the shard-cogroup probe path.
 from __future__ import annotations
 
 import math
-from typing import Iterable, Iterator, NamedTuple
+from collections.abc import Callable, Iterable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BLOB_SCHEMA = "shard int, bits binary, n_items long, m long, k int"
@@ -50,6 +54,8 @@ _BLOB_ARROW = pa.schema([
     ("shard", pa.int32()), ("bits", pa.binary()), ("n_items", pa.int64()),
     ("m", pa.int64()), ("k", pa.int32()),
 ])
+# the key column of a published seen snapshot, as the held update reads it
+_URL_HASH_SCHEMA = pa.schema([("url_hash", pa.int64())])
 BITS_PER_KEY = 10
 
 
@@ -140,26 +146,20 @@ def update_filter_blobs(
 
     The incremental path for a long crawl: O(filter bytes) per wave instead
     of an O(|seen|) rebuild, as ONE cogroup per shard of standing blob and
-    delta keys.  A shard missing from the blobs starts empty; a blob with
-    another (m, k) (e.g. a legacy auto-sized one) raises, since ORing
-    differently-sized bitsets would corrupt membership."""
+    delta keys (:func:`_or_shard` per shard)."""
     m, k = bloom_params(n_expected_per_shard)
     shard = F.pmod("url_hash", F.lit(n_shards)).cast("int").alias("shard")
 
     def _or(key, blob_pdf: pd.DataFrame, keys_pdf: pd.DataFrame):
-        if (blob_pdf["m"] != m).any() or (blob_pdf["k"] != k).any():
-            raise ValueError(
-                f"shard {key[0]}: cannot OR-merge blobs with different (m, k)"
-                f" — rebuild with a pinned n_expected_per_shard"
-            )
         h = keys_pdf["url_hash"].to_numpy(dtype=np.int64).astype(np.uint64)
-        bits = np.frombuffer(build_bloom(h, m, k), dtype=np.uint8).copy()
-        for blob in blob_pdf["bits"]:
-            bits |= np.frombuffer(blob, dtype=np.uint8)
+        standing = map(
+            ShardBlob, blob_pdf["m"], blob_pdf["k"], blob_pdf["bits"],
+            blob_pdf["n_items"],
+        )
+        b = _or_shard(int(key[0]), standing, h, m, k)
         return pd.DataFrame(
             [{
-                "shard": int(key[0]), "bits": bits.tobytes(),
-                "n_items": int(blob_pdf["n_items"].sum()) + len(h),
+                "shard": int(key[0]), "bits": b.bits, "n_items": b.n_items,
                 "m": m, "k": k,
             }]
         )
@@ -180,10 +180,33 @@ class ShardBlob(NamedTuple):
     n_items: int
 
 
-# The whole filter on the driver, {shard: ShardBlob}: what the broadcast
-# probe ships, and what a crawl keeps between waves while the filter fits
-# the broadcast path.
+# The whole filter on the driver, {shard: ShardBlob}: the held form, which
+# the probe ships as a Spark broadcast variable.
 ShardMap = dict[int, ShardBlob]
+# The standing filter in either form: held, or a blob table (BLOB_SCHEMA).
+SeenFilter = ShardMap | DataFrame
+
+
+def _or_shard(
+    shard: int, standing: Iterable[ShardBlob], h: np.ndarray, m: int, k: int
+) -> ShardBlob:
+    """One shard's standing blobs with the keys ``h`` ORed in.  No
+    standing blob starts the shard empty; one with another (m, k) (e.g. a
+    legacy auto-sized one) raises, since ORing differently-sized bitsets
+    would corrupt membership."""
+    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
+    n_items = len(h)
+    for b in standing:
+        if (b.m, b.k) != (m, k):
+            raise ValueError(
+                f"shard {shard}: cannot OR-merge blobs with different (m, k)"
+                f" — rebuild with a pinned n_expected_per_shard"
+            )
+        bits |= np.frombuffer(b.bits, dtype=np.uint8)
+        n_items += int(b.n_items)
+    _set_bits(bits, h, m, k)
+    return ShardBlob(m, k, bits.tobytes(), n_items)
+
 
 def _shard_map(rows: Iterable) -> ShardMap:
     return {
@@ -228,51 +251,91 @@ def or_into_shard_map(
     n_expected_per_shard: int,
 ) -> ShardMap:
     """:func:`update_filter_blobs` on the driver: a new map with the keys
-    ORed in, bit for bit the cogroup's result.  A shard the map lacks
-    starts empty; a blob with another (m, k) raises."""
+    ORed in, bit for bit the cogroup's result.  Only the shards the keys
+    touch are rebuilt (:func:`_or_shard`); the rest pass through."""
     m, k = bloom_params(n_expected_per_shard)
-    for s, b in blobs.items():
-        if (b.m, b.k) != (m, k):
-            raise ValueError(
-                f"shard {s}: cannot OR-merge blobs with different (m, k)"
-                f" — rebuild with a pinned n_expected_per_shard"
-            )
     h64 = np.asarray(url_hash, dtype=np.int64)
     # numpy % with a positive modulus matches F.pmod
     shards = h64 % n_shards
     out = dict(blobs)
     for s in np.unique(shards).tolist():
-        h = h64[shards == s].astype(np.uint64)
-        old = blobs.get(s)
-        bits = (
-            np.zeros((m + 7) // 8, dtype=np.uint8)
-            if old is None
-            else np.frombuffer(old.bits, dtype=np.uint8).copy()
-        )
-        _set_bits(bits, h, m, k)
-        out[s] = ShardBlob(
-            m, k, bits.tobytes(), (0 if old is None else old.n_items) + len(h)
-        )
+        old = [blobs[s]] if s in blobs else []
+        out[s] = _or_shard(s, old, h64[shards == s].astype(np.uint64), m, k)
     return out
 
 
-# "auto" strategy cutover: collect + Spark-broadcast the whole filter up to
-# this many bytes (512 MB ≈ 4×10^8 keys at 10 bits/key); past that, the
-# shard-cogroup path keeps every blob off the driver.
+# The held form's ceiling: a filter of up to this many bytes (512 MB ≈
+# 4×10^8 keys at 10 bits/key) stays on the driver and probes by broadcast;
+# past it, the blob table and the shard cogroup keep every blob off the
+# driver.
 BROADCAST_MAX_BYTES = 512 << 20
 
 
-def _filter_bytes(blobs: DataFrame) -> int:
-    """Total filter size — an n_shards-row agg, one tiny job."""
-    row = blobs.agg(F.sum(F.length("bits")).alias("b")).collect()[0]
-    return int(row["b"] or 0)
+def blob_sizings(path: str) -> set[tuple[int, int]]:
+    """The distinct (m, k) of a blob snapshot, read by pyarrow (no job)."""
+    t = pq.read_table(path, columns=["m", "k"])
+    return set(zip(t["m"].to_pylist(), t["k"].to_pylist()))
+
+
+class CrawlFilter:
+    """A crawl's standing filter operations for one pinned sizing.
+
+    The form is picked here, once, from the pinned sizing: held on the
+    driver while ``expected_urls * BITS_PER_KEY // 8 <=
+    BROADCAST_MAX_BYTES``, a blob table beyond it.  Each operation takes
+    and returns the filter in that form, so a caller never branches on it.
+    """
+
+    def __init__(self, n_shards: int, expected_urls: int):
+        self.n_shards = n_shards
+        self.n_per_shard = max(1, expected_urls // n_shards)
+        # the (m, k) every blob of this filter carries
+        self.sizing = bloom_params(self.n_per_shard)
+        self.held = expected_urls * BITS_PER_KEY // 8 <= BROADCAST_MAX_BYTES
+
+    def restore(self, spark: SparkSession, path: str) -> SeenFilter:
+        """The filter a blob snapshot directory holds."""
+        return read_shard_map(path) if self.held else spark.read.parquet(path)
+
+    def build(self, seen: DataFrame) -> SeenFilter:
+        """The filter of a whole seen set (unpublished)."""
+        built = build_filter_blobs(
+            seen, self.n_shards, n_expected_per_shard=self.n_per_shard
+        )
+        return collect_shard_map(built) if self.held else built
+
+    def or_in(self, blobs: SeenFilter, seen_path: str) -> SeenFilter:
+        """``blobs`` with the keys of a published seen snapshot ORed in
+        (unpublished): on the driver with pyarrow and numpy when held, by
+        one shard cogroup over the snapshot otherwise."""
+        if self.held:
+            keys = pq.read_table(seen_path, schema=_URL_HASH_SCHEMA)
+            return or_into_shard_map(
+                blobs, keys["url_hash"].to_numpy(), self.n_shards,
+                self.n_per_shard,
+            )
+        return update_filter_blobs(
+            blobs, blobs.sparkSession.read.parquet(seen_path), self.n_shards,
+            self.n_per_shard,
+        )
+
+    def publish(
+        self, blobs: SeenFilter, write: Callable[[DataFrame | pa.Table], str]
+    ) -> SeenFilter:
+        """Publish ``blobs`` through ``write`` (data → snapshot directory).
+        A held map is written as an arrow table, with no Spark job; a blob
+        table is rebound onto its snapshot, which keeps its lineage flat
+        across waves."""
+        if self.held:
+            write(shard_map_table(blobs))
+            return blobs
+        return blobs.sparkSession.read.parquet(write(blobs))
 
 
 def mark_maybe_seen(
     candidates: DataFrame,
-    blobs: DataFrame | ShardMap,
+    blobs: SeenFilter,
     n_shards: int = 32,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Attach ``maybe_seen`` to candidates by probing the bloom blobs.
 
@@ -281,44 +344,28 @@ def mark_maybe_seen(
     to candidate rows: a per-row join ships O(rows × blob) bytes through
     the join output and the Arrow boundary — measured superlinear on the
     generated 3M-page site crawl (per-page core-ms tripled when the filter
-    tripled; ~700 GB of duplicated blob bytes in one wave).  Instead:
+    tripled; ~700 GB of duplicated blob bytes in one wave).  Instead the
+    filter's form chooses the probe:
 
-    - ``broadcast``: the n_shards blob rows are collected once and shipped
-      as a Spark broadcast variable (one torrent copy per executor);
-      candidates stream through mapInPandas untouched — zero shuffle,
-      zero per-row blob bytes.
-    - ``cogroup``: candidates shuffle on shard and cogroup with the blob
-      table, so each task materializes its shard's blob exactly once.
-      The scale path once the whole filter outgrows a driver collect
-      (10^10 keys × 1.25 B ≈ 12.5 GB — size n_shards ≥ 4096 there so
-      per-task groups stay executor-memory-bounded).
-    - ``auto``: broadcast while the filter totals ≤ ``BROADCAST_MAX_BYTES``
-      (one n_shards-row agg job), else cogroup.
+    - a held :data:`ShardMap` (up to ``BROADCAST_MAX_BYTES``) ships as a
+      Spark broadcast variable (one torrent copy per executor); candidates
+      stream through mapInPandas untouched — zero shuffle, zero per-row
+      blob bytes.
+    - a blob-table DataFrame meets the candidates in a shard cogroup, so
+      each task materializes its shard's blob exactly once.  The scale
+      path once the whole filter outgrows the driver (10^10 keys × 1.25 B
+      ≈ 12.5 GB — size n_shards ≥ 4096 there so per-task groups stay
+      executor-memory-bounded).
 
-    ``blobs`` may also be a :data:`ShardMap` the caller already holds on
-    the driver; it probes by broadcast, with no collect.  Either way
-    :func:`probe_bloom` runs vectorized numpy per batch/group.
+    Either way :func:`probe_bloom` runs vectorized numpy per batch/group.
     """
-    held = isinstance(blobs, dict)
-    if strategy == "auto":
-        strategy = (
-            "broadcast"
-            if held or _filter_bytes(blobs) <= BROADCAST_MAX_BYTES
-            else "cogroup"
-        )
-    if strategy not in ("broadcast", "cogroup"):
-        raise ValueError(f"unknown blob probe strategy: {strategy!r}")
-    if held and strategy == "cogroup":
-        raise ValueError("a driver-held shard map probes by broadcast only")
-
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
     ) + ", maybe_seen boolean"
     cand_cols = [f.name for f in candidates.schema.fields]
 
-    if strategy == "broadcast":
-        shard_map = blobs if held else collect_shard_map(blobs)
-        bc = candidates.sparkSession.sparkContext.broadcast(shard_map)
+    if isinstance(blobs, dict):
+        bc = candidates.sparkSession.sparkContext.broadcast(blobs)
 
         def _probe(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             tbl = bc.value
@@ -369,10 +416,9 @@ def mark_maybe_seen(
 def dedup_against_seen(
     candidates: DataFrame,
     seen: DataFrame | None,
-    blobs: DataFrame | ShardMap | None,
+    blobs: SeenFilter | None,
     n_shards: int = 32,
     broadcast_hint: bool = True,
-    blob_strategy: str = "auto",
 ) -> DataFrame:
     """New-only candidates: bloom pre-filter + exact backstop.
 
@@ -404,9 +450,7 @@ def dedup_against_seen(
 
     if blobs is not None:
         keys = (
-            mark_maybe_seen(
-                candidates, blobs, n_shards, strategy=blob_strategy
-            )
+            mark_maybe_seen(candidates, blobs, n_shards)
             .filter(F.col("maybe_seen"))
             .select("url_hash")
             .distinct()

@@ -30,14 +30,15 @@ Scale notes (100 TB / 10^10 URLs) — the big tables are never shuffled:
   discoveries vs a semi-reduced hit set — see the loop-bottom comment),
   so no stage anywhere shuffles the seen set;
 - bloom blobs are incremental: pinned (m, k) sizing from expected_urls,
-  each wave's keys ORed into the standing blob of their shard (O(filter
-  bytes) per wave), checkpointed and restored on resume; only
-  bloom-positive rows reach the exact backstop.  A filter that fits the
-  broadcast probe (≤ BROADCAST_MAX_BYTES) stays on the driver between
-  waves: the probe ships it as is, and the update reads the wave's
-  published seen keys with pyarrow, ORs them in with numpy and publishes
-  the blobs as an arrow table — no Spark job.  A larger filter is updated
-  by one shard cogroup stage and read back;
+  each wave's published seen keys ORed into the standing blob of their
+  shard (O(filter bytes) per wave), checkpointed and restored on resume;
+  only bloom-positive rows reach the exact backstop.  The loop holds the
+  filter as one opaque value and runs four operations on it (restore,
+  build, OR in, publish — seen_filter.CrawlFilter).  seen_filter picks
+  its form from the pinned sizing: held on the driver up to its 512 MB
+  ceiling (updated with pyarrow and numpy, published as an arrow table,
+  no Spark job), a blob table beyond it (one shard cogroup per update);
+  the form chooses the probe;
 - a global audit rank is OFF by default (single-partition window); the
   deterministic order still exists logically via the (priority, depth,
   url_hash) key;
@@ -67,7 +68,6 @@ from dataclasses import dataclass, field
 from typing import ParamSpec, TypeVar
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -87,23 +87,15 @@ from ..operators.frontier import (
 from ..operators.politeness import politeness_metrics, schedule_fetches
 from ..operators.robots import apply_robots
 from ..operators.seen_filter import (
-    bloom_params as _bloom_params,
-    BITS_PER_KEY,
-    BROADCAST_MAX_BYTES,
-    build_filter_blobs,
-    collect_shard_map,
+    CrawlFilter,
+    blob_sizings,
     dedup_against_seen,
-    or_into_shard_map,
-    read_shard_map,
-    shard_map_table,
-    update_filter_blobs,
 )
 from ..sources.catalog import Catalog
 
 P = ParamSpec("P")
 R = TypeVar("R")
 
-PASSTHROUGH = ["site", "category", "depth", "priority", "url_template"]
 CRAWL_EXTRACT_SCHEMA = (
     EXTRACT_SCHEMA
     + ", category string, depth int, priority int, url_template string, wave int"
@@ -211,7 +203,35 @@ _LINEAGE_SCHEMA = pa.schema(
         )
     ]
 )
-_URL_HASH_SCHEMA = pa.schema([("url_hash", pa.int64())])
+
+
+class _Background:
+    """``fn(*args, **kw)`` on a thread.  ``join`` re-raises its exception
+    or returns its result; ``ms`` is its wall time.  InheritableThread:
+    the caller's job group and description also cover the thread's
+    jobs."""
+
+    def __init__(self, fn: Callable, *args, **kw):
+        self.ms = 0
+        self._out: tuple = (None, None)
+
+        def run():
+            t = time.monotonic()
+            try:
+                self._out = (fn(*args, **kw), None)
+            except BaseException as ex:  # re-raised on join
+                self._out = (None, ex)
+            self.ms = round((time.monotonic() - t) * 1000)
+
+        self._thread = InheritableThread(target=run, daemon=True)
+        self._thread.start()
+
+    def join(self):
+        self._thread.join()
+        res, err = self._out
+        if err is not None:
+            raise err
+        return res
 
 
 # The frames a wave caches (`wave`, `scheduled`, the pipelined frontier)
@@ -346,24 +366,14 @@ def run_crawl(
 
     # Bloom blobs are maintained INCREMENTALLY: built once from the full
     # seen set when it first crosses bloom_min_seen (or restored from the
-    # catalog on resume), then each wave ORs in a pinned-size delta blob —
+    # catalog on resume), then each wave ORs in its published seen keys —
     # O(filter bytes) per wave, never an O(|seen|) rebuild.  (m, k) are
-    # pinned from expected_urls so delta blobs stay OR-mergeable; blowing
+    # pinned from expected_urls so the blobs stay OR-mergeable; blowing
     # past the estimate only degrades fpp, the exact backstop keeps dedup
     # exact.  Stale bits after recrawl invalidation are likewise safe:
     # bloom false positives are always corrected by the backstop.
-    n_per_shard = max(1, expected_urls // n_shards)
-    # How the probe ships the filter to executors: decided ONCE from the
-    # pinned sizing (total filter bytes = expected_urls * BITS_PER_KEY/8),
-    # not per wave — the "auto" path would re-agg the blob table every
-    # wave for an answer the driver already knows.
-    blob_strategy = (
-        "broadcast"
-        if expected_urls * BITS_PER_KEY // 8 <= BROADCAST_MAX_BYTES
-        else "cogroup"
-    )
-    # The standing filter: a driver-held ShardMap on the broadcast path,
-    # a blob-table DataFrame on the cogroup path; None until built.
+    bloom = CrawlFilter(n_shards, expected_urls)
+    # the standing filter, in the form `bloom` picked; None until built
     blobs = None
     b_snap = catalog.latest("blobs")
     if b_snap is not None:
@@ -371,37 +381,28 @@ def run_crawl(
         # Fail-fast guard (ADVICE r1): restored blobs carry pinned (m, k);
         # a resume launched with a different --expected-urls would only
         # blow up at merge time, mid-wave, after robots/dedup/fetch work.
-        # Check on the driver up front — n_shards rows — and trigger a
-        # one-shot rebuild from the seen set instead of dying later (the
-        # loop below rebuilds whenever blobs is None).
-        exp_m, exp_k = _bloom_params(n_per_shard)
-        if blob_strategy == "broadcast":
-            blobs = read_shard_map(b_snap.path)
-            got = {(b.m, b.k) for b in blobs.values()}
-        else:
-            blobs = catalog.read(spark, "blobs")
-            got = {
-                (r["m"], r["k"])
-                for r in blobs.select("m", "k").distinct().collect()
-            }
+        # Check on the driver up front — n_shards rows, read by pyarrow —
+        # and trigger a one-shot rebuild from the seen set instead of
+        # dying later (the loop below rebuilds whenever blobs is None).
+        got = blob_sizings(b_snap.path)
         # the seen and blob publishes are two commits, so a kill between
         # them leaves a filter without the last wave's keys — false
         # negatives, which the filter must never have
         covered = b_snap.meta.get("seen_wave")
-        if any(g != (exp_m, exp_k) for g in got):
+        if any(g != bloom.sizing for g in got):
             log.warning(
                 "restored filter blobs have (m, k) = %s but expected_urls="
                 "%d pins %s; discarding and rebuilding from the seen set",
-                sorted(got), expected_urls, (exp_m, exp_k),
+                sorted(got), expected_urls, bloom.sizing,
             )
-            blobs = None
         elif covered is None or int(covered) < start_wave - 1:
             log.warning(
                 "restored filter blobs cover the seen log through wave %s "
                 "but the crawl resumes at wave %d; rebuilding from the "
                 "seen set", covered, start_wave,
             )
-            blobs = None
+        else:
+            blobs = bloom.restore(spark, b_snap.path)
 
     # Pruned-frontier invariant: the frontier written at the bottom of a
     # wave never contains an already-attempted url_hash.  Fresh runs start
@@ -468,23 +469,13 @@ def run_crawl(
 
     # ---- pipelined-frontier state ---------------------------------------
     # The wave-k frontier writer runs on a thread UNDER wave k+1's fetch
-    # stage; `_f_prev` tracks (thread, error holder, wall holder).
-    # `frontier_ub` carries a row-count UPPER BOUND for the frontier the
-    # writer is still materializing — what the broadcast-safety decision
-    # (bounded_wave) uses, since its manifest count is still in flight.
-    _f_prev: dict | None = None
+    # stage.  `frontier_ub` carries a row-count UPPER BOUND for the
+    # frontier the writer is still materializing — what the broadcast-
+    # safety decision (bounded_wave) uses, since its manifest count is
+    # still in flight.
+    f_writer: _Background | None = None
     _prev_nxt: DataFrame | None = None
     frontier_ub: int | None = None
-
-    def _join_prev_frontier():
-        nonlocal _f_prev
-        if _f_prev is None:
-            return
-        _f_prev["thread"].join()
-        if _f_prev["err"]:
-            raise _f_prev["err"][0]
-        t_ms["frontier_write_bg"] = _f_prev["ms"][0] if _f_prev["ms"] else 0
-        _f_prev = None
 
     while wave_no < max_waves:
         t_ms: dict = {}
@@ -532,17 +523,12 @@ def run_crawl(
         # semantics are identical either way.  First crossing builds the
         # blobs once from the full seen set.
         if blobs is None and seen_count >= bloom_min_seen:
-            built = build_filter_blobs(
-                seen, n_shards, n_expected_per_shard=n_per_shard
-            )
             # seen_wave: the last wave whose seen delta the blobs hold
             b_meta = {"wave": wave_no, "seen_wave": wave_no - 1}
-            if blob_strategy == "broadcast":
-                blobs = collect_shard_map(built)
-                catalog.write(shard_map_table(blobs), "blobs", meta=b_meta)
-            else:
-                catalog.write(built, "blobs", meta=b_meta)
-                blobs = catalog.read(spark, "blobs")
+            blobs = bloom.publish(
+                bloom.build(seen),
+                lambda t: catalog.write(t, "blobs", meta=b_meta).path,
+            )
         # a broadcast hint is only safe when the wave is KNOWN bounded:
         # either by an explicit budget, or because the observation-derived
         # UPPER bound on this frontier (leftover + raw link mentions +
@@ -563,8 +549,7 @@ def run_crawl(
             fresh = allowed
         else:
             fresh = dedup_against_seen(
-                allowed, seen, blobs, n_shards,
-                broadcast_hint=bounded_wave, blob_strategy=blob_strategy,
+                allowed, seen, blobs, n_shards, broadcast_hint=bounded_wave
             )
         scheduled = schedule_fetches(fresh, robots_b, n_salts).observe(
             obs_sched,
@@ -669,25 +654,15 @@ def run_crawl(
         # below — the two read independent inputs (persisted scheduled vs
         # the same), and overlapping independent jobs hides per-job
         # scheduling latency on a cluster the same way it does here.
-        host_metrics: list = []
-        _host_err: list = []
-
-        def _collect_hosts():
-            try:
-                host_metrics.extend(
-                    r.asDict()
-                    for r in politeness_metrics(scheduled)
-                    .orderBy(F.desc("n_urls"), "host")
-                    .limit(16)
-                    .collect()
-                )
-            except BaseException as ex:  # re-raised on join
-                _host_err.append(ex)
-
-        # InheritableThread (here and below): the caller's job group and
-        # description also cover the crawl's background jobs
-        host_thread = InheritableThread(target=_collect_hosts, daemon=True)
-        host_thread.start()
+        hosts = _Background(
+            lambda: [
+                r.asDict()
+                for r in politeness_metrics(scheduled)
+                .orderBy(F.desc("n_urls"), "host")
+                .limit(16)
+                .collect()
+            ]
+        )
         _mark("wave_counts")
         links_df = wave_ex.select(*_links_cols).filter(
             F.col("l").isNotNull()
@@ -720,46 +695,22 @@ def run_crawl(
         # per wave and make the log's read fan-out O(partitions·waves)
         _seen_parts = max(1, min(n_shards, n_fresh // 4_000_000 + 1))
         seen_out = seen_delta.coalesce(_seen_parts)
-        _seen_err: list = []
-        # the updated driver-held filter, handed back to the loop
-        _seen_res: list = []
 
         def _write_seen(standing):
-            try:
-                s_snap = catalog.write(
-                    seen_out, "seen",
-                    meta={"wave": wave_no, "kind": "delta"},
-                )
-                if standing is None:
-                    return
-                b_meta = {"wave": wave_no, "seen_wave": wave_no}
-                if blob_strategy == "broadcast":
-                    # OR the published delta's keys into the driver-held
-                    # filter and publish it — no Spark job
-                    keys = pq.read_table(
-                        s_snap.path, schema=_URL_HASH_SCHEMA
-                    )["url_hash"].to_numpy()
-                    new = or_into_shard_map(
-                        standing, keys, n_shards, n_per_shard
-                    )
-                    catalog.write(shard_map_table(new), "blobs", meta=b_meta)
-                    _seen_res.append(new)
-                else:
-                    # one cogroup stage over the standing blob table;
-                    # read-back keeps the blob lineage flat across waves
-                    catalog.write(
-                        update_filter_blobs(
-                            standing, seen_delta, n_shards, n_per_shard
-                        ),
-                        "blobs", meta=b_meta,
-                    )
-            except BaseException as ex:
-                _seen_err.append(ex)
+            """Publishes the seen delta, then ORs its keys into the
+            standing filter and publishes that; returns the new filter."""
+            s_snap = catalog.write(
+                seen_out, "seen", meta={"wave": wave_no, "kind": "delta"}
+            )
+            if standing is None:
+                return None
+            b_meta = {"wave": wave_no, "seen_wave": wave_no}
+            return bloom.publish(
+                bloom.or_in(standing, s_snap.path),
+                lambda t: catalog.write(t, "blobs", meta=b_meta).path,
+            )
 
-        seen_thread = InheritableThread(
-            target=_write_seen, args=(blobs,), daemon=True
-        )
-        seen_thread.start()
+        seen_job = _Background(_write_seen, blobs)
         _mark("seen_checkpoint")
 
         # ---- next frontier -------------------------------------------------
@@ -825,7 +776,9 @@ def run_crawl(
         #  - the budgeted leftover rebinds onto the read-back of the files
         #    the last writer just published (value-identical: same rows,
         #    same dedup, same anti-join keys).
-        _join_prev_frontier()
+        if f_writer is not None:
+            f_writer.join()
+            t_ms["frontier_write_bg"] = f_writer.ms
         delta_keys = wave_ex.select(F.xxhash64("url").alias("url_hash"))
         if not leftover_vs_full:
             if wave_budget is None:
@@ -872,9 +825,7 @@ def run_crawl(
         nxt = leftover_p.unionByName(disc_p)
 
         _mark("next_frontier_prune_plan")
-        host_thread.join()
-        if _host_err:
-            raise _host_err[0]
+        host_metrics = hosts.join()
         lineage.append(
             {
                 "wave": wave_no,
@@ -913,20 +864,9 @@ def run_crawl(
         # the concurrent catalog publishes are exactly what resume's
         # orphan pruning (_resume_point) makes safe.
         nxt = nxt.persist()
-        _f_err: list = []
-        _f_ms: list = []
-        _w_no = wave_no
-
-        def _write_frontier():
-            try:
-                _t = time.monotonic()
-                catalog.write(nxt, "frontier", meta={"wave": _w_no + 1})
-                _f_ms.append(round((time.monotonic() - _t) * 1000))
-            except BaseException as ex:
-                _f_err.append(ex)
-
-        f_thread = InheritableThread(target=_write_frontier, daemon=True)
-        f_thread.start()
+        f_writer = _Background(
+            catalog.write, nxt, "frontier", meta={"wave": wave_no + 1}
+        )
 
         # frontier-size UPPER bound for the next wave's broadcast-safety
         # decision (the manifest count is still in flight): raw link
@@ -950,17 +890,8 @@ def run_crawl(
         frontier = nxt
         # the seen log (and standing blobs) must be current before the NEXT
         # wave's dedup gate / first-crossing blob build read them
-        seen_thread.join()
-        if _seen_err:
-            raise _seen_err[0]
+        blobs = seen_job.join()
         seen = catalog.read_log(spark, "seen")
-        if blobs is not None:
-            blobs = (
-                _seen_res[0]
-                if blob_strategy == "broadcast"
-                else catalog.read(spark, "blobs")
-            )
-        _f_prev = {"thread": f_thread, "err": _f_err, "ms": _f_ms}
         _mark("next_frontier")
         if _prev_nxt is not None:
             _prev_nxt.unpersist()
@@ -979,8 +910,8 @@ def run_crawl(
     # land the last wave's in-flight frontier writer — the catalog must be
     # complete, and its errors must surface, before the result is handed
     # back
-    t_ms = {}
-    _join_prev_frontier()
+    if f_writer is not None:
+        f_writer.join()
     if _prev_nxt is not None:
         _prev_nxt.unpersist()
 

@@ -15,6 +15,9 @@ def _spark_rows(spark, qname):
     return sorted(tuple(r) for r in df.collect())
 
 
+# embedding_near_dup_recall is compared with its builder's rows, at this
+# same scale, by tests/test_retired_queries.py (its oracle is the VALUES
+# SQL built from those rows)
 @pytest.mark.parametrize(
     "qname, builder",
     [
@@ -24,7 +27,6 @@ def _spark_rows(spark, qname):
         ("doc_fingerprints", ao.doc_fingerprints_rows),
         ("media_features", ao.media_features_rows),
         ("embedding_near_dup_lsh", ao.embedding_near_dup_rows),
-        ("embedding_near_dup_recall", ao.embedding_near_dup_recall_rows),
     ],
 )
 def test_analytic_oracle_matches_spark(spark, qname, builder):

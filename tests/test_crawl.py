@@ -162,14 +162,18 @@ class TestBudgetAndIncremental:
 
 class TestBloomPathInLoop:
     def test_bloom_path_same_result(
-        self, spark, fixture, tmp_path_factory, crawl_result
+        self, spark, fixture, tmp_path_factory, crawl_result, filter_form
     ):
         """Active incremental blobs (bloom_min_seen=0) must not change the
-        crawl outcome: blob maintenance + probe + backstop == exact path."""
+        crawl outcome, in either filter form: blob maintenance + probe +
+        backstop == exact path."""
         res = _crawl(
             spark, fixture, tmp_path_factory.mktemp("crawlbloom"), "cb",
             bloom_min_seen=0, expected_urls=10_000,
         )
+        assert sorted(
+            (r["url"], r["wave"]) for r in res.seen.collect()
+        ) == sorted((r["url"], r["wave"]) for r in crawl_result.seen.collect())
         a = sorted(
             (r["url"], r["wave"]) for r in res.extracted.collect()
         )

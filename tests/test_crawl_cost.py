@@ -7,7 +7,7 @@ tracker, so a regression shows up as a failing count, not as noise."""
 
 import pytest
 
-from no_fasel_scrapers_spark.plans import crawl as crawl_mod
+from no_fasel_scrapers_spark.operators import seen_filter
 from no_fasel_scrapers_spark.plans.crawl import run_crawl
 from no_fasel_scrapers_spark.sources.catalog import Catalog
 
@@ -94,7 +94,7 @@ def test_bloom_fixture_crawl_jobs_and_tasks_per_wave(
     def _cogroup_update(*a, **k):
         raise AssertionError("the broadcast-sized filter ran a cogroup")
 
-    monkeypatch.setattr(crawl_mod, "update_filter_blobs", _cogroup_update)
+    monkeypatch.setattr(seen_filter, "update_filter_blobs", _cogroup_update)
     waves, jobs, tasks = _crawl_cost(
         spark, fixture, tmp_path, "crawl-cost-bloom", bloom_min_seen=0
     )

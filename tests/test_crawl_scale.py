@@ -10,7 +10,6 @@ this suite pins the WAVE STRUCTURE at generator scale: seed root listing
 from __future__ import annotations
 
 import re
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -33,18 +32,18 @@ N_ITEMS = 120
 PER = 16
 
 
-def _crawl(spark, n_items=N_ITEMS, per=PER):
+def _crawl(spark, tmp_path, n_items=N_ITEMS, per=PER):
     pages = gen_site_pages(spark, n_items, per=per, partitions=8)
     seeds = spark.createDataFrame(
         [tuple(s.values()) for s in site_seed_rows()], SEEDS_DDL
     )
     robots = spark.createDataFrame([("fasel.test", [], 0)], ROBOTS_DDL)
-    cat = Catalog(tempfile.mkdtemp(prefix="nfs_scale_crawl_"))
+    cat = Catalog(str(tmp_path / "cat"))
     return run_crawl(spark, pages, seeds, robots, cat, n_salts=8)
 
 
-def test_site_crawl_discovers_every_detail_once(spark):
-    res = _crawl(spark)
+def test_site_crawl_discovers_every_detail_once(spark, tmp_path):
+    res = _crawl(spark, tmp_path)
     details = res.extracted.filter(F.col("role") == "detail")
     ids = [r["item_id"] for r in details.select(
         F.col("fields.item_id").alias("item_id")).collect()]
@@ -52,8 +51,8 @@ def test_site_crawl_discovers_every_detail_once(spark):
     assert len(set(ids)) == N_ITEMS  # no dup fetches past the seen filter
 
 
-def test_site_crawl_wave_structure(spark):
-    res = _crawl(spark)
+def test_site_crawl_wave_structure(spark, tmp_path):
+    res = _crawl(spark, tmp_path)
     by_role = {
         (r["role"]): r["n"]
         for r in res.extracted.groupBy("role").agg(
@@ -69,10 +68,10 @@ def test_site_crawl_wave_structure(spark):
     assert res.waves == 3
 
 
-def test_site_crawl_extracted_text_matches_generator(spark):
+def test_site_crawl_extracted_text_matches_generator(spark, tmp_path):
     from no_fasel_scrapers_spark.sources.pagegen import detail_page
 
-    res = _crawl(spark)
+    res = _crawl(spark, tmp_path)
     got = {
         r["url"]: r["text"]
         for r in res.extracted.filter(F.col("role") == "detail")
@@ -189,7 +188,7 @@ def test_bucketed_corpus_fetch_join_has_no_html_exchange_when_cached(
     _coalescing_cached_plans(_assert_fetch_join_streams_html)(spark, cache=True)
 
 
-def test_max_pagination_clamp_is_configurable(spark):
+def test_max_pagination_clamp_is_configurable(spark, tmp_path):
     """The anti-absurd-extent clamp must be liftable from run_crawl: at a
     3M-item site the root declares 187,500 listing pages and the 100k
     default silently truncated the crawl to 53% of the site (round-4
@@ -204,7 +203,7 @@ def test_max_pagination_clamp_is_configurable(spark):
 
     clamped = run_crawl(
         spark, pages, seeds, robots,
-        Catalog(tempfile.mkdtemp(prefix="nfs_clamp_")),
+        Catalog(str(tmp_path / "clamped")),
         n_salts=8, max_pagination=10,
     )
     by_role = {
@@ -217,7 +216,7 @@ def test_max_pagination_clamp_is_configurable(spark):
 
     full = run_crawl(
         spark, pages, seeds, robots,
-        Catalog(tempfile.mkdtemp(prefix="nfs_clamp_")),
+        Catalog(str(tmp_path / "full")),
         n_salts=8, max_pagination=30,
     )
     assert full.extracted.filter(F.col("role") == "detail").count() == n_items

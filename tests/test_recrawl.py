@@ -14,7 +14,6 @@
    now falls back to a bounded count for such degenerate waves.
 """
 
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,7 +46,7 @@ def _mutated_pages_df(fx, spark):
     )
 
 
-def test_recrawl_cycle_matches_python_oracle(spark, small_fx):
+def test_recrawl_cycle_matches_python_oracle(spark, small_fx, tmp_path):
     """Invalidate a deterministic quarter of crawl-1's URLs, re-crawl them
     over mutated content, and pin: (a) crawl 2 fetches EXACTLY the
     invalidated set (links it re-discovers stay deduped against the
@@ -55,7 +54,7 @@ def test_recrawl_cycle_matches_python_oracle(spark, small_fx):
     is the mutated content, (c) the engine never crashes on the
     terminal all-blocked/all-seen wave (bug 2)."""
     fx = small_fx
-    cat1 = Catalog(tempfile.mkdtemp(prefix="nfs_t_rc1_"))
+    cat1 = Catalog(str(tmp_path / "rc1"))
     res1 = run_crawl(
         spark, fx.pages_df(spark), fx.seeds_df(spark), fx.robots_df(spark),
         cat1,
@@ -68,7 +67,7 @@ def test_recrawl_cycle_matches_python_oracle(spark, small_fx):
         F.lit(0).alias("priority"), F.lit(0).alias("depth"), "role",
         F.lit(None).cast("string").alias("url_template"),
     )
-    cat2 = Catalog(tempfile.mkdtemp(prefix="nfs_t_rc2_"))
+    cat2 = Catalog(str(tmp_path / "rc2"))
     res2 = run_crawl(
         spark, _mutated_pages_df(fx, spark), seeds2, fx.robots_df(spark),
         cat2, seen=res1.seen, recrawl=recrawl.select("url"),
@@ -102,13 +101,13 @@ def test_recrawl_cycle_matches_python_oracle(spark, small_fx):
     assert changed, "mutation must be visible in at least one re-fetch"
 
 
-def test_empty_scheduled_wave_does_not_crash(spark, small_fx):
+def test_empty_scheduled_wave_does_not_crash(spark, small_fx, tmp_path):
     """A crawl whose wave-1 frontier is entirely robots-blocked or seen
     must terminate cleanly with a 0-attempted lineage row, not trip the
     Observation assert (bug 2 in isolation: recrawl ONE page that links
     only to already-seen/disallowed URLs)."""
     fx = small_fx
-    cat1 = Catalog(tempfile.mkdtemp(prefix="nfs_t_rc3_"))
+    cat1 = Catalog(str(tmp_path / "rc3"))
     res1 = run_crawl(
         spark, fx.pages_df(spark), fx.seeds_df(spark), fx.robots_df(spark),
         cat1,
@@ -125,7 +124,7 @@ def test_empty_scheduled_wave_does_not_crash(spark, small_fx):
         F.lit(0).alias("priority"), F.lit(0).alias("depth"), "role",
         F.lit(None).cast("string").alias("url_template"),
     )
-    cat2 = Catalog(tempfile.mkdtemp(prefix="nfs_t_rc4_"))
+    cat2 = Catalog(str(tmp_path / "rc4"))
     res2 = run_crawl(
         spark, fx.pages_df(spark), seeds2, fx.robots_df(spark), cat2,
         seen=res1.seen, recrawl=one.select("url"),

@@ -247,12 +247,12 @@ def test_resume_fresh_run_torn_wave0(spark, fixture, tmp_path):
 
 
 def test_resume_rebuilds_filter_lagging_the_seen_log(
-    spark, fixture, tmp_path, caplog
+    spark, fixture, tmp_path, caplog, filter_form
 ):
     """Kill between a wave's seen publish and its blob publish: the last
     blob snapshot lacks that wave's keys.  Resume must rebuild the filter
-    from the seen set; restoring it would leave false negatives that only
-    the frontier's exact prune hides."""
+    from the seen set, in either filter form; restoring it would leave
+    false negatives that only the frontier's exact prune hides."""
     pages = fixture.pages_df(spark)
     seeds = fixture.seeds_df(spark)
     robots = fixture.robots_df(spark)

@@ -1,5 +1,6 @@
 """Seen-filter properties (SURVEY.md §5.2-4): bloom no-false-negatives,
-end-to-end dedup correctness vs exact on both probe strategies."""
+end-to-end dedup correctness vs exact in both filter forms (each picks its
+probe)."""
 
 import numpy as np
 import pytest
@@ -52,8 +53,9 @@ class TestBloomLocal:
 
 
 class TestDistributedDedup:
-    @pytest.mark.parametrize("strategy", ["broadcast", "cogroup"])
-    def test_matches_exact_antijoin(self, spark, strategy):
+    # the form picks the probe: a held map broadcasts, a table cogroups
+    @pytest.mark.parametrize("probe", ["broadcast", "cogroup"])
+    def test_matches_exact_antijoin(self, spark, probe):
         cand = spark.range(0, 5000).select(
             (F.xxhash64(F.col("id"))).alias("url_hash"),
             F.concat(F.lit("u"), F.col("id")).alias("url"),
@@ -63,9 +65,9 @@ class TestDistributedDedup:
             F.concat(F.lit("u"), F.col("id")).alias("url"),
         )
         blobs = build_filter_blobs(seen, n_shards=8)
-        got = dedup_against_seen(
-            cand, seen, blobs, n_shards=8, blob_strategy=strategy
-        )
+        if probe == "broadcast":
+            blobs = collect_shard_map(blobs)
+        got = dedup_against_seen(cand, seen, blobs, n_shards=8)
         exact = cand.join(seen.select("url_hash"), "url_hash", "left_anti")
         a = sorted(r["url"] for r in got.collect())
         b = sorted(r["url"] for r in exact.collect())
@@ -78,12 +80,6 @@ class TestDistributedDedup:
         )
         out = dedup_against_seen(cand, None, None)
         assert out.count() == 10
-
-    def test_unknown_strategy_rejected(self, spark):
-        cand = spark.range(10).select(F.xxhash64("id").alias("url_hash"))
-        blobs = build_filter_blobs(cand, n_shards=4)
-        with pytest.raises(ValueError, match="unknown blob probe strategy"):
-            dedup_against_seen(cand, cand, blobs, 4, blob_strategy="bogus")
 
 
 class TestIncrementalBlobs:
@@ -229,8 +225,3 @@ class TestDriverHeldBlobs:
         got = dedup_against_seen(cand, seen, collect_shard_map(blobs), 8)
         want = sorted(i for i in range(3000) if i % 3 != 0)
         assert sorted(r["event_id"] for r in got.collect()) == want
-        with pytest.raises(ValueError, match="broadcast only"):
-            dedup_against_seen(
-                cand, seen, collect_shard_map(blobs), 8,
-                blob_strategy="cogroup",
-            )
