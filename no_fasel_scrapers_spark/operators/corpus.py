@@ -145,7 +145,7 @@ def sample_stratified(
         ]
     )
     limit = F.coalesce(
-        thr.getItem(F.col(strata_col)),
+        thr[F.col(strata_col)],
         F.lit(int(round(default_fraction * _BUCKETS))),
     )
     return df.where(_bucket(key_col, seed) < limit)

@@ -238,9 +238,11 @@ class _Background:
 # come out of window shuffles cut into spark.sql.shuffle.partitions pieces.
 # With this conf at Spark's default (false) a cached plan keeps that layout
 # and AQE never coalesces it, so every later stage over a few-hundred-row
-# wave ran 32 tasks — each Python task costs ~0.25 CPU-s of worker
-# overhead before its UDF body runs (measured on a 4-core host).  The conf
-# is read when a frame is persisted.
+# wave ran 32 tasks.  Each Python task then paid ~0.25 CPU-s before its
+# UDF body ran (4-core host), nearly all of it Spark's per-task re-read of
+# pyspark.zip's directory, which the engine's daemon now skips
+# (worker_daemon.py; ~0.03 CPU-s a task left).  The conf is read when a
+# frame is persisted.
 _CACHED_PLAN_REPARTITION = (
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 )
@@ -361,7 +363,12 @@ def run_crawl(
         # filter is built — dedup stays exact either way
         seen_count = max(seen_count, catalog.log_rows("seen"))
 
-    robots_b = robots
+    # Both robots broadcasts of every wave (apply_robots,
+    # schedule_fetches) re-ran the caller's plan: a 4-task Python scan for
+    # a driver-list frame, a host shuffle for parse_robots_txt output.
+    # Read it once and stage it as a LocalRelation; it is broadcast every
+    # wave, so holding it on the driver adds no memory bound.
+    robots_b = spark.createDataFrame(robots.toArrow())
     wave_no = start_wave
 
     # Bloom blobs are maintained INCREMENTALLY: built once from the full
@@ -631,7 +638,7 @@ def run_crawl(
         snap = catalog.write(
             extracted, "extracted", meta={"wave": wave_no, "kind": "delta"}
         )
-        wave_ex = spark.read.parquet(snap.path)
+        wave_ex = catalog.read(spark, "extracted", snap.version)
         _mark("fetch_extract_write")
 
         # ---- wave metrics -------------------------------------------------

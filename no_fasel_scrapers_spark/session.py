@@ -33,6 +33,26 @@ _DEFAULTS = {
 }
 
 
+_PACKAGE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
+
+def _use_local_daemon(conf: dict[str, str]) -> None:
+    """Workers forked from ``worker_daemon``, which keeps Spark's
+    per-task import-cache invalidation from re-reading unchanged zip
+    archives (README, "Why the engine starts its own Python daemon").
+    The package root goes first on the workers' PYTHONPATH, ahead of any
+    value already set, so the daemon imports from any working directory.
+    A daemon module the caller set is kept.  Local masters only: a
+    cluster's executors need not have the package at this path."""
+    conf.setdefault(
+        "spark.python.daemon.module", "no_fasel_scrapers_spark.worker_daemon"
+    )
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (_PACKAGE_ROOT, conf.get(key)) if p)
+
+
 def get_spark(
     app_name: str = "no-fasel-scrapers-spark",
     master: str | None = None,
@@ -51,6 +71,8 @@ def get_spark(
     conf = dict(_DEFAULTS)
     if extra_conf:
         conf.update(extra_conf)
+    if master.startswith("local"):
+        _use_local_daemon(conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -29,6 +29,8 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def _footer_row_count(data_dir: str) -> int:
@@ -52,6 +54,39 @@ class Snapshot:
     rows: int
     meta: dict
     path: str
+    # the written schema as StructType JSON; None for partitioned writes
+    # and manifests that predate it
+    schema: dict | None = None
+
+
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _as_nullable(t):
+    """Spark's ``DataType.asNullable`` on a schema's JSON form: the
+    schema a parquet read yields, so snapshots written from frames that
+    differ only in nullability record the same schema."""
+    if isinstance(t, list):
+        return [_as_nullable(x) for x in t]
+    if isinstance(t, dict):
+        return {
+            k: True if k in _NULLABLE_KEYS else _as_nullable(v)
+            for k, v in t.items()
+        }
+    return t
+
+
+def _scan(spark: SparkSession, snaps: list[Snapshot]) -> DataFrame:
+    """The parquet read of ``snaps``.  When every snapshot recorded the
+    same schema it is passed to the reader, and Spark runs no
+    schema-inference job (a 1-task footer read per ``spark.read``);
+    otherwise the schema is inferred, as for catalogs written before
+    manifests recorded it."""
+    reader = spark.read
+    schema = snaps[0].schema
+    if schema is not None and all(s.schema == schema for s in snaps):
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(*[s.path for s in snaps])
 
 
 class Catalog:
@@ -83,6 +118,7 @@ class Catalog:
                     rows=m["rows"],
                     meta=m.get("meta", {}),
                     path=os.path.join(self._tdir(name), f"v{m['version']}"),
+                    schema=m.get("schema"),
                 )
             )
         return sorted(out, key=lambda s: s.version)
@@ -125,6 +161,7 @@ class Catalog:
                 compression="zstd",
             )
             rows = df.num_rows
+            schema = from_arrow_schema(df.schema)
         else:
             writer = df.write.mode("overwrite")
             if partition_by:
@@ -134,6 +171,9 @@ class Catalog:
             # footers, read driver-side — no Spark job, and (unlike an
             # Observation on the write) immune to task-retry over-counting
             rows = _footer_row_count(data_dir)
+            # a partitioned read puts the partition columns last, typed
+            # from the directory names: let Spark infer that schema
+            schema = None if partition_by else df.schema
         manifest = {
             "version": version,
             "rows": rows,
@@ -141,13 +181,18 @@ class Catalog:
             "parent": None if prev is None else prev.version,
             "meta": meta or {},
         }
+        if schema is not None:
+            manifest["schema"] = _as_nullable(schema.jsonValue())
         os.makedirs(self._snapdir(name), exist_ok=True)
         tmp = os.path.join(self._snapdir(name), f".v{version}.json.tmp")
         final = os.path.join(self._snapdir(name), f"v{version}.json")
         with open(tmp, "w") as fp:
             json.dump(manifest, fp, indent=2, sort_keys=True)
         os.replace(tmp, final)  # atomic publish
-        return Snapshot(version=version, rows=rows, meta=meta or {}, path=data_dir)
+        return Snapshot(
+            version=version, rows=rows, meta=meta or {}, path=data_dir,
+            schema=manifest.get("schema"),
+        )
 
     def read(
         self, spark: SparkSession, name: str, version: int | None = None
@@ -158,7 +203,7 @@ class Catalog:
         snap = snaps[-1] if version is None else next(
             s for s in snaps if s.version == version
         )
-        return spark.read.parquet(snap.path)
+        return _scan(spark, [snap])
 
     def read_union(self, spark: SparkSession, name: str) -> DataFrame:
         """Union of ALL published snapshots — the append-log read path.
@@ -169,7 +214,7 @@ class Catalog:
         snaps = self.snapshots(name)
         if not snaps:
             raise FileNotFoundError(f"table {name!r} has no published snapshot")
-        return spark.read.parquet(*[s.path for s in snaps])
+        return _scan(spark, snaps)
 
     def _log_snapshots(self, name: str) -> list[Snapshot]:
         snaps = self.snapshots(name)
@@ -191,7 +236,7 @@ class Catalog:
         compaction) stay a single atomic manifest publish while normal
         writers keep appending O(delta) snapshots — the local stand-in for
         an Iceberg REPLACE commit on an append table."""
-        return spark.read.parquet(*[s.path for s in self._log_snapshots(name)])
+        return _scan(spark, self._log_snapshots(name))
 
     def log_rows(self, name: str) -> int:
         """Rows ``read_log`` reads, summed from the manifests — no Spark
