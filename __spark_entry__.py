@@ -848,13 +848,15 @@ def q_politeness_schedule(spark, sf_dir):
         (F.col("event_id") % 5).cast("int").alias("priority"),
         (F.col("event_id") % 3).cast("int").alias("depth"),
     )
-    robots = spark.range(20).select(
+    delays = spark.range(20).select(
         F.concat(F.lit("h"), F.col("id").cast("string"), F.lit(".test")).alias(
             "host"
         ),
         ((F.col("id") + 1) * 10).alias("crawl_delay_ms"),
     )
-    out = schedule_fetches(wave, robots, n_salts=1)
+    out = schedule_fetches(
+        wave.join(F.broadcast(delays), "host", "left"), n_salts=1
+    )
     return out.select("url_hash", "host", "fetch_seq", "scheduled_ms")
 
 

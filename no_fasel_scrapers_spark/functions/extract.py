@@ -622,10 +622,17 @@ def extract_page(url: str, role: str, html: bytes | None):
     return row
 
 
+_EXTRACT_COLS = [
+    "url", "role", "site", "links", "cards", "fields", "last_page", "text",
+]
+
+
 def extract_map_in_pandas(
     batches: Iterable[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
-    """``mapInPandas`` body: (url, role, html[, ...]) → EXTRACT_SCHEMA rows.
+    """``mapInPandas`` body: (url, role, html[, ...]) → EXTRACT_SCHEMA rows,
+    then every other input column unchanged (append their DDL to the
+    schema, as the crawl does).
 
     Usage::
 
@@ -636,10 +643,8 @@ def extract_map_in_pandas(
             extract_page(u, r, h)
             for u, r, h in zip(pdf["url"], pdf["role"], pdf["html"])
         ]
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "url", "role", "site", "links", "cards", "fields",
-                "last_page", "text",
-            ],
-        )
+        out = pd.DataFrame(rows, columns=_EXTRACT_COLS)
+        for c in pdf.columns:
+            if c not in ("url", "role", "html"):
+                out[c] = pdf[c]
+        yield out

@@ -9,16 +9,15 @@ at any parallelism (north_rule):
 
 ``take_wave`` materializes one wave as ``ORDER BY key LIMIT budget`` —
 Spark plans that as TakeOrderedAndProject (no full sort at the driver), and
-the leftover rows carry to the next wave.  Partitioning for the fetch stage
-is ``repartition(host, host_salt)`` so one mega-host spreads over
-``n_salts`` tasks instead of straggling one (AQE skew-join handles the rest).
+the leftover rows carry to the next wave.  ``host_salt`` spreads one
+mega-host over ``n_salts`` politeness shards (operators/politeness.py).
 """
 
 from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.canonical import canonicalize_url, url_host
@@ -133,13 +132,6 @@ def with_audit_rank(wave: DataFrame) -> DataFrame:
     return wave.withColumn("rank", F.row_number().over(w) - 1)
 
 
-def repartition_for_fetch(wave: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Salted host repartition before the fetch/extract stage (skew control)."""
-    if n_partitions:
-        return wave.repartition(n_partitions, "host", "host_salt")
-    return wave.repartition("host", "host_salt")
-
-
 def expand_pagination_df(
     probes: DataFrame, n_salts: int = 8, max_pages: int = 100_000
 ) -> DataFrame:
@@ -215,6 +207,15 @@ def expand_pagination_df(
     )
 
 
+def pagination_probe_filter(last_page: Column) -> Column:
+    """The probe rows :func:`expand_pagination_df` expands, given their
+    ``last_page`` (the crawl's bound on its output counts the same rows)."""
+    return (
+        last_page.isNotNull() & (last_page >= 1)
+        & F.col("url_template").isNotNull()
+    )
+
+
 @lru_cache(maxsize=8)
 def _pagination_cols(max_pages: int):
     """Loop-invariant Column trees for :func:`expand_pagination_df` (same
@@ -224,11 +225,7 @@ def _pagination_cols(max_pages: int):
     w = Window.partitionBy(
         "site", "category", "url_template", "depth", "priority"
     ).orderBy(F.col("last_page").desc())
-    probe_filter = (
-        F.col("last_page").isNotNull()
-        & (F.col("last_page") >= 1)
-        & F.col("url_template").isNotNull()
-    )
+    probe_filter = pagination_probe_filter(F.col("last_page"))
     band_cols = (
         F.col("site"), F.col("category"), F.col("url_template"),
         F.col("depth"), F.col("priority"),

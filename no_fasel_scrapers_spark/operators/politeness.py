@@ -3,7 +3,10 @@
 Absent from the reference (its only throttle is the Cloudflare cookie dance,
 ``Common.py:107-138``); required by the north_rule.  Semantics:
 
-- each host has ``crawl_delay_ms`` (robots table);
+- each host has ``crawl_delay_ms``, read off the wave's rows: the robots
+  gate (operators/robots.apply_robots) joins it onto every row it lets
+  through, 0 for a host without a robots row — so scheduling runs no
+  join of its own;
 - a host's budget is divided across its ``n_salts`` shards (a salted host
   fetches in parallel, so each shard spaces its fetches by
   ``delay * n_salts`` — aggregate rate per host stays 1/delay);
@@ -37,21 +40,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 
-def schedule_fetches(
-    wave: DataFrame,
-    robots: DataFrame,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Attach fetch_seq (per host-shard) and scheduled_ms to a wave."""
-    delays = robots.select("host", "crawl_delay_ms")
-    joined = wave.join(F.broadcast(delays), "host", "left").withColumn(
-        "crawl_delay_ms", F.coalesce(F.col("crawl_delay_ms"), F.lit(0))
-    )
+def schedule_fetches(wave: DataFrame, n_salts: int = 8) -> DataFrame:
+    """Attach fetch_seq (per host-shard) and scheduled_ms to a wave that
+    carries ``crawl_delay_ms``."""
     w = Window.partitionBy("host", "host_salt").orderBy(
         F.col("priority").asc(), F.col("depth").asc(), F.col("url_hash").asc()
     )
     return (
-        joined.withColumn("fetch_seq", F.row_number().over(w) - 1)
+        wave.withColumn("fetch_seq", F.row_number().over(w) - 1)
         .withColumn(
             "scheduled_ms",
             (

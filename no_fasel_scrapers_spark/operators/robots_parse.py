@@ -1,8 +1,7 @@
 """robots.txt parsing as pure Spark columns — no per-row Python.
 
 Turns raw robots.txt bodies ``(host, robots_txt)`` into the parsed robots
-table the crawl gate consumes ``(host, disallow_prefixes, crawl_delay_ms)``
-(operators/robots.apply_robots, politeness.schedule_fetches).
+table the crawl gate joins (operators/robots.apply_robots).
 
 robots.txt looks stateful (a group = a run of ``User-agent`` lines followed
 by its rules), but the grammar resolves with two windows:
@@ -17,15 +16,16 @@ Comments (``# …``) and blank lines are stripped; directives match
 case-insensitively; empty Disallow/Allow values are dropped.  Unknown
 directives are ignored.  One shuffle on host.
 
-RFC 9309 rule matching (round 5): besides the flat ``disallow_prefixes``
-(kept for prefix-only consumers), the output carries ``rules`` — every
+RFC 9309 rule matching (round 5): the output carries ``rules`` — every
 Allow + Disallow pattern precompiled ONCE at parse time into an anchored
 Java regex (``*`` → ``.*``, trailing ``$`` → end anchor, all other regex
 metacharacters escaped) with its raw pattern length for longest-match
 precedence.  ``operators/robots.apply_robots`` evaluates the match per
 frontier row entirely JVM-side; compiling at parse time keeps the
 per-row work to RLIKE probes on a tiny broadcast array instead of
-re-deriving regexes per row.
+re-deriving regexes per row.  :func:`gate_table` compiles a prefix-only
+table (``disallow_prefixes``, no ``rules``: the crawl fixtures, hand-built
+tables) into literal Disallow rules, so one module compiles every rule.
 """
 
 from __future__ import annotations
@@ -33,6 +33,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+# Java regex metacharacters other than ``*``, as a character class body
+_META = r"\.\^\$\|\?\+\(\)\[\]\{\}\\"
+
+
+def _escaped(p: Column, meta: str) -> Column:
+    return F.regexp_replace(p, f"([{meta}])", r"\\$1")
 
 
 def pattern_to_regex(p: Column) -> Column:
@@ -44,20 +52,35 @@ def pattern_to_regex(p: Column) -> Column:
     metacharacters first, then expand ``*``."""
     anchored = p.endswith("$")
     body = F.regexp_replace(p, r"\$$", "")
-    esc = F.regexp_replace(body, r"([\.\^\$\|\?\+\(\)\[\]\{\}\\])", r"\\$1")
-    star = F.regexp_replace(esc, r"\*", ".*")
+    star = F.regexp_replace(_escaped(body, _META), r"\*", ".*")
     return F.concat(
         F.lit("^"), star, F.when(anchored, F.lit("$")).otherwise(F.lit("")),
     )
 
 
-def _rule_struct(p: Column, allow: bool) -> Column:
+def _rule_struct(p: Column, allow: bool, rx: Column) -> Column:
     return F.struct(
         p.alias("pattern"),
         F.lit(allow).alias("allow"),
         F.length(p).alias("plen"),
-        pattern_to_regex(p).alias("rx"),
+        rx.alias("rx"),
     )
+
+
+def gate_table(robots: DataFrame) -> DataFrame:
+    """Any robots table → ``(host, rules, crawl_delay_ms)``.  A prefix
+    becomes ``^`` + the prefix with EVERY metacharacter escaped, ``*`` and
+    ``$`` too, so it matches exactly ``path.startswith(prefix)``."""
+    if "rules" in robots.columns:
+        rules = F.col("rules")
+    else:
+        rules = F.transform(
+            F.col("disallow_prefixes"),
+            lambda p: _rule_struct(
+                p, False, F.concat(F.lit("^"), _escaped(p, _META + r"\*"))
+            ),
+        )
+    return robots.select("host", rules.alias("rules"), "crawl_delay_ms")
 
 
 def parse_robots_txt(
@@ -180,10 +203,12 @@ def parse_robots_txt(
         "rules",
         F.concat(
             F.transform(
-                F.col("disallow_prefixes"), lambda p: _rule_struct(p, False)
+                F.col("disallow_prefixes"),
+                lambda p: _rule_struct(p, False, pattern_to_regex(p)),
             ),
             F.transform(
-                F.col("allow_patterns"), lambda p: _rule_struct(p, True)
+                F.col("allow_patterns"),
+                lambda p: _rule_struct(p, True, pattern_to_regex(p)),
             ),
         ),
     )

@@ -5,7 +5,7 @@ process pools (O13), static page ranges (O4), per-dict dedup (O10), cookie
 mutex (O1/O2) — with one declarative wave loop:
 
     wave k:  frontier ──take_wave(budget)──▶ wave rows
-             ──robots gate──▶ allowed        (O-north: robots)
+             ──robots gate──▶ allowed        (O-north: robots + delay)
              ──bloom + exact anti-join──▶ fresh   (O10 at scale)
              ──politeness schedule──▶ scheduled   (O-north: token bucket)
              ──join pages table──▶ fetched        ("fetch" = offline join)
@@ -74,11 +74,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from ..functions.extract import EXTRACT_SCHEMA, extract_page
+from ..functions.extract import EXTRACT_SCHEMA, extract_map_in_pandas
 from ..operators.frontier import (
     ORDER_COLS,
     dedup_within,
     expand_pagination_df,
+    pagination_probe_filter,
     seeds_to_frontier,
     take_wave,
     with_audit_rank,
@@ -96,35 +97,12 @@ from ..sources.catalog import Catalog
 P = ParamSpec("P")
 R = TypeVar("R")
 
-CRAWL_EXTRACT_SCHEMA = (
+# extract_map_in_pandas's output: EXTRACT_SCHEMA + the frontier columns
+_WAVE_EXTRACT_SCHEMA = (
     EXTRACT_SCHEMA
-    + ", category string, depth int, priority int, url_template string, wave int"
+    + ", category string, depth int, priority int, url_template string"
 )
-
-
-def _extractor(wave_no: int):
-    """mapInPandas body with frontier-column passthrough."""
-    import pandas as pd
-
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for rec in pdf.to_dict("records"):
-                out = extract_page(rec["url"], rec["role"], rec["html"])
-                out["category"] = rec["category"]
-                out["depth"] = rec["depth"]
-                out["priority"] = rec["priority"]
-                out["url_template"] = rec["url_template"]
-                out["wave"] = wave_no
-                rows.append(out)
-            cols = [
-                "url", "role", "site", "links", "cards", "fields",
-                "last_page", "text", "category", "depth", "priority",
-                "url_template", "wave",
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return run
+CRAWL_EXTRACT_SCHEMA = _WAVE_EXTRACT_SCHEMA + ", wave int"
 
 
 @dataclass
@@ -363,9 +341,9 @@ def run_crawl(
         # filter is built — dedup stays exact either way
         seen_count = max(seen_count, catalog.log_rows("seen"))
 
-    # Both robots broadcasts of every wave (apply_robots,
-    # schedule_fetches) re-ran the caller's plan: a 4-task Python scan for
-    # a driver-list frame, a host shuffle for parse_robots_txt output.
+    # The robots join of every wave (apply_robots, which also carries the
+    # crawl delay) re-ran the caller's plan: a 4-task Python scan for a
+    # driver-list frame, a host shuffle for parse_robots_txt output.
     # Read it once and stage it as a LocalRelation; it is broadcast every
     # wave, so holding it on the driver adds no memory bound.
     robots_b = spark.createDataFrame(robots.toArrow())
@@ -445,34 +423,31 @@ def run_crawl(
         "url", "url_hash", "host", "host_salt", "site", "category",
         "role", "url_template", "depth", "priority", "discovered_from",
     ]
+    # reference HDW over-scan quirk: pages 1..last+1
+    # (HDWMoviesScraper.py:60)
+    _probe_last_page = F.col("last_page") + F.when(
+        F.col("site") == "hdw", 1
+    ).otherwise(0)
     _probe_cols = (
         F.col("site"), F.col("category"), F.col("url_template"),
-        # reference HDW over-scan quirk: pages 1..last+1
-        # (HDWMoviesScraper.py:60)
-        (
-            F.col("last_page")
-            + F.when(F.col("site") == "hdw", 1).otherwise(0)
-        ).alias("last_page"),
+        _probe_last_page.alias("last_page"),
         F.col("depth"), F.col("priority"), F.col("url").alias("from_url"),
     )
+    # extract_page derives `site` from the url, so it is not passed in
     _extract_in_cols = (
-        "url", "role", "html", "site", "category", "depth", "priority",
+        "url", "role", "html", "category", "depth", "priority",
         "url_template",
     )
     # upper-bound bookkeeping for the pipelined frontier (see the tail):
-    # mirrors expand_pagination_df's probe filter
-    _extent_pred = (
-        F.col("last_page").isNotNull()
-        & (F.col("last_page") >= 1)
-        & F.col("url_template").isNotNull()
-    )
+    # the rows expand_pagination_df expands from _probe_cols
+    _extent_pred = pagination_probe_filter(_probe_last_page)
     _links_size = F.when(F.col("links").isNull(), F.lit(0)).otherwise(
         F.size(F.col("links"))
     )
-    # pages one extent row can expand to (+1 covers the HDW over-scan
-    # quirk); summed over the extent rows it bounds expand_pagination_df's
-    # per-(site, category, template, depth, priority) max from above
-    _pag_extent = F.least(F.col("last_page") + 1, F.lit(max_pagination))
+    # pages one extent row can expand to; summed over the extent rows it
+    # bounds expand_pagination_df's per-(site, category, template, depth,
+    # priority) max from above
+    _pag_extent = F.least(_probe_last_page, F.lit(max_pagination))
 
     # ---- pipelined-frontier state ---------------------------------------
     # The wave-k frontier writer runs on a thread UNDER wave k+1's fetch
@@ -522,6 +497,7 @@ def run_crawl(
         # from both dedup union branches and the fetch path — caching runs
         # it once per wave instead of per duplicate subtree
         wave = wave.observe(obs_wave, F.count(F.lit(1)).alias("n")).persist()
+        # allowed rows carry their host's crawl_delay_ms for the schedule
         allowed, _blocked = apply_robots(wave, robots_b)
         allowed = allowed.observe(obs_allowed, F.count(F.lit(1)).alias("n"))
 
@@ -558,7 +534,7 @@ def run_crawl(
             fresh = dedup_against_seen(
                 allowed, seen, blobs, n_shards, broadcast_hint=bounded_wave
             )
-        scheduled = schedule_fetches(fresh, robots_b, n_salts).observe(
+        scheduled = schedule_fetches(fresh, n_salts).observe(
             obs_sched,
             F.count(F.lit(1)).alias("n"),
             F.approx_count_distinct("host").alias("n_hosts"),
@@ -581,7 +557,7 @@ def run_crawl(
         if bounded_wave:
             wave_keys = F.broadcast(wave_keys)
         pages_wave = pages_k.join(wave_keys, "url_hash", "left_semi")
-        # NO repartition_for_fetch here: the join output is already
+        # NO (host, host_salt) repartition here: the join output is already
         # uniformly hash-partitioned on url_hash, and a (host, host_salt)
         # repartition after the join would shuffle the wave's FULL HTML a
         # second time (measured: the single largest cost of a 10^6-page
@@ -616,8 +592,10 @@ def run_crawl(
             F.col("p_url").isNull() | (F.col("p_url") == F.col("url"))
         )
 
-        extracted = fetched.select(*_extract_in_cols).mapInPandas(
-            _extractor(wave_no), schema=CRAWL_EXTRACT_SCHEMA
+        extracted = (
+            fetched.select(*_extract_in_cols)
+            .mapInPandas(extract_map_in_pandas, schema=_WAVE_EXTRACT_SCHEMA)
+            .withColumn("wave", F.lit(wave_no))
         )
 
         # ---- checkpoint this wave's outputs (append-log snapshot) --------

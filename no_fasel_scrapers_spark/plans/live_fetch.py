@@ -129,8 +129,8 @@ def live_fetch_stage(
 ) -> DataFrame:
     """Scheduled wave → fetched rows (url, status, attempts, html, ...).
 
-    Call after ``repartition_for_fetch`` so each task owns whole host
-    shards and the per-shard schedule is monotone.  ``auth_broadcast`` is a
+    Call after ``scheduled.repartition("host", "host_salt")`` so each task
+    owns whole host shards and the per-shard schedule is monotone.  ``auth_broadcast`` is a
     ``Broadcast[dict]`` of header/cookie state captured on the driver."""
     cfg = cfg or FetchConfig()
 

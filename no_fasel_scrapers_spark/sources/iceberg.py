@@ -4,9 +4,8 @@
 publish, append-log reads and MERGE semantics over partitioned parquet +
 JSON manifests — authoritative in this sandbox, where no Iceberg runtime
 jar exists (SURVEY.md §7.0).  This module is the other half of that
-design note: the SAME method surface bound to a real Iceberg catalog, so
-``run_crawl(..., catalog=IcebergCatalog(spark, "warehouse.crawl"))`` is a
-drop-in swap on a cluster launched with::
+design note: the snapshot methods listed below bound to a real Iceberg
+catalog, on a cluster launched with::
 
     spark-submit --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \\
       --conf spark.sql.catalog.iceberg=org.apache.iceberg.spark.SparkCatalog \\
@@ -33,6 +32,12 @@ Semantics mapping (local backend → Iceberg, one-to-one):
   the parent-id lineage chain (commit timestamps have millisecond
   resolution and snapshot ids are random longs — wall-clock order is
   not commit order).
+
+Not covered: the crawl loop.  ``run_crawl`` / ``resume_crawl`` call
+``log_rows`` and ``prune_waves``, which this class lacks; publish each
+wave's lineage row and filter blobs as a ``pyarrow.Table``, which its
+``write`` cannot take; and read blob and seen snapshot paths as parquet
+files with pyarrow, where its ``Snapshot.path`` is a table identifier.
 
 Documented divergence: Iceberg's incremental scan (what ``read`` and
 ``read_log`` compile to) only supports APPEND snapshots, so a table that
@@ -181,12 +186,13 @@ def summary_meta(summary: dict) -> dict:
 # ---------------------------------------------------------------------------
 
 class IcebergCatalog:
-    """Drop-in for ``Catalog`` over a configured Iceberg Spark catalog.
+    """``Catalog``'s DataFrame snapshot methods (not the crawl loop's
+    surface, see above) over a configured Iceberg Spark catalog.
 
     ``namespace`` is the ``catalog.database`` prefix tables live under;
-    every method takes the same arguments as the local backend and
+    each method here takes the same arguments as the local backend's and
     returns the same ``Snapshot`` record (version = Iceberg snapshot id,
-    rows from the summary's total-records)."""
+    rows from the summary's added-records, path = the table identifier)."""
 
     def __init__(self, spark: SparkSession, namespace: str):
         if not iceberg_available(spark):

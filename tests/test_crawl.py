@@ -317,6 +317,41 @@ class TestRobotsParse:
             "https://known.test/x"
         ]
 
+    def test_prefix_table_gates_as_startswith(self, spark):
+        """A prefix-only robots table (no ``rules``) gates exactly as
+        ``path.startswith(prefix)``: regex metacharacters in a prefix,
+        ``*`` and ``$`` included, are literal.  Both outputs carry the
+        host's crawl_delay_ms, 0 for a host without a robots row."""
+        from no_fasel_scrapers_spark.operators.robots import apply_robots
+
+        prefixes = ["/a*b", "/end$", "/x.y", "/p(q", "/s\\t"]
+        robots = spark.createDataFrame(
+            [("h.test", prefixes, 250)],
+            "host string, disallow_prefixes array<string>, "
+            "crawl_delay_ms int",
+        )
+        paths = [
+            "/a*b", "/a*bc", "/aXb", "/ab", "/end$", "/end$/x", "/end",
+            "/x.y/z", "/xzy", "/p(q", "/pq", "/s\\t", "/st", "/s/t",
+            "/open",
+        ]
+        frontier = spark.createDataFrame(
+            [(f"https://h.test{p}", "h.test") for p in paths]
+            + [("https://none.test/a*b", "none.test")],
+            "url string, host string",
+        )
+        allowed, blocked = apply_robots(frontier, robots)
+        got = {r.url: r.crawl_delay_ms for r in allowed.collect()}
+        want = {
+            f"https://h.test{p}" for p in paths
+            if not any(p.startswith(x) for x in prefixes)
+        }
+        assert set(got) == want | {"https://none.test/a*b"}
+        assert got.pop("https://none.test/a*b") == 0
+        assert set(got.values()) == {250}
+        assert {r.crawl_delay_ms for r in blocked.collect()} == {250}
+        assert blocked.count() == len(paths) - len(want)
+
 
 class TestSitemapParse:
     def test_urlset_and_index(self, spark):

@@ -28,12 +28,15 @@ KEY = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 # (34.0 jobs while the filter was updated by a cogroup stage and read back
 # every wave).  With robots staged once per crawl and catalog reads
 # passing their recorded schema (no footer-inference job), 24.6 jobs and
-# 44.8 tasks per wave, and 24.0 jobs and 43.0 tasks with the filter.  The
-# ceilings allow ~20% more jobs and ~30% more tasks than measured.
+# 44.8 tasks per wave, and 24.0 jobs and 43.0 tasks with the filter.  With
+# robots joined once per wave (the gate carries the crawl delay, the
+# schedule runs no join), 24.4 jobs and 44.0 tasks per wave, and 23.0 jobs
+# and 39.0 tasks with the filter.  The ceilings allow ~20% more jobs and
+# ~30% more tasks than measured.
 MAX_JOBS_PER_WAVE = 30
-MAX_TASKS_PER_WAVE = 59
-MAX_BLOOM_JOBS_PER_WAVE = 29
-MAX_BLOOM_TASKS_PER_WAVE = 56
+MAX_TASKS_PER_WAVE = 58
+MAX_BLOOM_JOBS_PER_WAVE = 28
+MAX_BLOOM_TASKS_PER_WAVE = 51
 
 
 def _group_cost(sc, group):

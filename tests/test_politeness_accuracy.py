@@ -29,7 +29,8 @@ N_TAIL_HOSTS = 6
 
 def _skewed_wave(spark, n_salts: int):
     """One mega-host + small tail hosts, salted by url hash like the
-    frontier does (uneven shard fill is the point of the test)."""
+    frontier does (uneven shard fill is the point of the test), with
+    each host's delay joined on as the robots gate joins it."""
     mega = spark.range(MEGA_N).select(
         F.lit("mega.test").alias("host"),
         F.col("id").alias("url_hash"),
@@ -49,12 +50,12 @@ def _skewed_wave(spark, n_salts: int):
         "host_salt",
         F.pmod(F.xxhash64("url_hash"), F.lit(n_salts)).cast("int"),
     )
-    robots = spark.createDataFrame(
+    delays = spark.createDataFrame(
         [("mega.test", DELAY_MS)]
         + [(f"t{i}.test", DELAY_MS) for i in range(N_TAIL_HOSTS)],
         "host string, crawl_delay_ms int",
     )
-    return wave, robots
+    return wave.join(F.broadcast(delays), "host", "left")
 
 
 def _budget_metrics(spark, n_salts: int) -> dict:
@@ -68,8 +69,7 @@ def _budget_metrics(spark, n_salts: int) -> dict:
                        imbalance stretched the schedule (budget
                        under-use), the benign direction.
     """
-    wave, robots = _skewed_wave(spark, n_salts)
-    sched = schedule_fetches(wave, robots, n_salts=n_salts)
+    sched = schedule_fetches(_skewed_wave(spark, n_salts), n_salts=n_salts)
     per_slot = sched.groupBy("host", "scheduled_ms").count()
     rows = (
         per_slot.groupBy("host")
@@ -96,8 +96,7 @@ def test_grid_alignment_assumption(spark):
     """burst_max-via-grid-slots is exact only if every scheduled_ms is a
     multiple of delay — pin that property so the metric can't silently go
     approximate."""
-    wave, robots = _skewed_wave(spark, 8)
-    sched = schedule_fetches(wave, robots, n_salts=8)
+    sched = schedule_fetches(_skewed_wave(spark, 8), n_salts=8)
     off_grid = sched.filter(
         F.col("scheduled_ms") % F.lit(DELAY_MS) != 0
     ).count()

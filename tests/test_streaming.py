@@ -52,6 +52,49 @@ def test_streaming_extract_matches_batch(spark, tmp_path):
     assert got.filter(F.col("text").isNull()).count() == 0
 
 
+def test_extract_body_passes_extra_columns():
+    """The one extraction body: with only (url, role, html) it yields the
+    per-page records as before; any other input column follows them,
+    unchanged (the crawl's frontier columns ride along this way)."""
+    import pandas as pd
+    from pandas.testing import assert_frame_equal
+
+    from no_fasel_scrapers_spark.functions.extract import (
+        extract_map_in_pandas,
+        extract_page,
+    )
+
+    pages = [detail_page(i)[:2] for i in range(3)]
+    pdf = pd.DataFrame(
+        {
+            "url": [u for u, _ in pages] + ["https://missing.test/x"],
+            "role": ["detail"] * 4,
+            "html": [h for _, h in pages] + [None],
+        }
+    )
+    records = pd.DataFrame(
+        [extract_page(u, r, h) for u, r, h in pdf.itertuples(index=False)],
+        columns=[
+            "url", "role", "site", "links", "cards", "fields",
+            "last_page", "text",
+        ],
+    )
+    (plain,) = extract_map_in_pandas([pdf])
+    assert_frame_equal(plain, records)
+
+    extra = pd.DataFrame(
+        {
+            "category": ["movies", None, "series", "movies"],
+            "depth": pd.array([0, 1, None, 3], dtype="Int32"),
+            "priority": [5.0, None, 1.0, 2.0],
+        }
+    )
+    (out,) = extract_map_in_pandas([pd.concat([pdf, extra], axis=1)])
+    assert list(out.columns) == list(records.columns) + list(extra.columns)
+    assert_frame_equal(out[records.columns], records)
+    assert_frame_equal(out[extra.columns], extra)
+
+
 def test_dedup_stream_across_microbatches(spark, tmp_path):
     src = str(tmp_path / "pages")
     ckpt = str(tmp_path / "ckpt")
