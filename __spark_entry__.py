@@ -2922,7 +2922,7 @@ def q_recrawl_delta(spark, sf_dir):
     cat2 = Catalog(_scratch_dir("nfs_recrawl2_"))
     res2 = run_crawl(
         spark, pages2, seeds2, fx.robots_df(spark), cat2,
-        seen=res1.seen, recrawl=recrawl.select("url"),
+        seen_prior=res1.seen, recrawl=recrawl.select("url"),
     )
     new = res2.extracted.select("url", "site", "category", "role", "text")
     merged = union_with_precedence(old, new, key="url", old_wins=False)

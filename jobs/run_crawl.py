@@ -9,9 +9,14 @@ Without ``--pages`` the deterministic synthetic-site fixture is crawled
 table is the offline fetch universe; seeds and robots are read from
 ``--seeds`` / ``--robots`` parquet when given, else the fixture's.
 
-``--resume`` continues from the catalog's last checkpointed wave
-(frontier + seen + lineage) — the kill/restart path proven in
-tests/test_resume.py.
+``--resume`` continues from the catalog's last complete wave — the
+kill/restart path proven in tests/test_resume.py.  The catalog is the
+crawl's only state: the run reads its seen set from the catalog's log,
+and ``lineage_tail`` is the last lineage row the catalog holds (funnel
+counts, ``n_hosts``, ``makespan_ms``, stage ``t_ms``).  A resume from a
+published frontier skips ``--recrawl-urls``: the run that started the
+catalog applied it, and applying it again would drop the urls re-fetched
+since.
 
 Packaging note (cluster mode): ``cd <repo> && zip -r nfs_spark.zip
 no_fasel_scrapers_spark`` then pass ``--py-files nfs_spark.zip``; nothing

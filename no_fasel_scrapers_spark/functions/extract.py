@@ -60,9 +60,14 @@ EXTRACT_SCHEMA = (
 )
 
 
+# a host's site is the first of these its lowercased name contains; the
+# crawl's Column twin (plans/crawl._site_col) reads the same order
+SITES = ("fasel", "akwam", "hdw", "wecima", "cimanow")
+
+
 def site_of_host(host: str) -> str:
     host = (host or "").lower()
-    for s in ("fasel", "akwam", "hdw", "wecima", "cimanow"):
+    for s in SITES:
         if s in host:
             return s
     return "unknown"

@@ -25,9 +25,10 @@ Absent from the reference (its only throttle is the Cloudflare cookie dance,
   schedule itself is reproducible at any parallelism.
 
 Offline (pages-table joins) nothing sleeps — the schedule is recorded as
-``fetch_seq`` / ``scheduled_ms`` columns and rolled into lineage metrics
-(per-host makespan).  The live adapter (plans/live_fetch.py notes) consumes
-``scheduled_ms`` inside its mapInPandas batch loop.
+``fetch_seq`` / ``scheduled_ms`` columns; the wave's makespan (its
+largest ``scheduled_ms``) goes into the crawl's lineage row.  The live
+adapter (plans/live_fetch.py notes) consumes ``scheduled_ms`` inside its
+mapInPandas batch loop.
 
 Everything here is a window function over (host, host_salt) — partitioned,
 scalable, no global sort, no Python.
@@ -57,11 +58,3 @@ def schedule_fetches(wave: DataFrame, n_salts: int = 8) -> DataFrame:
         )
     )
 
-
-def politeness_metrics(scheduled: DataFrame) -> DataFrame:
-    """Per-host makespan + row counts — rolled into wave lineage."""
-    return scheduled.groupBy("host").agg(
-        F.count("*").alias("n_urls"),
-        F.max("scheduled_ms").alias("makespan_ms"),
-        F.max("crawl_delay_ms").alias("crawl_delay_ms"),
-    )

@@ -11,12 +11,17 @@ mutex (O1/O2) — with one declarative wave loop:
              ──join pages table──▶ fetched        ("fetch" = offline join)
              ──mapInPandas extract──▶ extracted   (O6/O7, Arrow batches)
              links + pagination expansion ──▶ frontier k+1
-             seen ∪= attempted;  lineage += wave metrics
-             checkpoint (frontier, seen, outputs) → catalog snapshot
+             seen ∪= attempted
+             checkpoint (frontier, seen, outputs, lineage row) → catalog
 
-Every wave checkpoints to the snapshot catalog with per-partition lineage
-(wave id, host, rows fetched/deduped) so a killed job resumes exactly
-(north_rule); ``resume_crawl`` proves it in tests/test_resume.py.
+The catalog is the crawl's only state.  Every wave publishes its
+extracted and seen deltas, its next frontier and one lineage row (the
+funnel counts, ``n_hosts``, the politeness ``makespan_ms`` and the stage
+``t_ms`` map); ``run_crawl`` reads the seen set from the catalog's log
+whenever it exists and returns the lineage rows as published, so a
+killed job resumes exactly (north_rule) and a resumed crawl reports the
+same rows as an uninterrupted one; ``resume_crawl`` proves it in
+tests/test_resume.py.
 
 Scale notes (100 TB / 10^10 URLs) — the big tables are never shuffled:
 - "fetch": a broadcast left-semi streams the pages table once per wave,
@@ -68,13 +73,14 @@ from dataclasses import dataclass, field
 from typing import ParamSpec, TypeVar
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark import InheritableThread
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from ..functions.extract import EXTRACT_SCHEMA, extract_map_in_pandas
+from ..functions.extract import EXTRACT_SCHEMA, SITES, extract_map_in_pandas
 from ..operators.frontier import (
     ORDER_COLS,
     dedup_within,
@@ -85,7 +91,7 @@ from ..operators.frontier import (
     with_audit_rank,
     with_frontier_keys,
 )
-from ..operators.politeness import politeness_metrics, schedule_fetches
+from ..operators.politeness import schedule_fetches
 from ..operators.robots import apply_robots
 from ..operators.seen_filter import (
     CrawlFilter,
@@ -113,8 +119,11 @@ class CrawlResult:
     waves: int = 0
 
 
-def _obs_n(obs: Observation, fallback_df: DataFrame, col: str = "n") -> int:
-    """Observation metric with an empty-plan fallback.
+def _observed(
+    obs: Observation, fallback_df: DataFrame, *metrics: Column
+) -> dict[str, int]:
+    """The Observation's ``metrics`` as ints (an empty sum or max reads
+    0), with an empty-plan fallback.
 
     When a wave's ``scheduled`` set materializes EMPTY at runtime (every
     candidate robots-blocked or already seen — e.g. a recrawled page
@@ -122,13 +131,15 @@ def _obs_n(obs: Observation, fallback_df: DataFrame, col: str = "n") -> int:
     frontier is already in the seen set), AQE's empty-relation propagation
     can rewrite the wave's write plan around the CollectMetrics nodes, so
     the Observation never fires and PySpark's ``get`` trips a JVM-side
-    assertion.  The fallback count only runs for such degenerate waves,
-    where the input is the wave-bounded (persisted) frontier slice —
-    never the pages or seen tables."""
+    assertion.  The fallback, one aggregate job computing the same
+    ``metrics`` over ``fallback_df``, only runs for such degenerate waves,
+    where the input is the wave-bounded (persisted) frontier slice or the
+    wave's written snapshot — never the pages or seen tables."""
     try:
-        return int(obs.get[col] or 0)
+        got = obs.get
     except Exception:
-        return fallback_df.count()
+        got = fallback_df.agg(*metrics).first().asDict()
+    return {k: int(v or 0) for k, v in got.items()}
 
 
 def _check_wave_budget(wave_budget: int | None) -> None:
@@ -171,16 +182,32 @@ def _empty_frame(spark: SparkSession, schema: StructType | str) -> DataFrame:
 
 
 _SEEN_SCHEMA = "url_hash long, url string, wave int, rank int"
+# one row per wave: the funnel counts, the hosts the wave scheduled, the
+# politeness makespan and the driver-side stage marks
 _LINEAGE_SCHEMA = pa.schema(
     [("wave", pa.int32())]
     + [
         (c, pa.int64())
         for c in (
             "frontier_size", "robots_blocked", "dedup_dropped", "attempted",
-            "fetched", "missed",
+            "fetched", "missed", "n_hosts", "makespan_ms",
         )
     ]
+    + [("t_ms", pa.map_(pa.string(), pa.int64()))]
 )
+
+
+def _read_lineage(catalog: Catalog) -> list[dict]:
+    """The published lineage rows in wave order, read by pyarrow: no
+    Spark job."""
+    rows = [
+        r
+        for s in catalog.snapshots("lineage")
+        for r in pq.read_table(s.path).to_pylist()
+    ]
+    for r in rows:
+        r["t_ms"] = dict(r["t_ms"])
+    return sorted(rows, key=lambda r: r["wave"])
 
 
 class _Background:
@@ -267,8 +294,6 @@ def run_crawl(
     audit: bool = False,
     start_wave: int = 0,
     frontier: DataFrame | None = None,
-    seen: DataFrame | None = None,
-    lineage: list[dict] | None = None,
     cache_pages: bool = True,
     max_pagination: int = 100_000,
 ) -> CrawlResult:
@@ -285,12 +310,12 @@ def run_crawl(
 
     if frontier is None:
         frontier = seeds_to_frontier(seeds, n_salts)
-    # Whether the CALLER handed us a seen set: the wave-0 dedup-skip below
-    # must never fire in that case, even when lineage says seen_count == 0 —
-    # lineage counts are absent for direct callers, so emptiness cannot be
-    # inferred from them (ADVICE r3).
-    caller_seen = seen is not None
-    if seen is None:
+    # the seen set is the catalog's log whenever there is one (a resume,
+    # or a run over a published history); imported history only seeds a
+    # fresh catalog
+    if catalog.exists("seen"):
+        seen = catalog.read_log(spark, "seen")
+    else:
         seen = _empty_frame(spark, _SEEN_SCHEMA)
         if seen_prior is not None:
             seen = seen.unionByName(
@@ -315,31 +340,24 @@ def run_crawl(
                 meta={"wave": start_wave - 1, "kind": "compact"},
             )
             seen = catalog.read_log(spark, "seen")
-    if (seen_prior is not None or caller_seen) and not catalog.exists(
-        "seen"
-    ):
-        # fresh run with imported history (seen_prior=) OR a caller-passed
-        # seen set (seen=) over a fresh catalog: publish it as the log base
-        # so per-wave writes stay O(delta) (the seen set is never
-        # rewritten).  The caller_seen case matters beyond efficiency: the
-        # wave loop re-reads `seen` from the log after every wave, so a
-        # caller-passed set that never reached the log would silently stop
-        # deduping from wave 1 on (found building recrawl_delta, round 5 —
-        # the resume path always has a catalog base, which masked it).
+    if seen_prior is not None and not catalog.exists("seen"):
+        # fresh run with imported history: publish it as the log base so
+        # per-wave writes stay O(delta) (the seen set is never rewritten).
+        # This matters beyond efficiency: the wave loop re-reads `seen`
+        # from the log after every wave, so imported history that never
+        # reached the log would silently stop deduping from wave 1 on
+        # (found building recrawl_delta, round 5).
         catalog.write(
             seen, "seen", meta={"wave": start_wave - 1, "kind": "base"}
         )
         seen = catalog.read_log(spark, "seen")
 
-    lineage = list(lineage or [])
-    # running seen-set size, maintained incrementally from wave metrics so
-    # the bloom gate below costs no extra count() job
-    seen_count = sum(l.get("attempted", 0) for l in lineage)
-    if seen_prior is not None or (lineage == [] and start_wave > 0):
-        # the log's manifest rows: at least its distinct keys (an imported
-        # history may repeat a url), and the gate only picks when the
-        # filter is built — dedup stays exact either way
-        seen_count = max(seen_count, catalog.log_rows("seen"))
+    # running seen-set size: the log's manifest rows, then each wave's
+    # attempted count, so the gates below cost no count() job.  It is at
+    # least the distinct keys (an imported history may repeat a url), so
+    # it is 0 exactly when the seen set is empty; the bloom gate only
+    # picks when the filter is built — dedup stays exact either way
+    seen_count = catalog.log_rows("seen")
 
     # The robots join of every wave (apply_robots, which also carries the
     # crawl delay) re-ran the caller's plan: a 4-task Python scan for a
@@ -448,6 +466,19 @@ def run_crawl(
     # bounds expand_pagination_df's per-(site, category, template, depth,
     # priority) max from above
     _pag_extent = F.least(_probe_last_page, F.lit(max_pagination))
+    # the wave's metrics, observed on its one write action
+    _count = (F.count(F.lit(1)).alias("n"),)
+    _sched_metrics = _count + (
+        F.approx_count_distinct("host").alias("n_hosts"),
+        F.max("scheduled_ms").alias("makespan_ms"),
+    )
+    _hit_metrics = (
+        F.sum(F.when(F.col("text").isNotNull(), 1).otherwise(0)).alias("n"),
+        # raw discovery masses for the pipelined tail's frontier-size
+        # upper bound — they ride the same write action for free
+        F.sum(_links_size).alias("n_links"),
+        F.sum(F.when(_extent_pred, _pag_extent)).alias("n_pag"),
+    )
 
     # ---- pipelined-frontier state ---------------------------------------
     # The wave-k frontier writer runs on a thread UNDER wave k+1's fetch
@@ -496,10 +527,10 @@ def run_crawl(
         # persist wave: its subplan (frontier sort + top-K) is referenced
         # from both dedup union branches and the fetch path — caching runs
         # it once per wave instead of per duplicate subtree
-        wave = wave.observe(obs_wave, F.count(F.lit(1)).alias("n")).persist()
+        wave = wave.observe(obs_wave, *_count).persist()
         # allowed rows carry their host's crawl_delay_ms for the schedule
         allowed, _blocked = apply_robots(wave, robots_b)
-        allowed = allowed.observe(obs_allowed, F.count(F.lit(1)).alias("n"))
+        allowed = allowed.observe(obs_allowed, *_count)
 
         # Below bloom_min_seen the exact backstop alone is cheaper than
         # building + probing blobs (two extra Python stages per wave);
@@ -523,25 +554,20 @@ def run_crawl(
             (wave_budget is not None and wave_budget <= 50_000_000)
             or (frontier_ub is not None and frontier_ub <= 5_000_000)
         )
-        if (
-            seen_count == 0 and wave_no == 0 and seen_prior is None
-            and not caller_seen
-        ):
-            # truly-fresh first wave: the seen set is empty, the anti-join
-            # is the identity — skip its broadcast build + probe stages
+        if seen_count == 0:
+            # the seen set is empty, the anti-join is the identity — skip
+            # its broadcast build + probe stages
             fresh = allowed
         else:
             fresh = dedup_against_seen(
                 allowed, seen, blobs, n_shards, broadcast_hint=bounded_wave
             )
         scheduled = schedule_fetches(fresh, n_salts).observe(
-            obs_sched,
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("host").alias("n_hosts"),
+            obs_sched, *_sched_metrics
         )
 
-        # scheduled feeds several downstream actions this wave (host
-        # metrics, seen delta, fetch join); persist so the robots/bloom/
+        # scheduled feeds several downstream actions this wave (seen
+        # delta, fetch join); persist so the robots/bloom/
         # politeness chain runs once, not once per action
         scheduled = scheduled.persist()
 
@@ -603,16 +629,7 @@ def run_crawl(
         # separate wave_ex.filter(...).count() job it replaces was one of
         # the larger per-wave fixed costs (VERDICT r1 next-steps #9)
         obs_hit = Observation()
-        extracted = extracted.observe(
-            obs_hit,
-            F.sum(
-                F.when(F.col("text").isNotNull(), 1).otherwise(0)
-            ).alias("n"),
-            # raw discovery masses for the pipelined tail's frontier-size
-            # upper bound — they ride the same write action for free
-            F.sum(_links_size).alias("n_links"),
-            F.sum(F.when(_extent_pred, _pag_extent)).alias("n_pag"),
-        )
+        extracted = extracted.observe(obs_hit, *_hit_metrics)
         snap = catalog.write(
             extracted, "extracted", meta={"wave": wave_no, "kind": "delta"}
         )
@@ -622,32 +639,15 @@ def run_crawl(
         # ---- wave metrics -------------------------------------------------
         # counts observed during the write action above (obs.get blocks
         # until that action finished, which it already has)
-        n_wave = _obs_n(obs_wave, wave)
-        n_allowed = _obs_n(obs_allowed, allowed)
-        n_blocked = n_wave - n_allowed
-        n_fresh = _obs_n(obs_sched, scheduled)
+        n_wave = _observed(obs_wave, wave, *_count)["n"]
+        n_allowed = _observed(obs_allowed, allowed, *_count)["n"]
+        sched = _observed(obs_sched, scheduled, *_sched_metrics)
+        n_fresh = sched["n"]
         seen_count += n_fresh
         # obs_hit rides the SAME write plan AQE can rewrite around the
         # CollectMetrics nodes on a degenerate empty wave — fall back like
         # the other three (the recount reads the tiny written snapshot)
-        n_hit = _obs_n(obs_hit, wave_ex.filter(F.col("text").isNotNull()))
-        # lineage keeps the top-K busiest hosts, not every host: at crawl
-        # scale a wave can touch millions of hosts and an unbounded collect
-        # would be a driver OOM; the full per-host distribution stays
-        # queryable from the scheduled/extracted tables.  The collect runs
-        # on a worker THREAD so its job overlaps the seen-checkpoint write
-        # below — the two read independent inputs (persisted scheduled vs
-        # the same), and overlapping independent jobs hides per-job
-        # scheduling latency on a cluster the same way it does here.
-        hosts = _Background(
-            lambda: [
-                r.asDict()
-                for r in politeness_metrics(scheduled)
-                .orderBy(F.desc("n_urls"), "host")
-                .limit(16)
-                .collect()
-            ]
-        )
+        hit = _observed(obs_hit, wave_ex, *_hit_metrics)
         _mark("wave_counts")
         links_df = wave_ex.select(*_links_cols).filter(
             F.col("l").isNotNull()
@@ -810,33 +810,6 @@ def run_crawl(
         nxt = leftover_p.unionByName(disc_p)
 
         _mark("next_frontier_prune_plan")
-        host_metrics = hosts.join()
-        lineage.append(
-            {
-                "wave": wave_no,
-                "frontier_size": n_wave,
-                "robots_blocked": n_blocked,
-                "dedup_dropped": n_wave - n_blocked - n_fresh,
-                "attempted": n_fresh,
-                "fetched": n_hit,
-                "missed": n_fresh - n_hit,
-                "n_hosts": _obs_n(
-                    obs_sched, scheduled.select("host").dropDuplicates(),
-                    "n_hosts",
-                ),
-                "hosts": host_metrics,
-                "t_ms": t_ms,
-            }
-        )
-        # lineage is an append-log too: ONE row per wave (O(delta), not a
-        # growing rewrite), written by pyarrow — no Spark job
-        catalog.write(
-            pa.table(
-                [[lineage[-1][c]] for c in _LINEAGE_SCHEMA.names],
-                schema=_LINEAGE_SCHEMA,
-            ),
-            "lineage", meta={"wave": wave_no, "kind": "delta"},
-        )
 
         # ---- pipelined frontier write ------------------------------------
         # The write (and with it the whole frontier COMPUTE: link explode,
@@ -857,27 +830,35 @@ def run_crawl(
         # decision (the manifest count is still in flight): raw link
         # mentions + deduped pagination mass.  An unbudgeted wave leaves
         # no leftover; a budgeted run's leftover descends from the initial
-        # frontier, whose size is unknown, so budgeted runs carry no bound
-        # and skip its jobs.
-        frontier_ub = None
-        if wave_budget is None:
-            n_links = _obs_n(
-                obs_hit, wave_ex.select(F.explode("links")), "n_links"
-            )
-            n_pag = _obs_n(
-                obs_hit,
-                wave_ex.filter(_extent_pred).select(
-                    F.explode(F.sequence(F.lit(1), _pag_extent))
-                ),
-                "n_pag",
-            )
-            frontier_ub = n_links + n_pag
+        # frontier, whose size is unknown, so budgeted runs carry no bound.
+        frontier_ub = (
+            hit["n_links"] + hit["n_pag"] if wave_budget is None else None
+        )
         frontier = nxt
         # the seen log (and standing blobs) must be current before the NEXT
         # wave's dedup gate / first-crossing blob build read them
         blobs = seen_job.join()
         seen = catalog.read_log(spark, "seen")
         _mark("next_frontier")
+        # lineage is an append-log too: ONE row per wave (O(delta), not a
+        # growing rewrite), written by pyarrow — no Spark job — once t_ms
+        # is complete
+        row = {
+            "wave": wave_no,
+            "frontier_size": n_wave,
+            "robots_blocked": n_wave - n_allowed,
+            "dedup_dropped": n_allowed - n_fresh,
+            "attempted": n_fresh,
+            "fetched": hit["n"],
+            "missed": n_fresh - hit["n"],
+            "n_hosts": sched["n_hosts"],
+            "makespan_ms": sched["makespan_ms"],
+            "t_ms": t_ms,
+        }
+        catalog.write(
+            pa.Table.from_pylist([row], schema=_LINEAGE_SCHEMA),
+            "lineage", meta={"wave": wave_no, "kind": "delta"},
+        )
         if _prev_nxt is not None:
             _prev_nxt.unpersist()
         _prev_nxt = nxt
@@ -906,7 +887,8 @@ def run_crawl(
         else _empty_frame(spark, CRAWL_EXTRACT_SCHEMA)
     )
     return CrawlResult(
-        extracted=extracted_all, seen=seen, lineage=lineage, waves=wave_no
+        extracted=extracted_all, seen=seen,
+        lineage=_read_lineage(catalog), waves=wave_no,
     )
 
 
@@ -931,7 +913,14 @@ def resume_crawl(
     resume would re-publish the same rows and the append-log readers would
     double-count them.  ``_resume_point`` walks the manifests (driver-side,
     no Spark job) for the latest complete wave; everything at or after it
-    is pruned before the replay starts."""
+    is pruned before the replay starts.
+
+    The replay reads its seen set from the catalog's log and returns the
+    catalog's lineage rows, like any crawl; only the restart wave and its
+    frontier are handed in.  A recrawl invalidation is applied by the run
+    that started the catalog (its seen base or compact snapshot holds it),
+    so a resume from a frontier drops ``recrawl``: applied again, it would
+    delete the keys the crawl has since re-fetched."""
     _check_wave_budget(kw.get("wave_budget"))
     start_wave = _resume_point(catalog)
     for t in ("extracted", "seen", "lineage", "blobs"):
@@ -953,27 +942,10 @@ def resume_crawl(
         start_wave = int(f_snap.meta.get("wave", 0))
         for t in ("extracted", "seen", "lineage", "blobs"):
             catalog.prune_waves(t, start_wave)
-    frontier = catalog.read(spark, "frontier")
-    seen = (
-        catalog.read_log(spark, "seen")
-        if catalog.exists("seen")
-        else None
-    )
-    lineage = []
-    if catalog.exists("lineage"):
-        # append-log: one row per wave since round 3; dropDuplicates keeps
-        # resume working over catalogs written by the old full-rewrite form
-        lineage = [
-            r.asDict()
-            for r in catalog.read_union(spark, "lineage")
-            .dropDuplicates(["wave"])
-            .orderBy("wave")
-            .collect()
-        ]
+    kw.pop("recrawl", None)
     return run_crawl(
-        spark, pages, seeds, robots, catalog,
-        start_wave=start_wave, frontier=frontier, seen=seen, lineage=lineage,
-        **kw,
+        spark, pages, seeds, robots, catalog, start_wave=start_wave,
+        frontier=catalog.read(spark, "frontier"), **kw,
     )
 
 
@@ -1028,9 +1000,10 @@ def _resume_point(catalog: Catalog) -> int:
     return start
 
 
-def _site_col(host):
+def _site_col(host: Column) -> Column:
+    """``extract.site_of_host`` as a Column: the first of ``SITES`` the
+    lowercased host contains, else "unknown"."""
     c = F.lower(host)
-    expr = F.lit("unknown")
-    for s in ("cimanow", "wecima", "hdw", "akwam", "fasel"):
-        expr = F.when(c.contains(s), F.lit(s)).otherwise(expr)
-    return expr
+    return F.coalesce(
+        *[F.when(c.contains(s), F.lit(s)) for s in SITES], F.lit("unknown")
+    )

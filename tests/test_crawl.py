@@ -6,7 +6,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from no_fasel_scrapers_spark.plans.crawl import resume_crawl, run_crawl
+from no_fasel_scrapers_spark.functions.extract import site_of_host
+from no_fasel_scrapers_spark.plans.crawl import (
+    _site_col,
+    resume_crawl,
+    run_crawl,
+)
 from no_fasel_scrapers_spark.plans.oracle_crawler import crawl_oracle
 from no_fasel_scrapers_spark.sources.catalog import Catalog
 
@@ -101,6 +106,14 @@ class TestCrawlInvariants:
         ).count()
         for l in crawl_result.lineage:
             assert l["attempted"] == l["fetched"] + l["missed"]
+            # one record per wave, as the catalog holds it
+            assert set(l) == {
+                "wave", "frontier_size", "robots_blocked", "dedup_dropped",
+                "attempted", "fetched", "missed", "n_hosts", "makespan_ms",
+                "t_ms",
+            }
+            assert (l["n_hosts"] > 0) == (l["attempted"] > 0)
+            assert "fetch_extract_write" in l["t_ms"]
 
 
 class TestBudgetAndIncremental:
@@ -435,3 +448,19 @@ class TestPipelinedFrontier:
             sizes[len(sizes) // 2:]
         )
         assert late <= 2 * early, (early, late)
+
+
+def test_site_col_matches_site_of_host(spark):
+    """The crawl's Column and the extractor's Python function read one
+    site order: a host naming two sites maps to the same one on both."""
+    hosts = [
+        "fasel.akwam.example", "www.cimanow-wecima.net", "HDW.Akwam.tv",
+        "akwam.example", "example.org", None,
+    ]
+    got = (
+        spark.createDataFrame([(h,) for h in hosts], "host string")
+        .select(_site_col(F.col("host")).alias("site"))
+        .collect()
+    )
+    assert [r["site"] for r in got] == [site_of_host(h) for h in hosts]
+    assert [site_of_host(h) for h in hosts[:3]] == ["fasel", "wecima", "akwam"]

@@ -1,11 +1,12 @@
 """Recrawl / seen-set invalidation cycle (VERDICT r4 #5, registry row
 ``recrawl_delta``) — plus the two run_crawl bugs found while building it:
 
-1. A CALLER-passed ``seen=`` over a fresh catalog was silently dropped
+1. A caller-passed seen set over a fresh catalog was silently dropped
    after wave 0 (the wave loop re-reads seen from the catalog log, and
    only the ``seen_prior=`` path published a base) — waves 1+ re-fetched
-   already-seen pages.  Now any imported seen set is published as the
-   log base (plans/crawl.py).
+   already-seen pages.  Now imported history comes in through
+   ``seen_prior=`` only, which publishes it as the log base
+   (plans/crawl.py); the crawls below import crawl 1's ``seen`` frame.
 2. A wave whose ``scheduled`` set materializes EMPTY (every candidate
    robots-blocked or already seen — exactly what a recrawled page
    re-discovering only a disallowed link produces) tripped a JVM-side
@@ -70,7 +71,7 @@ def test_recrawl_cycle_matches_python_oracle(spark, small_fx, tmp_path):
     cat2 = Catalog(str(tmp_path / "rc2"))
     res2 = run_crawl(
         spark, _mutated_pages_df(fx, spark), seeds2, fx.robots_df(spark),
-        cat2, seen=res1.seen, recrawl=recrawl.select("url"),
+        cat2, seen_prior=res1.seen, recrawl=recrawl.select("url"),
     )
     got = {
         r["url"]: r["text"]
@@ -127,13 +128,16 @@ def test_empty_scheduled_wave_does_not_crash(spark, small_fx, tmp_path):
     cat2 = Catalog(str(tmp_path / "rc4"))
     res2 = run_crawl(
         spark, fx.pages_df(spark), seeds2, fx.robots_df(spark), cat2,
-        seen=res1.seen, recrawl=one.select("url"),
+        seen_prior=res1.seen, recrawl=one.select("url"),
     )
     assert res2.extracted.count() == 1
     assert res2.lineage[0]["attempted"] == 1
-    # terminal wave (if any) recorded 0 attempts and did not crash
+    # terminal wave (if any) recorded 0 attempts and did not crash; its
+    # schedule was empty, so it touched no host and took no time
     for row in res2.lineage[1:]:
         assert row["attempted"] == 0
+        assert row["n_hosts"] == 0
+        assert row["makespan_ms"] == 0
 
 
 def test_crawl_recrawl_param_refetches(spark, fixture, tmp_path):

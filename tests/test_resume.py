@@ -16,6 +16,7 @@ from no_fasel_scrapers_spark.operators.seen_filter import (
 from no_fasel_scrapers_spark.plans import crawl as crawl_mod
 from no_fasel_scrapers_spark.plans.crawl import resume_crawl, run_crawl
 from no_fasel_scrapers_spark.sources.catalog import Catalog
+from no_fasel_scrapers_spark.sources.fixture import Fixture, FixtureConfig
 
 
 def test_resume_equals_uninterrupted(spark, fixture, tmp_path):
@@ -45,6 +46,13 @@ def test_resume_equals_uninterrupted(spark, fixture, tmp_path):
         for r in resumed.extracted.select("url", "wave", "text").collect()
     )
     assert ea == eb
+    # the resumed crawl's lineage is the catalog's, of the same shape as
+    # the uninterrupted one's; only the stage timings differ
+    assert _untimed(resumed.lineage) == _untimed(full.lineage)
+
+
+def _untimed(lineage):
+    return [{k: v for k, v in r.items() if k != "t_ms"} for r in lineage]
 
 
 def test_resume_with_changed_expected_urls_rebuilds_blobs(
@@ -175,8 +183,9 @@ def test_resume_after_midwave_crash_torn_frontier(spark, fixture, tmp_path):
     f = cat.latest("frontier")
     assert int(f.meta["wave"]) == 3
     cat.unpublish("frontier", f.version)  # wave 2's frontier never landed
-    # the torn wave's lineage row is published before its frontier write
-    # starts — simulate the crash landing before it, too
+    # the torn wave's lineage row is published last, at the end of the
+    # wave, while its frontier writer may still run — simulate the crash
+    # landing before it, too
     lin = [
         s for s in cat.snapshots("lineage") if int(s.meta.get("wave", -1)) == 2
     ]
@@ -190,6 +199,23 @@ def test_resume_after_midwave_crash_torn_frontier(spark, fixture, tmp_path):
         if int(s.meta.get("wave", -1)) == 2
     ]
     assert len(w2) == 1
+
+
+def test_resumed_recrawl_keeps_refetched_urls(spark, tmp_path):
+    """An imported-history recrawl stopped after two waves and resumed
+    ends in the uninterrupted run's state.  The invalidation is applied
+    once, by the run that starts the catalog: applied again on resume, it
+    deleted from the seen log the recrawled urls wave 1 had already
+    re-fetched (118 seen rows left of 122)."""
+    fx = Fixture(FixtureConfig().scale(0.4))
+    inputs = (fx.pages_df(spark), fx.seeds_df(spark), fx.robots_df(spark))
+    prior = fx.seen_prior_df(spark)
+    kw = dict(seen_prior=prior, recrawl=prior.select("url"))
+    full = run_crawl(spark, *inputs, Catalog(str(tmp_path / "full")), **kw)
+    cat = Catalog(str(tmp_path / "part"))
+    run_crawl(spark, *inputs, cat, max_waves=2, **kw)
+    resumed = resume_crawl(spark, *inputs, cat, **kw)
+    assert _state(resumed) == _state(full)
 
 
 def test_resume_after_midwave_crash_torn_seen(spark, fixture, tmp_path):
